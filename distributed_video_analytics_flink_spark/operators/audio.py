@@ -377,11 +377,11 @@ def multimodal_audio_source_parity(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.audio_datasource import (
-        register_wavaudio_source,
-    )
     from distributed_video_analytics_flink_spark.sources.audio_files import (
         read_audio_features,
+    )
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     feat_cols = [
@@ -402,7 +402,7 @@ def multimodal_audio_source_parity(spark: SparkSession, sf_dir: str) -> DataFram
             F.substring_index("error", ":", 1).alias("err_class"),
         )
 
-    register_wavaudio_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-audiosrc-")
     try:
         for name, raw in _fixture_clips().items():
@@ -469,8 +469,8 @@ def multimodal_audio_replay_parity(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.audio_datasource import (
-        register_wavaudio_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     feat_cols = [
@@ -492,7 +492,7 @@ def multimodal_audio_replay_parity(spark: SparkSession, sf_dir: str) -> DataFram
             ),
         )
 
-    register_wavaudio_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-audioreplay-")
     try:
         data_dir = os.path.join(root, "clips")

@@ -1599,7 +1599,14 @@ def text_kn_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pinned type aggregate (a bounded action on the checkpointed
     frame — the materialization it triggers happens anyway) and hints
     the broadcast only under _KN_BCAST_MAX_TYPES; past the gate the
-    join degrades to a shuffle join instead of OOMing the driver."""
+    join degrades to a shuffle join instead of OOMing the driver.
+
+    Snapshot semantics: ``n_types = bi.count()`` runs when the DataFrame
+    is BUILT, and the KN denominator B is inlined as that literal. So
+    re-executing the returned plan over a changed ``documents`` table
+    keeps the old B (and the type table that count checkpointed): the
+    scores are only right for the snapshot the query was built on. Call
+    the query again for a new snapshot."""
     docs = load_table(spark, sf_dir, "documents")
     arr = docs.select("doc_id", F.split("text", " ").alias("t"))
     # sequence(2, 1) DESCENDS in Spark (DuckDB's generate_series is

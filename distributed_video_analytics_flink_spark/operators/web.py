@@ -108,17 +108,17 @@ def corpus_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the projection drops ``body`` before any exchange, so page bytes
     never move between executors (they do cross the one Python->JVM
     Arrow hop — the Python Data Source API doesn't push projection into
-    the reader; see sources/warc_datasource.py for the honest
+    the reader; see sources/datasources.py for the honest
     accounting)."""
     import os
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-warc-")
     try:
         seg_dir = os.path.join(root, "segments")
@@ -178,11 +178,11 @@ def corpus_warc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-warctext-")
     try:
         seg_dir = os.path.join(root, "segments")
@@ -389,7 +389,7 @@ def corpus_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no explode), every regex/aggregate is JVM-side Catalyst, and the
     operator adds zero shuffles and zero Python BEYOND the WARC reader
     itself (a Python Data Source without projection pushdown — the
-    honest accounting in sources/warc_datasource.py; pages cross the
+    honest accounting in sources/datasources.py; pages cross the
     Arrow hop once, then never again). The classifier's two thresholds
     are the deterministic core of the public algorithms; the
     stopword-density leg jusText adds is language-dependent and belongs
@@ -400,11 +400,11 @@ def corpus_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-htmlx-")
     try:
         seg_dir = os.path.join(root, "segments")
@@ -561,11 +561,11 @@ def _url_fixture_frame(spark: SparkSession):
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-urls-")
     try:
         seg_dir = os.path.join(root, "segments")
@@ -1003,11 +1003,11 @@ def corpus_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-webpipe-")
     try:
         seg_dir = os.path.join(root, "segments")
@@ -1047,7 +1047,7 @@ def corpus_web_pipeline_stream_parity(
     micro-batch drains, so the URL-duplicate pair and the shared cookie
     banner genuinely SPAN micro-batches (the source's append-only
     directory contract, exactly how a crawl feeds it; deliberately not a
-    maxFilesPerTrigger knob — see FrameStreamReader.latestOffset). The
+    maxFilesPerTrigger knob — see FileStreamReader.latestOffset). The
     per-record head runs in-stream
     (streaming/corpus.py::stream_web_pipeline — the shared
     web_pipeline_extracted_pages projection), micro-batches append to
@@ -1071,15 +1071,15 @@ def corpus_web_pipeline_stream_parity(
     import shutil
     import tempfile
 
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
     from distributed_video_analytics_flink_spark.streaming.corpus import (
         stream_web_pipeline,
         web_pipeline_accounting,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="dvafs-webpipe-stream-")
     try:
         seg_dir = os.path.join(root, "segments")

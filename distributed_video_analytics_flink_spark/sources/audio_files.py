@@ -49,7 +49,7 @@ def audio_feature_row(path: str, raw: bytes) -> dict:
     dispatch, REAL decode for PCM-16 WAV, honest stubs for compressed
     codecs, error rows for everything else. The single implementation
     shared by the binaryFile scan below and the ``wavaudio`` Data Source
-    (sources/audio_datasource.py), so the two ingest paths cannot drift
+    (sources/datasources.py), so the two ingest paths cannot drift
     on which clips decode, stub, or error."""
     import os
 

@@ -346,7 +346,8 @@ def decode_gif_permissive(
     tail ends the stream after the good prefix — a bad file never kills
     the task. ``decode_gif`` itself stays strict for tests. Returns
     ``(None, frames)`` matching the (header, frames) decoder signature
-    of decode_y4m/decode_avi so frame_datasource can call it directly."""
+    of decode_y4m/decode_avi so sources/datasources.py can call it
+    directly."""
     try:
         frames = decode_gif(data, max_frames=max_frames)
     except GifError:

@@ -91,6 +91,51 @@ _STATE_BUCKETS = 16
 _PAIR_GRID = 4
 assert _PAIR_GRID * _PAIR_GRID == _STATE_BUCKETS
 
+# The pair state's on-disk layout, stamped into <state_dir>/_layout.json
+# on the first write. State bucketed under another layout reads back
+# under the wrong pruning and silently misses pairs (a pre-r18 state dir
+# bucketed pairs on doc_a alone, so a pair whose only batch endpoint is
+# doc_b sits outside the candidate buckets). A missing or different
+# stamp on non-empty state is therefore an error, never a quiet re-read:
+# re-keying means rebuilding the state dir.
+_PAIR_STATE_LAYOUT = {
+    "pair_grid": _PAIR_GRID,
+    "state_buckets": _STATE_BUCKETS,
+    "pair_bucket": "pmod(doc_a, pair_grid) * pair_grid + pmod(doc_b, pair_grid)",
+    "sig_bucket": "pmod(doc_id, state_buckets)",
+}
+
+
+def _check_pair_state_layout(state_dir: str) -> None:
+    """Stamp fresh state with _PAIR_STATE_LAYOUT; raise ValueError when
+    non-empty state carries no stamp or a different one."""
+    import json
+    import os
+
+    stamp = os.path.join(state_dir, "_layout.json")
+    if os.path.exists(stamp):
+        with open(stamp) as fh:
+            found = json.load(fh)
+        if found != _PAIR_STATE_LAYOUT:
+            raise ValueError(
+                f"pair state {state_dir!r} was written under layout {found}, "
+                f"but this engine reads {_PAIR_STATE_LAYOUT}: rebuild the "
+                "state directory"
+            )
+        return
+    if any(os.path.exists(os.path.join(state_dir, d)) for d in ("sigs", "pairs")):
+        raise ValueError(
+            f"pair state {state_dir!r} has no _layout.json stamp, so its "
+            "bucket layout is unknown (state written before the stamp "
+            "existed): rebuild the state directory"
+        )
+    os.makedirs(state_dir, exist_ok=True)
+    tmp = f"{stamp}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(_PAIR_STATE_LAYOUT, fh)
+    os.replace(tmp, stamp)  # a crash never leaves a torn stamp
+
+
 # pairs/ state schema, passed explicitly on read: skips the per-batch
 # footer/schema inference AND guarantees a pruned-away bucket's files
 # are never opened (pinned by the poisoned-bucket test).
@@ -130,7 +175,8 @@ def maintain_incremental_pairs(
     dedup_incremental_pairs (VERDICT r14 #7). State under ``state_dir``:
     ``sigs/bucket=N/`` (doc_id + the 16 MinHash columns, bucketed by
     ``pmod(doc_id, 16)``) and ``pairs/bucket=N/`` (doc_a, doc_b,
-    bucketed by ``pmod(doc_a, 16)``). Per micro-batch (the crawl
+    bucketed on both endpoints by the _PAIR_GRID grid), plus the
+    ``_layout.json`` stamp of those constants. Per micro-batch (the crawl
     delta): the batch's latest text per doc_id re-signs, every at-rest
     pair with a re-emitted endpoint is tombstoned (an arriving doc_id
     is added-or-changed; stream deletion does not exist), and the
@@ -172,7 +218,11 @@ def maintain_incremental_pairs(
     retry can only re-derive what the surviving sigs buckets plus the
     re-delivered batch contain. Production closes this with a
     transactional table format (Iceberg/Delta), the same posture the
-    ingest sink above documents."""
+    ingest sink above documents.
+
+    The bucket layout is stamped into ``<state_dir>/_layout.json`` on the
+    first batch; a later batch raises ValueError when non-empty state has
+    no stamp or a different one (see _PAIR_STATE_LAYOUT)."""
     import os
     import shutil
 
@@ -190,6 +240,7 @@ def maintain_incremental_pairs(
         minhash_signature_df,
     )
 
+    _check_pair_state_layout(state_dir)
     spark = batch_df.sparkSession
     sigs_path = f"{state_dir}/sigs"
     pairs_path = f"{state_dir}/pairs"

@@ -360,8 +360,8 @@ def test_apng_python_datasource(spark, tmp_path):
     still PNG, which is not an animation — contributes zero rows, not a
     task failure."""
     from distributed_video_analytics_flink_spark.functions.png import encode_png_bgr
-    from distributed_video_analytics_flink_spark.sources.apng_datasource import (
-        register_apng_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     # block 25x25 (=625 px) clears the contour area>300 filter
@@ -375,7 +375,7 @@ def test_apng_python_datasource(spark, tmp_path):
     (tmp_path / "junk.apng").write_bytes(b"\x89PNG\r\n\x1a\n\x00bad")
     (tmp_path / "still.apng").write_bytes(encode_png_bgr(frames[0]))
 
-    register_apng_source(spark)
+    register_sources(spark)
     df = spark.read.format("apng").load(str(tmp_path))
     assert df.rdd.getNumPartitions() == 4  # one per file
     rows = df.collect()
@@ -393,17 +393,17 @@ def test_apng_python_datasource(spark, tmp_path):
 
 def test_apng_stream_source_matches_batch(spark, tmp_path):
     """spark.readStream.format('apng') over a directory replays the same
-    wire rows as the batch reader (FrameStreamReader machinery shared
+    wire rows as the batch reader (FileStreamReader machinery shared
     with y4m/avi/gif)."""
-    from distributed_video_analytics_flink_spark.sources.apng_datasource import (
-        register_apng_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     frames = _moving_square(3)
     data_dir = tmp_path / "in"
     data_dir.mkdir()
     (data_dir / "camA.apng").write_bytes(encode_apng(frames, delta=True))
-    register_apng_source(spark)
+    register_sources(spark)
 
     q = (
         spark.readStream.format("apng")

@@ -184,11 +184,11 @@ def test_wavaudio_datasource_batch_matches_binaryfile_path(spark, tmp_path):
     """format('wavaudio') and the binaryFile scan must emit identical
     feature rows for the same .wav files (one shared audio_feature_row) —
     including the PERMISSIVE error row for a corrupt clip."""
-    from distributed_video_analytics_flink_spark.sources.audio_datasource import (
-        register_wavaudio_source,
-    )
     from distributed_video_analytics_flink_spark.sources.audio_files import (
         read_audio_features,
+    )
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     (tmp_path / "a440.wav").write_bytes(encode_wav(_sine(), 8000))
@@ -199,7 +199,7 @@ def test_wavaudio_datasource_batch_matches_binaryfile_path(spark, tmp_path):
     # drop the mp3 the binaryFile path reports)
     (tmp_path / "song.mp3").write_bytes(b"ID3\x03\x00" + b"\x00" * 64)
 
-    register_wavaudio_source(spark)
+    register_sources(spark)
     ds_rows = sorted(
         tuple(r) for r in spark.read.format("wavaudio").load(str(tmp_path)).collect()
     )
@@ -217,11 +217,11 @@ def test_wavaudio_datasource_streaming_append(spark, tmp_path):
     """spark.readStream.format('wavaudio'): an empty directory is a legal
     stream start; clips appended later arrive as feature rows in later
     micro-batches, byte-identical to the batch reader's rows."""
-    from distributed_video_analytics_flink_spark.sources.audio_datasource import (
-        register_wavaudio_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_wavaudio_source(spark)
+    register_sources(spark)
     data_dir = tmp_path / "clips"
     data_dir.mkdir()
     (data_dir / "c0.wav").write_bytes(encode_wav(_sine(), 8000))
@@ -278,8 +278,8 @@ def test_audio_stream_through_results_sink_equals_batch(spark, tmp_path):
     audio modality (driver twin: multimodal_audio_replay_parity)."""
     import numpy as np
 
-    from distributed_video_analytics_flink_spark.sources.audio_datasource import (
-        register_wavaudio_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
     from distributed_video_analytics_flink_spark.sources.wav import encode_wav
 
@@ -293,7 +293,7 @@ def test_audio_stream_through_results_sink_equals_batch(spark, tmp_path):
     (data_dir / "bad.wav").write_bytes(b"RIFFgarbage")
     (data_dir / "m.mp3").write_bytes(b"ID3\x03\x00" + b"\x00" * 16)
 
-    register_wavaudio_source(spark)
+    register_sources(spark)
 
     def _norm(df):
         from pyspark.sql import functions as F

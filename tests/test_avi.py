@@ -145,8 +145,8 @@ def test_avi_python_datasource(spark, tmp_path):
     """Spark 4 Python Data Source: spark.read.format('avi') yields the
     same wire-format frames as read_video_files (one partition per file)
     and feeds the motion pipeline unchanged."""
-    from distributed_video_analytics_flink_spark.sources.avi_datasource import (
-        register_avi_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     side, h, w = 48, 480, 640
@@ -155,7 +155,7 @@ def test_avi_python_datasource(spark, tmp_path):
     (tmp_path / "cam7.avi").write_bytes(encode_avi(frames))
     (tmp_path / "cam8.avi").write_bytes(encode_avi(frames[:3]))
 
-    register_avi_source(spark)
+    register_sources(spark)
     df = spark.read.format("avi").load(str(tmp_path))
     assert df.rdd.getNumPartitions() == 2  # one per file
     rows = df.collect()
@@ -265,25 +265,6 @@ def test_reordered_strl_still_validates_compression():
     bad[j + 8 + 16 : j + 8 + 20] = b"XVID"
     with pytest.raises(AviError):
         parse_avi_header(bytes(bad))
-
-
-def test_file_partitions_rejects_empty_dir_and_missing_file(tmp_path):
-    """A typo'd .load() path must error at planning time, not yield a
-    silently-empty DataFrame (ADVICE r6): a directory with zero matching
-    files and a nonexistent single-file path both raise."""
-    from distributed_video_analytics_flink_spark.sources.frame_datasource import (
-        file_partitions,
-    )
-
-    with pytest.raises(ValueError, match="no \\*\\.avi files"):
-        file_partitions(str(tmp_path), "avi")
-    with pytest.raises(ValueError, match="does not exist"):
-        file_partitions(str(tmp_path / "nope.avi"), "avi")
-    # a real file still lists as its own single partition
-    p = tmp_path / "cam0.avi"
-    p.write_bytes(encode_avi(_bgr_square_frames(8, 8, [0], 4)))
-    assert [fp.path for fp in file_partitions(str(p), "avi")] == [str(p)]
-    assert [fp.path for fp in file_partitions(str(tmp_path), "avi")] == [str(p)]
 
 
 def test_avih_after_strl_does_not_clobber_strf_dims():

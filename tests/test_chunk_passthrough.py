@@ -153,11 +153,11 @@ def test_corrupt_chunk_skipped_keeps_state(spark, tmp_path):
 def test_videochunks_batch_source_matches_binaryfile_reader(spark, corpus):
     """format('videochunks') emits byte-identical rows to read_video_chunks
     on the same files (both ride iter_chunk_rows)."""
-    from distributed_video_analytics_flink_spark.sources.chunk_datasource import (
-        register_videochunks_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_videochunks_source(spark)
+    register_sources(spark)
     a = spark.read.format("videochunks").load(corpus)
     b = read_video_chunks(spark, corpus, glob="*.{avi,mp4}")
 
@@ -176,14 +176,14 @@ def test_stream_chunk_passthrough_matches_batch(spark, corpus, tmp_path):
     chunk schema."""
     import pyspark.sql.functions as F
 
-    from distributed_video_analytics_flink_spark.sources.chunk_datasource import (
-        register_videochunks_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
     from distributed_video_analytics_flink_spark.streaming.motion import (
         detect_motion_stream,
     )
 
-    register_videochunks_source(spark)
+    register_sources(spark)
     stream = spark.readStream.format("videochunks").load(corpus)
     out_dir = tmp_path / "out"
     q = (

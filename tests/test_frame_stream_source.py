@@ -1,4 +1,4 @@
-"""FrameStreamReader: spark.readStream over a growing directory of video
+"""FileStreamReader: spark.readStream over a growing directory of video
 files — the Structured-Streaming leg of the per-file Data Sources (the
 engine's file-replay analog of the reference's continuous Kafka frame
 ingest). Pins:
@@ -19,8 +19,8 @@ from __future__ import annotations
 import numpy as np
 
 from distributed_video_analytics_flink_spark.sources.avi import encode_avi
-from distributed_video_analytics_flink_spark.sources.avi_datasource import (
-    register_avi_source,
+from distributed_video_analytics_flink_spark.sources.datasources import (
+    register_sources,
 )
 from tests.test_avi import _bgr_square_frames
 
@@ -52,7 +52,7 @@ def _run_available_now(spark, src_dir, ckpt, out):
 
 
 def test_stream_resumes_from_checkpoint_without_reemission(spark, tmp_path):
-    register_avi_source(spark)
+    register_sources(spark)
     src = tmp_path / "cams"
     src.mkdir()
     ckpt = tmp_path / "ckpt"
@@ -78,7 +78,7 @@ def test_stream_resumes_from_checkpoint_without_reemission(spark, tmp_path):
 
 
 def test_stream_rows_match_batch_reader(spark, tmp_path):
-    register_avi_source(spark)
+    register_sources(spark)
     src = tmp_path / "cams"
     src.mkdir()
     (src / "cama.avi").write_bytes(
@@ -108,7 +108,7 @@ def test_streaming_motion_over_streamed_video_files(spark, tmp_path):
         detect_motion_stream,
     )
 
-    register_avi_source(spark)
+    register_sources(spark)
     src = tmp_path / "cams"
     src.mkdir()
     side, h, w = 48, 480, 640
@@ -144,7 +144,7 @@ def test_streaming_motion_over_streamed_video_files(spark, tmp_path):
 
 
 def test_stream_starts_on_empty_dir(spark, tmp_path):
-    register_avi_source(spark)
+    register_sources(spark)
     src = tmp_path / "cams"
     src.mkdir()
     rows = _run_available_now(spark, src, tmp_path / "ck0", tmp_path / "out0")
@@ -159,12 +159,9 @@ def test_corrupt_file_yields_zero_rows_not_task_failure(spark, tmp_path):
     """r10 review follow-up: one corrupt file in a directory must not
     fail the whole format('y4m'/'avi') scan — the binaryFile path
     tolerates it, so the Data Source paths must too (permissive_header
-    in frame_datasource). The corrupt file contributes zero rows."""
+    in sources/datasources.py). The corrupt file contributes zero rows."""
     from distributed_video_analytics_flink_spark.sources.avi import encode_avi
     from distributed_video_analytics_flink_spark.sources.y4m import encode_y4m
-    from distributed_video_analytics_flink_spark.sources.y4m_datasource import (
-        register_y4m_source,
-    )
     from tests.test_y4m import _square_planes
 
     import numpy as np
@@ -173,13 +170,12 @@ def test_corrupt_file_yields_zero_rows_not_task_failure(spark, tmp_path):
         encode_y4m([_square_planes(48, 64, 0, 16)])
     )
     (tmp_path / "junk.y4m").write_bytes(b"YUV4MPEG2 garbage-no-newline")
-    register_y4m_source(spark)
+    register_sources(spark)
     rows = spark.read.format("y4m").load(str(tmp_path)).collect()
     assert {r["camId"] for r in rows} == {"good"}
 
     f = np.zeros((16, 16, 3), np.uint8)
     (tmp_path / "good.avi").write_bytes(encode_avi([f]))
     (tmp_path / "junk.avi").write_bytes(b"RIFF\x10\x00\x00\x00AVI LIST")
-    register_avi_source(spark)
     rows = spark.read.format("avi").load(str(tmp_path)).collect()
     assert {r["camId"] for r in rows} == {"good"}

@@ -386,8 +386,8 @@ def test_gif_python_datasource(spark, tmp_path):
     same wire-format frames as read_video_files (one partition per file)
     and feeds the motion pipeline unchanged; a corrupt file contributes
     zero rows, not a task failure."""
-    from distributed_video_analytics_flink_spark.sources.gif_datasource import (
-        register_gif_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     frames = _square_bgr_frames()
@@ -397,7 +397,7 @@ def test_gif_python_datasource(spark, tmp_path):
     (tmp_path / "cam8.gif").write_bytes(encode_gif(frames[:3]))
     (tmp_path / "junk.gif").write_bytes(b"GIF89a\x01")
 
-    register_gif_source(spark)
+    register_sources(spark)
     df = spark.read.format("gif").load(str(tmp_path))
     assert df.rdd.getNumPartitions() == 3  # one per file
     rows = df.collect()
@@ -414,17 +414,17 @@ def test_gif_python_datasource(spark, tmp_path):
 
 def test_gif_stream_source_matches_batch(spark, tmp_path):
     """spark.readStream.format('gif') over a directory replays the same
-    wire rows as the batch reader (FrameStreamReader machinery shared
+    wire rows as the batch reader (FileStreamReader machinery shared
     with y4m/avi)."""
-    from distributed_video_analytics_flink_spark.sources.gif_datasource import (
-        register_gif_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     frames = _square_bgr_frames(3)
     data_dir = tmp_path / "in"
     data_dir.mkdir()
     (data_dir / "camA.gif").write_bytes(encode_gif(frames, delta=True))
-    register_gif_source(spark)
+    register_sources(spark)
 
     q = (
         spark.readStream.format("gif")

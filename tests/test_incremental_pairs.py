@@ -355,3 +355,71 @@ def test_emptied_pair_bucket_is_cleared(spark, tmp_path):
     except pyspark.errors.AnalysisException:
         n = 0  # the whole pairs table emptied — also a correct outcome
     assert n == 0
+
+
+def _one_doc_batch(spark):
+    return spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta", "2024-06-01T00:00:00")],
+        "doc_id long, text string, ingest_ts string",
+    )
+
+
+def test_fresh_pair_state_is_layout_stamped(spark, tmp_path):
+    """The first batch on fresh state writes _layout.json carrying the
+    grid and bucket constants; a later batch reads it back and runs."""
+    import json
+
+    from distributed_video_analytics_flink_spark.streaming import (
+        maintain_incremental_pairs,
+    )
+    from distributed_video_analytics_flink_spark.streaming.corpus import (
+        _PAIR_GRID,
+        _STATE_BUCKETS,
+    )
+
+    state = tmp_path / "state"
+    maintain_incremental_pairs(_one_doc_batch(spark), str(state))
+    stamp = json.loads((state / "_layout.json").read_text())
+    assert stamp["pair_grid"] == _PAIR_GRID
+    assert stamp["state_buckets"] == _STATE_BUCKETS
+    maintain_incremental_pairs(_one_doc_batch(spark), str(state))
+
+
+def test_unstamped_pair_state_raises(spark, tmp_path):
+    """State written before the stamp existed (here: a pairs/ dir with no
+    _layout.json) has an unknown bucket layout: reading it under the
+    grid pruning could silently miss pairs, so the batch must raise."""
+    import pytest
+
+    from distributed_video_analytics_flink_spark.streaming import (
+        maintain_incremental_pairs,
+    )
+
+    state = tmp_path / "state"
+    (state / "pairs" / "bucket=1").mkdir(parents=True)
+    with pytest.raises(ValueError, match="no _layout.json stamp"):
+        maintain_incremental_pairs(_one_doc_batch(spark), str(state))
+    assert not (state / "_layout.json").exists()  # no stamp forged over it
+
+
+def test_mismatched_pair_state_stamp_raises(spark, tmp_path):
+    """A stamp from another layout (a different grid) must raise, not be
+    read under this engine's pruning."""
+    import json
+
+    import pytest
+
+    from distributed_video_analytics_flink_spark.streaming import (
+        maintain_incremental_pairs,
+    )
+    from distributed_video_analytics_flink_spark.streaming.corpus import (
+        _PAIR_STATE_LAYOUT,
+    )
+
+    state = tmp_path / "state"
+    (state / "sigs").mkdir(parents=True)
+    (state / "_layout.json").write_text(
+        json.dumps({**_PAIR_STATE_LAYOUT, "pair_grid": 1})
+    )
+    with pytest.raises(ValueError, match="written under layout"):
+        maintain_incremental_pairs(_one_doc_batch(spark), str(state))

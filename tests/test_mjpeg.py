@@ -190,15 +190,15 @@ def test_mjpeg_motion_boxes_identical_to_raw_twin(spark, tmp_path):
 def test_mjpeg_through_avi_python_datasource(spark, tmp_path):
     """spark.read.format('avi') serves MJPEG files too — the codec
     dispatch is inside decode_avi, so the Data Source needs no changes."""
-    from distributed_video_analytics_flink_spark.sources.avi_datasource import (
-        register_avi_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     frames = _bgr_square_frames(480, 640, [0, 96, 192], 48)
     (tmp_path / "camj.avi").write_bytes(
         encode_avi(frames, codec="mjpeg", quality=100)
     )
-    register_avi_source(spark)
+    register_sources(spark)
     df = spark.read.format("avi").load(str(tmp_path))
     out = detect_motion_batch(df).orderBy("ts_us").collect()
     assert [r["detection_count"] for r in out] == [0, 2, 2]

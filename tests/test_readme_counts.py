@@ -1,13 +1,17 @@
 """README's and COVERAGE.md's registry counts must match the live
 registry (no doc drift — r9 VERDICT #4 extended the guard to COVERAGE.md
-after its counts silently went stale)."""
+after its counts silently went stale), and README's Data Source format
+names must match the format table."""
 
+import os
 import re
 
 from distributed_video_analytics_flink_spark.operators import QUERIES, oracle_sql
+from distributed_video_analytics_flink_spark.sources.datasources import FORMATS
 
-README = "/root/repo/README.md"
-COVERAGE = "/root/repo/COVERAGE.md"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+README = os.path.join(_ROOT, "README.md")
+COVERAGE = os.path.join(_ROOT, "COVERAGE.md")
 
 
 def test_readme_query_counts_match_registry():
@@ -45,3 +49,14 @@ def test_no_other_stale_registry_counts():
             assert int(m.group(1)) == len(QUERIES), (
                 f"{path} has a stale count: {m.group(0)}"
             )
+
+
+def test_readme_format_names_match_format_table():
+    """Every ``format("…")`` README names is a registered Data Source
+    format, and every format in the table is named — the next format
+    cannot land undocumented, nor a deleted one linger."""
+    named = set(re.findall(r'format\("([^"]+)"\)', open(README).read()))
+    assert named == set(FORMATS), (
+        f"README names formats {sorted(named)}, the format table in "
+        f"sources/datasources.py has {sorted(FORMATS)}"
+    )

@@ -104,11 +104,11 @@ def test_warc_stream_equals_batch(spark, tmp_path):
     from distributed_video_analytics_flink_spark.operators.web import (
         _fixture_segments,
     )
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     seg_dir = tmp_path / "segs"
     seg_dir.mkdir()
     for name, blob in _fixture_segments().items():

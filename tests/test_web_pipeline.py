@@ -76,15 +76,15 @@ def test_stream_pipeline_equals_batch(spark, tmp_path):
         _pipeline_fixture_segments,
         corpus_web_pipeline,
     )
-    from distributed_video_analytics_flink_spark.sources.warc_datasource import (
-        register_warc_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
     from distributed_video_analytics_flink_spark.streaming import (
         stream_web_pipeline,
         web_pipeline_accounting,
     )
 
-    register_warc_source(spark)
+    register_sources(spark)
     seg_dir = tmp_path / "segments"
     seg_dir.mkdir()
 

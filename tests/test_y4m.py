@@ -182,8 +182,8 @@ def test_y4m_python_datasource(spark, tmp_path):
     """Spark 4 Python Data Source: spark.read.format('y4m') yields the
     same wire-format frames as read_video_files (one partition per file,
     decode on the partition) and feeds the motion pipeline unchanged."""
-    from distributed_video_analytics_flink_spark.sources.y4m_datasource import (
-        register_y4m_source,
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
     )
 
     side, h, w = 48, 480, 640
@@ -191,7 +191,7 @@ def test_y4m_python_datasource(spark, tmp_path):
     (tmp_path / "cam7.y4m").write_bytes(encode_y4m(frames))
     (tmp_path / "cam8.y4m").write_bytes(encode_y4m(frames[:3]))
 
-    register_y4m_source(spark)
+    register_sources(spark)
     df = spark.read.format("y4m").load(str(tmp_path))
     assert df.rdd.getNumPartitions() == 2  # one per file
     rows = df.collect()
