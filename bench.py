@@ -278,10 +278,10 @@ MOTION_CAMS = 32
 
 # This machine's effective CPU capacity swings 2-3x on a multi-minute cadence
 # (host-side contention: identical motion-stream runs measured 3.7 s and
-# 58.4 s in one session — scripts/ab_motion_stream.py, r5 measurement note in
-# SCALE.md). min-of-3 sampled entirely inside one noisy window reports the
-# machine, not the pipeline (that is exactly r4's 67.9 fps motion_stream
-# number). Mitigation: keep timing until either a run beats the reference
+# 58.4 s in one session — the r5 A/B script, now in git history; measurement
+# note in SCALE.md). min-of-3 sampled entirely inside one noisy window
+# reports the machine, not the pipeline (that is exactly r4's 67.9 fps
+# motion_stream number). Mitigation: keep timing until either a run beats the reference
 # envelope with margin (calm window reached — the gate only needs "pipeline
 # can do >=120 fps", more runs just polish the number) or the repeat budget
 # is spent.
@@ -289,7 +289,7 @@ MOTION_CAMS = 32
 # r8 refinement: the escape used to fire on the FIRST run >= target, which
 # made the reported figure a single sample from a wide distribution — that
 # is the whole r6->r7 motion_stream story (365 vs 193 fps; the interleaved
-# A/B in scripts/ab_r8_stream_order.py measured the identical pipeline at
+# r8 A/B, now in git history, measured the identical pipeline at
 # 360-510 fps in both orderings, proving the 193 was one noisy first run,
 # not a regression and not MJPEG-bench aftermath). Now at least
 # MOTION_MIN_RUNS timed runs are taken before the calm-window escape can

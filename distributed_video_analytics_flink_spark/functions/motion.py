@@ -16,11 +16,22 @@ Deviation (documented): contour area is approximated by connected-component
 pixel count (8-connectivity), which equals or exceeds OpenCV's polygon
 contourArea for filled blobs; golden tests pin this implementation's exact
 outputs (tests/test_motion_golden.py).
+
+``fold_motion`` is the per-camera previous-frame fold over this kernel (the
+reference's ``KeyedProcessFunction`` + ``ValueState``,
+VideoProcessor.java:155-205): one copy, run by the batch operator's
+``mapInPandas`` pass and the streaming operator's
+``applyInPandasWithState`` alike.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+
 import numpy as np
+import pandas as pd
+
+from distributed_video_analytics_flink_spark.functions.png import annotate_png
 
 # OpenCV's BGR2GRAY is fixed-point: (b*1868 + g*9617 + r*4899 + 8192) >> 14
 # (weights 0.114/0.587/0.299 scaled by 2^14, round-half-up) — exact integer
@@ -186,3 +197,45 @@ def detect_motion_boxes(
         rows,
         cols,
     )
+
+
+_NAT = -(2**63)  # datetime64[us] NaT as int64
+
+
+def fold_motion(rows: Iterable[tuple], carry: dict, annotate: bool) -> Iterator[tuple]:
+    """K2: fold frames ``(camId, ts_us, rows, cols, pix)``, already in
+    per-camera event-time order, against the previous-frame ``carry``
+    ``{camId: (rows, cols, gray, ts_us)}``, updating it in place. Yields one
+    ``schemas.MOTION_SCHEMA`` row per frame (plus ``png`` when
+    ``annotate``: the annotated image for motion frames, else None).
+
+    Partially-valid records (a PERMISSIVE parse nulled rows/cols/ts but
+    camId survived) must not kill the job: dims default to 0, which fails
+    preprocess_gray's length validation -> 0 boxes, carry still advances
+    (the reference's swallow-and-continue stance,
+    MotionDetector.java:97-103). A frame whose dims differ from the carried
+    one has no previous frame. The carried ts_us (the streaming state's
+    layout) is -1 for a missing timestamp: epoch 0 is a real event time."""
+    for cam, ts, r, c, pix in rows:
+        r = 0 if pd.isna(r) else int(r)
+        c = 0 if pd.isna(c) else int(c)
+        ts_us = None if int(ts) == _NAT else int(ts)
+        gray = preprocess_gray(None if pix is None else bytes(pix), r, c)
+        prev = carry.get(cam)
+        prev_gray = prev[2] if prev is not None and prev[:2] == (r, c) else None
+        boxes = motion_boxes_from_gray(prev_gray, gray, r, c)
+        carry[cam] = (r, c, gray, -1 if ts_us is None else ts_us)
+        row = (
+            cam,
+            ts_us,
+            [{"x": x, "y": y, "w": w, "h": h} for x, y, w, h in boxes],
+            len(boxes),
+        )
+        if annotate:
+            png = (
+                annotate_png(bytes(pix), r, c, boxes)
+                if boxes and pix is not None
+                else None
+            )
+            row += (png,)
+        yield row

@@ -25,14 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from distributed_video_analytics_flink_spark.functions.motion import (
-    motion_boxes_from_gray,
-    preprocess_gray,
-)
-from distributed_video_analytics_flink_spark.functions.png import annotate_png
+from distributed_video_analytics_flink_spark.functions.motion import fold_motion
 from distributed_video_analytics_flink_spark.operators.registry import query
-from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA, MOTION_BOX
+from distributed_video_analytics_flink_spark.schemas import (
+    FRAME_SCHEMA,
+    MOTION_ANNOTATED_SCHEMA,
+    MOTION_SCHEMA,
+)
 from distributed_video_analytics_flink_spark.sources.tables import load_table
+from distributed_video_analytics_flink_spark.sources.video_files import (
+    iter_pixel_rows,
+    prepare_motion_input,
+)
 
 
 @query(
@@ -159,26 +163,14 @@ def fixture_frames() -> list[dict]:
     return out
 
 
-_MOTION_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("camId", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("motion_boxes", T.ArrayType(MOTION_BOX)),
-        T.StructField("detection_count", T.IntegerType()),
-    ]
-)
-_MOTION_ANNOTATED_SCHEMA = T.StructType(
-    _MOTION_OUT_SCHEMA.fields + [T.StructField("png", T.BinaryType())]
-)
-
-
 def detect_motion_batch(frames: DataFrame, annotate: bool = False) -> DataFrame:
     """K2-batch: the per-camera previous-frame fold as a secondary sort —
     ``repartition(camId)`` (the topology's single shuffle, exactly Flink's
     keyBy at VideoProcessor.java:86) + ``sortWithinPartitions(camId, ts)``
     (makes CV8's degenerate sort real — SURVEY.md §7.4.1) + ONE
     ``mapInPandas`` pass that grays each frame once and diffs it against a
-    per-camera carry dict. mapInPandas is invoked once per partition with a
+    per-camera carry dict (functions/motion.py::fold_motion, the fold the
+    streaming operator runs too). mapInPandas is invoked once per partition with a
     batch iterator, and a camera's rows never span partitions, so the carry
     is exact across Arrow batches.
 
@@ -202,20 +194,7 @@ def detect_motion_batch(frames: DataFrame, annotate: bool = False) -> DataFrame:
     undecodable chunk or one whose dims disagree with the per-camera
     expectation emits no row and leaves the previous-frame carry untouched,
     exactly as if the source had skipped it pre-shuffle."""
-    chunked = {"codec", "chunk"}.issubset(set(frames.columns))
-    if chunked:
-        decoded = frames.select(
-            "camId", "timestamp", "src_rows", "src_cols",
-            "rows", "cols", "codec", "chunk",
-        )
-    else:
-        decoded = frames.select(
-            "camId",
-            "timestamp",
-            "rows",
-            "cols",
-            F.unbase64("data").alias("pix"),
-        )
+    decoded, chunked = prepare_motion_input(frames)
     if chunked:
         # EXPLICIT partition count: the compressed exchange is tiny by
         # construction (~40 KB/frame), so AQE's size-based coalesce would
@@ -263,78 +242,17 @@ def detect_motion_batch(frames: DataFrame, annotate: bool = False) -> DataFrame:
             "camId", "timestamp"
         )
 
-    # post-shuffle decode: the single shared implementation
-    # (sources/video_files.py::decode_chunk_to_pixels) — also used by the
-    # streaming fold, so batch and stream skip semantics cannot drift
-    from distributed_video_analytics_flink_spark.sources.video_files import (
-        decode_chunk_to_pixels as _decode_chunk,
-    )
+    schema = MOTION_ANNOTATED_SCHEMA if annotate else MOTION_SCHEMA
 
     def _detect(batches):
-        last: dict[str, tuple[int, int, bytes | None]] = {}
-        expect: dict[str, tuple[int, int]] = {}
+        carry: dict = {}
+        expect: dict = {}
         for pdf in batches:
-            out = []
-            if chunked:
-                source_iter = zip(
-                    pdf["camId"],
-                    pdf["timestamp"].values.astype("datetime64[us]").astype("int64"),
-                    pdf["rows"],
-                    pdf["cols"],
-                    (
-                        # dim normalization (None/NaN -> 0, r9 ADVICE)
-                        # lives inside the shared decoder
-                        _decode_chunk(expect, cam, sr, sc, r, c, codec, ch)
-                        for cam, sr, sc, r, c, codec, ch in zip(
-                            pdf["camId"], pdf["src_rows"], pdf["src_cols"],
-                            pdf["rows"], pdf["cols"], pdf["codec"], pdf["chunk"],
-                        )
-                    ),
-                )
-            else:
-                source_iter = zip(
-                    pdf["camId"],
-                    pdf["timestamp"].values.astype("datetime64[us]").astype("int64"),
-                    pdf["rows"],
-                    pdf["cols"],
-                    pdf["pix"],
-                )
-            for cam, ts, r, c, pix in source_iter:
-                if pix is Ellipsis:
-                    continue  # undecodable/mixed-dims chunk: skip, keep state
-                # Partially-valid records (PERMISSIVE parse nulled rows/cols/
-                # ts but camId survived) must not kill the job: dims default
-                # to 0 -> length validation fails -> 0 boxes, state advances
-                # (the reference's swallow-and-continue stance,
-                # MotionDetector.java:97-103).
-                r = 0 if pd.isna(r) else int(r)
-                c = 0 if pd.isna(c) else int(c)
-                ts_us = None if int(ts) == -(2**63) else int(ts)  # NaT sentinel
-                gray = preprocess_gray(None if pix is None else bytes(pix), r, c)
-                prev = last.get(cam)
-                prev_gray = prev[2] if prev is not None and prev[:2] == (r, c) else None
-                boxes = motion_boxes_from_gray(prev_gray, gray, r, c)
-                last[cam] = (r, c, gray)
-                row = (
-                    cam,
-                    ts_us,
-                    [{"x": x, "y": y, "w": w_, "h": h_} for x, y, w_, h_ in boxes],
-                    len(boxes),
-                )
-                if annotate:
-                    png = (
-                        annotate_png(bytes(pix), r, c, boxes)
-                        if boxes and pix is not None
-                        else None
-                    )
-                    row = row + (png,)
-                out.append(row)
-            cols = ["camId", "ts_us", "motion_boxes", "detection_count"]
-            if annotate:
-                cols.append("png")
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(
+                fold_motion(iter_pixel_rows(pdf, expect), carry, annotate),
+                columns=schema.names,
+            )
 
-    schema = _MOTION_ANNOTATED_SCHEMA if annotate else _MOTION_OUT_SCHEMA
     return parted.mapInPandas(_detect, schema)
 
 

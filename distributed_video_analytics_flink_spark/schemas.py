@@ -49,6 +49,20 @@ MOTION_BOX = T.StructType(
     ]
 )
 
+# One motion row per frame, shared by the batch and streaming operators;
+# ``annotate=True`` adds the annotated PNG (CV6+CV7, MotionDetector.java:63-69).
+MOTION_SCHEMA = T.StructType(
+    [
+        T.StructField("camId", T.StringType()),
+        T.StructField("ts_us", T.LongType()),
+        T.StructField("motion_boxes", T.ArrayType(MOTION_BOX)),
+        T.StructField("detection_count", T.IntegerType()),
+    ]
+)
+MOTION_ANNOTATED_SCHEMA = T.StructType(
+    MOTION_SCHEMA.fields + [T.StructField("png", T.BinaryType())]
+)
+
 # --- ProcessingResult analog (ProcessingResult.java:13-25; Cassandra DDL
 # CassandraService.java:125-145: partition (camera_id, day), clustering
 # frame_timestamp DESC). The engine's at-rest layout is a parquet table

@@ -37,6 +37,7 @@ from distributed_video_analytics_flink_spark.sources.jpeg import (
     decode_jpeg,
     encode_jpeg,
     is_jpeg,
+    jpeg_dims,
 )
 
 AVI_MAGIC_FORM = b"AVI "  # RIFF form type at bytes 8:12
@@ -279,7 +280,8 @@ def encode_avi(
     ``pre_encoded`` (mjpeg only, r18): per-frame JPEG bytes produced
     elsewhere — callers that build several containers from one fixture
     encode each frame once (or off-driver) and pass the samples here;
-    the container assembly itself is pure struct packing."""
+    the container assembly itself is pure struct packing. The count and
+    the first sample's SOF dims are checked against ``frames_bgr``."""
     if not frames_bgr:
         raise AviError("need at least one frame")
     if codec not in ("rawbgr", "mjpeg"):
@@ -341,6 +343,8 @@ def encode_avi(
     if mjpeg:
         if pre_encoded is not None and len(pre_encoded) != len(frames_bgr):
             raise AviError("pre_encoded length must match frames")
+        if pre_encoded is not None and jpeg_dims(pre_encoded[0]) != (h, w):
+            raise AviError("pre_encoded SOF dims must match the first frame's shape")
         jpgs = pre_encoded if pre_encoded is not None else [_jpg(f) for f in frames_bgr]
         movi = _list(b"movi", b"".join(_chunk(b"00dc", j) for j in jpgs))
     else:

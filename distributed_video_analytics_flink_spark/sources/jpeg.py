@@ -79,6 +79,22 @@ def is_jpeg(data: bytes) -> bool:
     return len(data) >= 3 and data[0:2] == b"\xff\xd8" and data[2] == 0xFF
 
 
+def jpeg_dims(data: bytes) -> tuple[int, int] | None:
+    """(height, width) from the first SOF header, without decoding; None
+    when ``data`` is not a JPEG or no SOF precedes the scan."""
+    if not is_jpeg(data):
+        return None
+    pos = 2
+    while pos + 9 <= len(data) and data[pos] == 0xFF:
+        marker = data[pos + 1]
+        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            return struct.unpack_from(">HH", data, pos + 5)
+        if marker == 0xDA:
+            return None
+        pos += 2 + struct.unpack_from(">H", data, pos + 2)[0]
+    return None
+
+
 def _idct2(block: np.ndarray) -> np.ndarray:
     return _A.T @ block @ _A
 

@@ -445,7 +445,10 @@ def encode_mp4_mjpeg(
     sample, so probe_mp4 reports the exact fps). ``samples_per_chunk``
     defaults to 2 so fixtures exercise the multi-chunk stsc/stco walk,
     not just the single-chunk degenerate case."""
-    from distributed_video_analytics_flink_spark.sources.jpeg import encode_jpeg
+    from distributed_video_analytics_flink_spark.sources.jpeg import (
+        encode_jpeg,
+        jpeg_dims,
+    )
 
     if not frames_bgr:
         raise Mp4Error("need at least one frame")
@@ -455,6 +458,8 @@ def encode_mp4_mjpeg(
         # several containers from one fixture encode each frame once
         if len(pre_encoded) != len(frames_bgr):
             raise Mp4Error("pre_encoded length must match frames")
+        if jpeg_dims(pre_encoded[0]) != (h, w):
+            raise Mp4Error("pre_encoded SOF dims must match the first frame's shape")
         samples = list(pre_encoded)
     else:
         samples = [

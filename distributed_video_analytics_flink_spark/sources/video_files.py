@@ -42,6 +42,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
 from distributed_video_analytics_flink_spark.sources.gif import is_gif
@@ -425,8 +426,8 @@ def decode_chunk_to_pixels(
     expect: dict, cam: str, sr: int, sc: int, r: int, c: int, codec: str, chunk
 ):
     """Post-shuffle decode for ONE chunk row — the consumer-side half of
-    the compressed passthrough, shared by the batch motion fold
-    (operators/video.py) and the streaming fold (streaming/motion.py).
+    the compressed passthrough, run by ``iter_pixel_rows`` for the batch
+    and streaming motion operators alike.
     Returns pixel bytes at the target dims, None (null payload ->
     PERMISSIVE empty frame), or Ellipsis meaning SKIP (drop the row, keep
     the previous-frame carry) — the exact stance the source-side decoders
@@ -436,9 +437,7 @@ def decode_chunk_to_pixels(
 
     Dims may arrive as pandas-nullable values (a PERMISSIVE parse nulls
     them, and Arrow hands nullable ints to pandas as NaN floats);
-    normalization to 0 lives HERE — the one shared site — so the batch
-    and streaming folds' skip semantics cannot drift (r10 review: both
-    callers previously carried copy-pasted isna guards)."""
+    normalization to 0 lives HERE, the one shared site."""
     sr = 0 if pd.isna(sr) else int(sr)
     sc = 0 if pd.isna(sc) else int(sc)
     r = 0 if pd.isna(r) else int(r)
@@ -473,6 +472,48 @@ def decode_chunk_to_pixels(
     if img.shape[:2] != (r, c):
         img = cubic_resize(img, r, c)
     return img.tobytes()
+
+
+def prepare_motion_input(frames: DataFrame) -> tuple[DataFrame, bool]:
+    """Project motion input for the keyBy exchange; returns (projection,
+    chunked). Wire frames (FRAME schema) decode base64 JVM-side before the
+    exchange; chunk frames (``read_video_chunks`` / the ``videochunks``
+    source) keep the still-encoded payload across it and decode
+    post-shuffle in ``iter_pixel_rows`` — the compressed passthrough."""
+    if {"codec", "chunk"}.issubset(set(frames.columns)):
+        return (
+            frames.select(
+                "camId", "timestamp", "src_rows", "src_cols",
+                "rows", "cols", "codec", "chunk",
+            ),
+            True,
+        )
+    return (
+        frames.select(
+            "camId", "timestamp", "rows", "cols", F.unbase64("data").alias("pix")
+        ),
+        False,
+    )
+
+
+def iter_pixel_rows(pdf: pd.DataFrame, expect: dict) -> Iterator[tuple]:
+    """Post-shuffle rows of a ``prepare_motion_input`` projection as
+    ``(camId, ts_us, rows, cols, pix)`` — what functions/motion.py::
+    fold_motion consumes. Chunk rows decode via ``decode_chunk_to_pixels``
+    and skipped chunks are DROPPED here, before the fold, so the
+    previous-frame carry never advances past them. ``expect`` holds the
+    per-camera dims across calls that share it."""
+    ts = pdf["timestamp"].values.astype("datetime64[us]").astype("int64")
+    if "chunk" not in pdf.columns:
+        yield from zip(pdf["camId"], ts, pdf["rows"], pdf["cols"], pdf["pix"])
+        return
+    for cam, t, sr, sc, r, c, codec, ch in zip(
+        pdf["camId"], ts, pdf["src_rows"], pdf["src_cols"],
+        pdf["rows"], pdf["cols"], pdf["codec"], pdf["chunk"],
+    ):
+        pix = decode_chunk_to_pixels(expect, cam, sr, sc, r, c, codec, ch)
+        if pix is not Ellipsis:
+            yield cam, t, r, c, pix
 
 
 def read_video_chunks(

@@ -3,57 +3,50 @@
 The reference holds one ``ValueState<VideoFrameData> previousFrame`` per
 camera inside a Flink ``KeyedProcessFunction`` (VideoProcessor.java:155-205)
 and runs the CV chain against it on every arriving frame. The Spark twin is
-``groupBy(camId).applyInPandasWithState``: state = the previous frame's
-blurred gray plane (not raw BGR — a third of the bytes, and gray is computed
-exactly once per frame), each micro-batch's group rows are sorted by
-timestamp before folding (the reference relies on Kafka per-key arrival
-order; Spark micro-batches guarantee no intra-batch order, so CV8's
-degenerate sort becomes real — SURVEY.md §7.4.1/.5).
+``groupBy(camId).applyInPandasWithState`` over the same fold the batch
+operator runs (functions/motion.py::fold_motion, fed by the same input
+projection and pixel-row iterator in sources/video_files.py — a
+micro-batch stream runs the batch job's operator code, as in Drizzle).
+State = the previous frame's blurred gray plane (not raw BGR — a third of
+the bytes, and gray is computed exactly once per frame). Each
+micro-batch's group rows are sorted by timestamp before folding (the
+reference relies on Kafka per-key arrival order; Spark micro-batches
+guarantee no intra-batch order, so CV8's degenerate sort becomes real —
+SURVEY.md §7.4.1/.5).
 
 Semantics match the batch operator (operators/video.py::detect_motion_batch)
 exactly on any frame sequence — pinned by the batch/streaming equivalence
-test (tests/test_streaming_motion.py), which is the property SURVEY.md §5.4
-calls out because Flink folds record-at-a-time while Spark folds
-batch-of-rows-at-a-time.
+tests (tests/test_streaming.py, tests/test_chunk_passthrough.py), the
+property SURVEY.md §5.4 calls out because Flink folds record-at-a-time
+while Spark folds batch-of-rows-at-a-time. One scope differs: chunk
+input's per-camera expected dims live per group per micro-batch here, per
+partition in batch — exact whenever the container declares dims (always,
+for MJPEG-AVI).
 
 Watermarking: the reference explicitly disables it
 (``WatermarkStrategy.noWatermarks()``, VideoProcessor.java:74-78) so state
-never expires. The faithful default here is ``NoTimeout``; pass
-``state_ttl_ms`` to opt into processing-time state expiry (the deliberate
-semantic improvement flagged in SURVEY.md §7.4.2 — bounded state at
-100 TB / million-camera scale).
+never expires; so does this operator (``NoTimeout``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
-from distributed_video_analytics_flink_spark.functions.motion import (
-    motion_boxes_from_gray,
-    preprocess_gray,
+from distributed_video_analytics_flink_spark.functions.motion import fold_motion
+from distributed_video_analytics_flink_spark.schemas import (
+    MOTION_ANNOTATED_SCHEMA,
+    MOTION_SCHEMA,
 )
-from distributed_video_analytics_flink_spark.functions.png import annotate_png
-from distributed_video_analytics_flink_spark.schemas import MOTION_BOX
-
-MOTION_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("camId", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("motion_boxes", T.ArrayType(MOTION_BOX)),
-        T.StructField("detection_count", T.IntegerType()),
-    ]
-)
-MOTION_STREAM_ANNOTATED_SCHEMA = T.StructType(
-    MOTION_STREAM_SCHEMA.fields + [T.StructField("png", T.BinaryType())]
+from distributed_video_analytics_flink_spark.sources.video_files import (
+    iter_pixel_rows,
+    prepare_motion_input,
 )
 
-# State: previous frame's dims + blurred gray plane + event-time micros.
+# State: previous frame's dims + blurred gray plane + event-time micros
+# (fold_motion's carry value; checkpoints written with this layout resume).
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("rows", T.IntegerType()),
@@ -64,248 +57,27 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _fold_batch(
-    cam: str,
-    batch: pd.DataFrame,
-    prev: tuple | None,
-    annotate: bool = False,
-) -> tuple[list, tuple]:
-    """Fold one micro-batch's frames for one camera against the carried
-    previous-frame state. Returns (output rows, new state tuple). Shared by
-    both stateful APIs (applyInPandasWithState and the Spark 4
-    transformWithStateInPandas twin) so their semantics cannot drift."""
-    # CV8 made real: fold in event-time order within the micro-batch.
-    batch = batch.sort_values("timestamp", kind="stable")
-    if prev is not None:
-        prev_r, prev_c, prev_gray, prev_ts = prev
-    else:
-        prev_r = prev_c = -1
-        prev_gray, prev_ts = None, -1
-
-    out = []
-    for ts, r, c, data in zip(
-        batch["timestamp"].values.astype("datetime64[us]").astype("int64"),
-        batch["rows"],
-        batch["cols"],
-        batch["pix"],
-    ):
-        # Partially-valid records (PERMISSIVE parse nulls rows/cols/ts but
-        # camId survived) must not kill the query: dims default to 0, which
-        # fails preprocess_gray's length validation -> 0 boxes, state still
-        # advances — the reference's swallow-and-continue stance
-        # (MotionDetector.java:97-103).
-        r = 0 if pd.isna(r) else int(r)
-        c = 0 if pd.isna(c) else int(c)
-        ts_us = None if int(ts) == -(2**63) else int(ts)  # NaT sentinel
-        gray = preprocess_gray(None if data is None else bytes(data), r, c)
-        pg = prev_gray if (prev_r, prev_c) == (r, c) else None
-        boxes = motion_boxes_from_gray(pg, gray, r, c)
-        prev_r, prev_c, prev_gray, prev_ts = (
-            r,
-            c,
-            gray,
-            # not `ts_us or -1`: epoch-0 is a legitimate event time and
-            # must not collapse onto the missing-timestamp sentinel
-            -1 if ts_us is None else ts_us,
-        )
-        row = (
-            cam,
-            ts_us,
-            [{"x": x, "y": y, "w": w, "h": h} for x, y, w, h in boxes],
-            len(boxes),
-        )
-        if annotate:
-            png = (
-                annotate_png(bytes(data), r, c, boxes)
-                if boxes and data is not None
-                else None
-            )
-            row = row + (png,)
-        out.append(row)
-    return out, (prev_r, prev_c, prev_gray, prev_ts)
-
-
-def _out_columns(annotate: bool) -> list[str]:
-    cols = ["camId", "ts_us", "motion_boxes", "detection_count"]
-    if annotate:
-        cols.append("png")
-    return cols
-
-
-def _chunks_to_pix(batch: pd.DataFrame) -> pd.DataFrame:
-    """Compressed-passthrough leg of the streaming fold: decode a chunk
-    micro-batch (CHUNK schema: still-encoded payloads that crossed the
-    keyBy shuffle) into the pix rows `_fold_batch` consumes, DROPPING
-    undecodable/mixed-dims chunks exactly like the batch twin — the drop
-    happens before the fold, so the previous-frame carry never advances
-    past a skipped chunk (sources/video_files.py::decode_chunk_to_pixels
-    is the single shared implementation). Rows are decoded in event-time
-    order so the first-good-frame dims rule is order-stable; per-camera
-    dims expectations reset per micro-batch, which is exact whenever the
-    container declares dims (always, for MJPEG-AVI) and documented
-    divergence only for declared-dims-free corrupt streams."""
-    from distributed_video_analytics_flink_spark.sources.video_files import (
-        decode_chunk_to_pixels,
-    )
-
-    batch = batch.sort_values("timestamp", kind="stable")
-    expect: dict = {}
-    keep, pix = [], []
-    for i, (cam, sr, sc, r, c, codec, ch) in enumerate(
-        zip(
-            batch["camId"], batch["src_rows"], batch["src_cols"],
-            batch["rows"], batch["cols"], batch["codec"], batch["chunk"],
-        )
-    ):
-        # dim normalization (None/NaN -> 0) lives inside the shared decoder
-        p = decode_chunk_to_pixels(expect, cam, sr, sc, r, c, codec, ch)
-        if p is Ellipsis:
-            continue  # skip: no row, carry untouched
-        keep.append(i)
-        pix.append(p)
-    out = batch.iloc[keep][["camId", "timestamp", "rows", "cols"]].copy()
-    out["pix"] = pix
-    return out
-
-
-def _prepare(frames: DataFrame) -> tuple[DataFrame, bool]:
-    """Project the streaming input for the keyBy shuffle. Wire frames
-    (FRAME schema) decode base64 JVM-side before the exchange; chunk
-    frames (read_video_chunks / the videochunks stream source) keep the
-    still-encoded payload across the exchange and decode post-shuffle in
-    the fold — the r9 compressed-passthrough posture, streaming leg."""
-    if {"codec", "chunk"}.issubset(set(frames.columns)):
-        return (
-            frames.select(
-                "camId", "timestamp", "src_rows", "src_cols",
-                "rows", "cols", "codec", "chunk",
-            ),
-            True,
-        )
-    return (
-        frames.select(
-            "camId", "timestamp", "rows", "cols", F.unbase64("data").alias("pix")
-        ),
-        False,
-    )
-
-
-def _fold_group(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    annotate: bool = False,
-    chunked: bool = False,
-) -> Iterator[pd.DataFrame]:
-    cam = key[0]
-    rows_acc: list[pd.DataFrame] = [pdf for pdf in pdfs]
-    if state.hasTimedOut:
-        state.remove()
-        return
-    batch = pd.concat(rows_acc, ignore_index=True)
-    if chunked:
-        batch = _chunks_to_pix(batch)
-    prev = tuple(state.get) if state.exists else None
-    out, new_state = _fold_batch(cam, batch, prev, annotate=annotate)
-    state.update(new_state)
-    yield pd.DataFrame(out, columns=_out_columns(annotate))
-
-
-def detect_motion_stream(
-    frames: DataFrame,
-    state_ttl_ms: int | None = None,
-    annotate: bool = False,
-) -> DataFrame:
+def detect_motion_stream(frames: DataFrame, annotate: bool = False) -> DataFrame:
     """Keyed stateful motion over an unbounded frame DataFrame (the parsed
-    output of a streaming source). ``state_ttl_ms`` (processing-time millis,
-    e.g. 3_600_000 for an hour) opts into state expiry; default is the
-    reference-faithful never-expire. The single shuffle is the groupBy on
-    camId — Flink's keyBy (VideoProcessor.java:86).
-
-    Gotcha: with a TTL, Spark services timeout timers by running micro-
-    batches continuously even with no input, so ``processAllAvailable()``
-    never quiesces — pace the query with a ``processingTime`` trigger and
-    stop it explicitly (or use the default NoTimeout mode for replay-style
-    workloads)."""
-    decoded, chunked = _prepare(frames)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
+    output of a streaming source: wire frames or ``videochunks``). The
+    single shuffle is the groupBy on camId — Flink's keyBy
+    (VideoProcessor.java:86)."""
+    decoded, _ = prepare_motion_input(frames)
+    schema = MOTION_ANNOTATED_SCHEMA if annotate else MOTION_SCHEMA
 
     def fold(key, pdfs, state):
-        if state_ttl_ms is not None and not state.hasTimedOut:
-            state.setTimeoutDuration(int(state_ttl_ms))
-        yield from _fold_group(key, pdfs, state, annotate=annotate, chunked=chunked)
+        cam = key[0]
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        batch = batch.sort_values("timestamp", kind="stable")
+        carry = {cam: tuple(state.get)} if state.exists else {}
+        out = pd.DataFrame(
+            fold_motion(iter_pixel_rows(batch, {}), carry, annotate),
+            columns=schema.names,
+        )
+        if cam in carry:  # absent only when every chunk was skipped
+            state.update(carry[cam])
+        yield out
 
-    schema = MOTION_STREAM_ANNOTATED_SCHEMA if annotate else MOTION_STREAM_SCHEMA
     return decoded.groupBy("camId").applyInPandasWithState(
-        fold, schema, _STATE_SCHEMA, "append", timeout
-    )
-
-
-def detect_motion_stream_tws(
-    frames: DataFrame,
-    state_ttl_ms: int | None = None,
-    annotate: bool = False,
-) -> DataFrame:
-    """Spark 4-native twin of `detect_motion_stream`, on the
-    `transformWithStateInPandas` StatefulProcessor API (SPARK-46815,
-    "Arbitrary State API v2") instead of `applyInPandasWithState`. Same
-    single camId shuffle, same fold (`_fold_batch` is shared — the two
-    APIs cannot drift), same output schema; equivalence against the batch
-    operator is pinned by the streaming tests.
-
-    What the v2 API buys at scale: typed per-key state handles (the gray
-    plane lives in a named ValueState; additional states — per-camera
-    counters, box histories — compose as further handles instead of one
-    widening tuple), native TTL on the state itself (`ttlDurationMs`
-    replaces the manual ProcessingTimeTimeout dance and is enforced by
-    the store, not the fold), and first-class timers for future
-    session-gap logic. Requires the RocksDB state-store provider —
-    which IS the 100 TB posture (state larger than heap).
-
-    State value: (rows, cols, gray, ts_us) — identical to
-    `_STATE_SCHEMA`.
-
-    Environment note: executing this path needs ``google.protobuf`` (the
-    v2 API's Python<->JVM state wire protocol). This container ships
-    without it, so the full-equivalence test auto-skips and a plan/schema
-    contract test pins the build instead — the applyInPandasWithState
-    path above remains the executed-and-benchmarked default."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    decoded, chunked = _prepare(frames)
-
-    class _MotionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._prev = handle.getValueState(
-                "prevFrame", _STATE_SCHEMA, ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cam = key[0]
-            batch = pd.concat(list(rows), ignore_index=True)
-            if chunked:
-                batch = _chunks_to_pix(batch)
-            got = self._prev.get()
-            out, new_state = _fold_batch(
-                cam, batch, tuple(got) if got is not None else None, annotate=annotate
-            )
-            self._prev.update(new_state)
-            yield pd.DataFrame(out, columns=_out_columns(annotate))
-
-        def close(self) -> None:
-            pass
-
-    schema = MOTION_STREAM_ANNOTATED_SCHEMA if annotate else MOTION_STREAM_SCHEMA
-    return decoded.groupBy("camId").transformWithStateInPandas(
-        statefulProcessor=_MotionProcessor(),
-        outputStructType=schema,
-        outputMode="Append",
-        timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
+        fold, schema, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
     )

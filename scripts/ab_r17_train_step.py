@@ -2,7 +2,7 @@
 """Interleaved A/B: text_classifier_train_step's r16 one-projection score
 (filter-pushdown duplicates the md5 scoring lambda) vs the r17
 hashed-feature-array materialization. Variants alternate within ONE
-session (the bench-noise discipline: scripts/ab_motion_stream.py).
+session (the bench-noise discipline).
 
 Usage: python scripts/ab_r17_train_step.py [rounds] [sf_dir]
 """

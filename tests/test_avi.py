@@ -288,3 +288,19 @@ def test_avih_after_strl_does_not_clobber_strf_dims():
     assert (hdr.width, hdr.height) == (16, 16)  # strf wins
     frames = list(decode_avi(reordered)[1])
     assert len(frames) == 1 and frames[0].shape == (16, 16, 3)
+
+
+def test_pre_encoded_sof_dims_must_match_frames():
+    """``pre_encoded`` samples are checked against the frames' (h, w) via
+    the first sample's SOF header, not only counted."""
+    from distributed_video_analytics_flink_spark.sources.jpeg import encode_jpeg
+
+    frames = _bgr_square_frames(24, 40, [0, 8], 8)
+    good = [encode_jpeg(f) for f in frames]
+    data = encode_avi(frames, codec="mjpeg", pre_encoded=good)
+    assert len(list(decode_avi(data)[1])) == 2
+    wrong = [encode_jpeg(np.zeros((40, 24, 3), np.uint8))] * 2  # transposed
+    with pytest.raises(AviError, match="SOF dims"):
+        encode_avi(frames, codec="mjpeg", pre_encoded=wrong)
+    with pytest.raises(AviError, match="SOF dims"):
+        encode_avi(frames, codec="mjpeg", pre_encoded=[b"not a jpeg"] * 2)

@@ -77,10 +77,11 @@ def test_compact_payload_is_valid_single_json_line():
 def test_median_of_runs_takes_at_least_min_runs_before_calm_escape():
     """r6->r7 the motion_stream figure halved because the calm-window escape
     accepted the FIRST run >= target — one sample from a 2x-wide noise
-    distribution (A/B-measured in scripts/ab_r8_stream_order.py). The escape
-    requires MOTION_MIN_RUNS samples first, and (r12, VERDICT r11 #5) the
-    reported figure is the MEDIAN of the taken runs — robust to one noisy
-    run in either direction, no prose footnote needed."""
+    distribution (A/B-measured by the r8 stream-order script, now in git
+    history). The escape requires MOTION_MIN_RUNS samples first, and (r12,
+    VERDICT r11 #5) the reported figure is the MEDIAN of the taken runs —
+    robust to one noisy run in either direction, no prose footnote
+    needed."""
     calls = []
 
     def run_once():

@@ -115,15 +115,13 @@ def test_passthrough_annotate_twin(spark, corpus):
     assert rows and all(bytes(r["png"])[:8] == b"\x89PNG\r\n\x1a\n" for r in rows)
 
 
-def test_corrupt_chunk_skipped_keeps_state(spark, tmp_path):
-    """PERMISSIVE parity: a mid-stream chunk that passes the cheap
-    container checks but fails JPEG decode post-shuffle is skipped (no
-    row) without resetting the previous-frame carry — the next frame
-    still diffs against the last GOOD frame."""
-    frames = _motion_frames(6)
-    data = bytearray(encode_avi(frames, codec="mjpeg", quality=85))
-    # corrupt frame 3's entropy data: find the 4th JPEG SOI and trash
-    # bytes well past the header so is_jpeg still passes at extraction
+def _write_corrupt_avi(dirpath):
+    """Six-frame MJPEG AVI whose frame 3 passes the cheap container checks
+    but fails JPEG decode post-shuffle."""
+    data = bytearray(encode_avi(_motion_frames(6), codec="mjpeg", quality=85))
+    # corrupt frame 3: find the 4th JPEG SOI and turn its SOF0 marker into
+    # SOF2 (progressive, which the baseline decoder refuses) — past the
+    # SOI, so is_jpeg still passes at extraction
     pos, hits = 0, []
     while True:
         pos = data.find(b"\xff\xd8\xff", pos + 1)
@@ -131,9 +129,16 @@ def test_corrupt_chunk_skipped_keeps_state(spark, tmp_path):
             break
         hits.append(pos)
     target = hits[3]
-    data[target + 600 : target + 640] = b"\x00" * 40
-    p = tmp_path / "bad.avi"
-    p.write_bytes(bytes(data))
+    data[data.index(b"\xff\xc0", target) + 1] = 0xC2
+    (dirpath / "bad.avi").write_bytes(bytes(data))
+
+
+def test_corrupt_chunk_skipped_keeps_state(spark, tmp_path):
+    """PERMISSIVE parity: a mid-stream chunk that passes the cheap
+    container checks but fails JPEG decode post-shuffle is skipped (no
+    row) without resetting the previous-frame carry — the next frame
+    still diffs against the last GOOD frame."""
+    _write_corrupt_avi(tmp_path)
     out = (
         detect_motion_batch(read_video_chunks(spark, str(tmp_path), glob="bad.avi"))
         .orderBy("ts_us")
@@ -215,29 +220,79 @@ def test_stream_chunk_passthrough_matches_batch(spark, corpus, tmp_path):
     assert len(streamed) > 0 and streamed == batch
 
 
+def test_stream_corrupt_chunk_skipped_matches_batch(spark, tmp_path):
+    """Skip semantics are the same on both paths: the corrupt-frame-3 AVI
+    streamed through format('videochunks') -> detect_motion_stream gives
+    exactly detect_motion_batch's rows — frame 3 emits no row and frame 4
+    still diffs against frame 2 (a reset carry would give it no boxes)."""
+    import pyspark.sql.functions as F
+
+    from distributed_video_analytics_flink_spark.sources.datasources import (
+        register_sources,
+    )
+    from distributed_video_analytics_flink_spark.streaming.motion import (
+        detect_motion_stream,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_corrupt_avi(src)
+    register_sources(spark)
+    q = (
+        detect_motion_stream(spark.readStream.format("videochunks").load(str(src)))
+        .withColumn("bj", F.to_json("motion_boxes"))
+        .drop("motion_boxes")
+        .writeStream.format("memory")
+        .queryName("corrupt_chunk_stream")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    cols = ["camId", "ts_us", "detection_count", "bj"]
+    streamed = sorted(
+        tuple(r) for r in spark.sql("SELECT * FROM corrupt_chunk_stream")
+        .select(*cols).collect()
+    )
+    batch = sorted(
+        tuple(r)
+        for r in detect_motion_batch(read_video_chunks(spark, str(src), glob="bad.avi"))
+        .withColumn("bj", F.to_json("motion_boxes"))
+        .select(*cols)
+        .collect()
+    )
+    assert streamed == batch
+    ts = [r[1] for r in streamed]
+    assert len(ts) == 5 and ts[3] - ts[2] == 2 * (ts[1] - ts[0])  # frame 3 gone
+    assert streamed[3][2] > 0  # frame 4 diffed against frame 2's carry
+
+
 def test_stream_prepare_keeps_chunks_compressed(spark, corpus):
     """The streaming projection ships the still-encoded chunk through the
     keyBy exchange: chunk-schema input selects codec/chunk (no unbase64,
     no pixel column) while wire input takes the pix path."""
     from distributed_video_analytics_flink_spark.operators.video import fixture_frames
     from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
-    from distributed_video_analytics_flink_spark.streaming.motion import _prepare
+    from distributed_video_analytics_flink_spark.sources.video_files import (
+        prepare_motion_input,
+    )
 
     chunks = read_video_chunks(spark, corpus, glob="*.{avi,mp4}")
-    proj, chunked = _prepare(chunks)
+    proj, chunked = prepare_motion_input(chunks)
     assert chunked and "chunk" in proj.columns and "pix" not in proj.columns
 
     wire = spark.createDataFrame(fixture_frames(), schema=FRAME_SCHEMA)
-    proj2, chunked2 = _prepare(wire)
+    proj2, chunked2 = prepare_motion_input(wire)
     assert not chunked2 and "pix" in proj2.columns
 
 
 def test_null_dims_chunk_row_does_not_kill_batch(spark):
     """r9 ADVICE: CHUNK_SCHEMA's ints are nullable — a PERMISSIVE parse
     that nulled src_rows/rows must degrade that row (dims default to 0 →
-    no decode / no boxes), never int(NaN)-crash the task. Mirrors the
-    streaming twin's guard (streaming/motion.py:155) so the two paths'
-    skip semantics cannot drift."""
+    no decode / no boxes), never int(NaN)-crash the task. The guard is
+    the one the streaming operator runs too
+    (sources/video_files.py::decode_chunk_to_pixels)."""
     import datetime as _dt
 
     from distributed_video_analytics_flink_spark.sources.video_files import (

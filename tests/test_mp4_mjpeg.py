@@ -137,3 +137,19 @@ def test_mp4_avc1_still_hits_stub_in_frame_source(spark, tmp_path):
     (vids / "camX.mp4").write_bytes(bytes(data) + b"\x00" * 8192)
     rows = read_video_files(spark, str(vids), rows=32, cols=32).collect()
     assert len(rows) >= 1 and all(r["camId"] == "camX" for r in rows)
+
+
+def test_pre_encoded_sof_dims_must_match_frames():
+    """``pre_encoded`` samples are checked against the frames' (h, w) via
+    the first sample's SOF header, not only counted."""
+    from distributed_video_analytics_flink_spark.sources.jpeg import encode_jpeg
+
+    frames = _bgr_square_frames(24, 40, [0, 8], 8)
+    good = [encode_jpeg(f) for f in frames]
+    data = encode_mp4_mjpeg(frames, pre_encoded=good)
+    assert len(list(decode_mp4(data)[1])) == 2
+    wrong = [encode_jpeg(np.zeros((40, 24, 3), np.uint8))] * 2  # transposed
+    with pytest.raises(Mp4Error, match="SOF dims"):
+        encode_mp4_mjpeg(frames, pre_encoded=wrong)
+    with pytest.raises(Mp4Error, match="SOF dims"):
+        encode_mp4_mjpeg(frames, pre_encoded=[b"not a jpeg"] * 2)

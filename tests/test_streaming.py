@@ -658,63 +658,30 @@ def test_upsert_stream_last_write_wins(spark, tmp_path):
     assert one.count() == 1
 
 
-def test_transform_with_state_builds_and_types(spark, tmp_path):
-    """Spark 4 StatefulProcessor twin (transformWithStateInPandas): the
-    plan must BUILD against the v2 API — correct output schema, streaming
-    DataFrame, camId grouping — without executing (execution needs
-    google.protobuf for the state-server wire protocol, absent in this
-    container; see the skip below for the full-equivalence drive)."""
-    from distributed_video_analytics_flink_spark.streaming.motion import (
-        MOTION_STREAM_SCHEMA,
-        detect_motion_stream_tws,
-    )
-
-    data_dir = tmp_path / "frames"
-    data_dir.mkdir()
-    _write_replay_files(str(data_dir))
-    stream = detect_motion_stream_tws(file_frame_stream(spark, str(data_dir)))
-    assert stream.isStreaming
-    assert stream.schema == MOTION_STREAM_SCHEMA
-    plan = stream._jdf.queryExecution().logical().toString()
-    assert "transformWithStateInPySpark" in plan or "TransformWithState" in plan, plan
-
-
-def test_transform_with_state_motion_equivalence(spark, tmp_path):
-    """Spark 4 StatefulProcessor twin (transformWithStateInPandas): same
-    fold, same results as the batch operator — and therefore as the
-    applyInPandasWithState path — over the multi-micro-batch replay.
-    Requires the RocksDB state store (the v2 API's only provider), which
-    is also the 100 TB large-state posture.
-
-    ENV BLOCKER: the v2 API's Python state server speaks protobuf; this
-    container ships no google.protobuf and installs are not permitted
-    (same posture as the Kafka broker — COVERAGE.md records it). The test
-    runs wherever protobuf exists."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server needs protobuf "
-        "(not in container; no installs allowed)",
-    )
-    from distributed_video_analytics_flink_spark.session import ROCKSDB_STATE_STORE
-    from distributed_video_analytics_flink_spark.streaming.motion import (
-        detect_motion_stream_tws,
-    )
-
+def test_stream_annotate_png_equals_batch(spark, tmp_path):
+    """detect_motion_stream(annotate=True) emits the same annotated PNG
+    bytes as detect_motion_batch(annotate=True) on the fixture replay —
+    one per motion frame, None elsewhere."""
     data_dir = tmp_path / "frames"
     data_dir.mkdir()
     _write_replay_files(str(data_dir))
 
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE)
-    try:
-        stream = detect_motion_stream_tws(file_frame_stream(spark, str(data_dir)))
-        got = _collect_stream(spark, stream, "motion_tws", str(tmp_path / "ck"))
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    stream = detect_motion_stream(
+        file_frame_stream(spark, str(data_dir)), annotate=True
+    )
+    got = _collect_stream(spark, stream, "motion_annotated", str(tmp_path / "ck"))
 
     batch_frames = spark.createDataFrame(fixture_frames(), schema=FRAME_SCHEMA)
-    want = detect_motion_batch(batch_frames).collect()
-    assert _key(got) == _key(want)
-    assert len(got) == 40
+    want = detect_motion_batch(batch_frames, annotate=True).collect()
+
+    def pngs(rows):
+        return sorted(
+            (r["camId"], r["ts_us"], None if r["png"] is None else bytes(r["png"]))
+            for r in rows
+        )
+
+    assert pngs(got) == pngs(want)
+    assert sum(p is not None for _, _, p in pngs(got)) == 20  # 5 per camera
 
 
 def test_observed_motion_metrics(spark, tmp_path):
