@@ -65,18 +65,21 @@ def gaussian_blur3(gray: np.ndarray) -> np.ndarray:
 
 def _connected_components_bboxes(mask: np.ndarray) -> list[tuple[int, int, int, int, int]]:
     """8-connected components of a boolean mask -> [(x, y, w, h, area)].
-    Row runs are extracted vectorized (one np.diff over the whole mask);
-    union-find then runs over *runs*, not pixels — the Python-level work is
-    O(runs), which for motion masks is orders of magnitude below O(pixels)."""
-    h, w = mask.shape
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = mask
-    d = np.diff(padded, axis=1)
-    start_rows, start_cols = np.nonzero(d == 1)
-    _, end_cols = np.nonzero(d == -1)  # same row order as starts; end exclusive
-    n = len(start_rows)
-    if n == 0:
+    Row runs are extracted vectorized (one np.diff over the rows that hold
+    foreground: a motion mask is mostly empty rows, a static frame's mask
+    all of them); union-find then runs over *runs*, not pixels — the
+    Python-level work is O(runs), which for motion masks is orders of
+    magnitude below O(pixels)."""
+    fg_rows = np.flatnonzero(mask.any(axis=1))
+    if len(fg_rows) == 0:
         return []
+    padded = np.zeros((len(fg_rows), mask.shape[1] + 2), dtype=np.int8)
+    padded[:, 1:-1] = mask[fg_rows]
+    d = np.diff(padded, axis=1)
+    run_rows, start_cols = np.nonzero(d == 1)
+    _, end_cols = np.nonzero(d == -1)  # same row order as starts; end exclusive
+    start_rows = fg_rows[run_rows]  # back to image rows for the adjacency test
+    n = len(start_rows)
 
     parent: list[int] = list(range(n))
 

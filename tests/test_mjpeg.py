@@ -15,6 +15,8 @@ engine decodes to real pixels (VERDICT r6 #2). Pins:
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -536,3 +538,192 @@ def test_grayscale_scan_is_non_interleaved_regardless_of_declared_factors():
     for sampling in (0x22, 0x21, 0x12):
         got = J.decode_jpeg(enc_gray(sampling))
         assert np.array_equal(base, got), hex(sampling)
+
+
+# ------------------------------------------------- pinned decoder output
+#
+# The roundtrip tests above bound the decoder's error; these pin its exact
+# bytes, so a rewrite of the pixel back-end (dequantize, IDCT, chroma
+# upsample, colour conversion, rounding) must reproduce every sample. The
+# corpus is generated by ``encode_jpeg`` from fixed seeds; the digests are
+# sha256(shape + bytes) of ``decode_jpeg``'s output, truncated to 16 hex
+# digits. The IDCT is float64 matrix algebra, so the digests hold for the
+# numpy/BLAS build in use: re-record them only for a deliberate change of
+# decoder output or encoder bitstream, never to make a rewrite pass.
+
+
+def _digest(out: np.ndarray) -> str:
+    return hashlib.sha256(repr(out.shape).encode() + out.tobytes()).hexdigest()[:16]
+
+
+def _digest_image(h: int, w: int, seed: int, gray: bool = False) -> np.ndarray:
+    """Smooth gradients plus noise: enough texture that the quantization
+    tables and chroma subsampling all shape the decoded samples."""
+    rng = np.random.default_rng(seed)
+    yy, xx = np.mgrid[0:h, 0:w]
+    base = np.dstack([(yy * 7 + xx * 3) % 256, (xx * 5) % 256, (yy * 11) % 256])
+    img = np.clip(base + rng.integers(-40, 41, (h, w, 3)), 0, 255).astype(np.uint8)
+    return img[:, :, 1] if gray else img
+
+
+def _gray_2x2_factors(data: bytes) -> bytes:
+    """Rewrite a grayscale stream's SOF sampling byte 0x11 -> 0x22: a
+    single-component scan is non-interleaved, so the declared factors
+    must not change the decoded samples (T.81 A.2.2)."""
+    out = bytearray(data)
+    sof_at = bytes(out).find(b"\xff\xc0")
+    assert out[sof_at + 11] == 0x11
+    out[sof_at + 11] = 0x22
+    return bytes(out)
+
+
+def _digest_corpus() -> list[tuple[str, bytes]]:
+    sizes = [(37, 53), (8, 24), (48, 64), (33, 9)]
+    cases = []
+    i = 0
+    for sub in ("444", "422", "420"):
+        for tables in ("custom", "annexk", "annexk-nodht"):
+            for quality, restart in ((50, 0), (75, 1), (100, 3)):
+                h, w = sizes[i % len(sizes)]
+                data = encode_jpeg(
+                    _digest_image(h, w, i),
+                    quality=quality,
+                    subsampling=sub,
+                    restart_interval=restart,
+                    tables=tables,
+                )
+                cases.append((f"{sub}-{tables}-q{quality}-r{restart}-{h}x{w}", data))
+                i += 1
+    for tables in ("custom", "annexk", "annexk-nodht"):
+        for quality, restart in ((50, 3), (75, 0), (100, 1)):
+            h, w = sizes[i % len(sizes)]
+            data = encode_jpeg(
+                _digest_image(h, w, i, gray=True),
+                quality=quality,
+                restart_interval=restart,
+                tables=tables,
+            )
+            cases.append((f"gray-{tables}-q{quality}-r{restart}-{h}x{w}", data))
+            if quality == 75:
+                cases.append(
+                    (f"gray22-{tables}-q{quality}-r{restart}-{h}x{w}", _gray_2x2_factors(data))
+                )
+            i += 1
+    # Relabelled sampling factors (h, v per component) on a 4:4:4 stream:
+    # the entropy data no longer matches the layout, but it decodes, and
+    # these are the only cases with luma below the maximum sampling, a
+    # vertical-only ratio, or Cb and Cr at different ratios.
+    data = encode_jpeg(_digest_image(32, 48, 7), quality=75)
+    sof_at = data.find(b"\xff\xc0")
+    for factors in ((0x11, 0x22, 0x11), (0x11, 0x12, 0x21), (0x12, 0x11, 0x11),
+                    (0x21, 0x11, 0x12), (0x11, 0x22, 0x22)):
+        relabelled = bytearray(data)
+        for k, hv in enumerate(factors):
+            relabelled[sof_at + 11 + 3 * k] = hv
+        cases.append(("sampling-" + "-".join(f"{hv:02x}" for hv in factors), bytes(relabelled)))
+    return cases
+
+
+_CORPUS_DIGESTS = {
+    "444-custom-q50-r0-37x53": "78ad7a04052f6aac",
+    "444-custom-q75-r1-8x24": "5543c39a82cbe14e",
+    "444-custom-q100-r3-48x64": "6d50ac9a3523573b",
+    "444-annexk-q50-r0-33x9": "56317437ba743e78",
+    "444-annexk-q75-r1-37x53": "950ad98ca3d9388c",
+    "444-annexk-q100-r3-8x24": "2084390da8b14511",
+    "444-annexk-nodht-q50-r0-48x64": "5a84ea87581fe0f1",
+    "444-annexk-nodht-q75-r1-33x9": "1a6fd56964a2fcbd",
+    "444-annexk-nodht-q100-r3-37x53": "ffd72681871c748f",
+    "422-custom-q50-r0-8x24": "a7de5779ba10fca9",
+    "422-custom-q75-r1-48x64": "b7a5990a331dbfcc",
+    "422-custom-q100-r3-33x9": "a81cd8c765529c16",
+    "422-annexk-q50-r0-37x53": "861908a767d15a4b",
+    "422-annexk-q75-r1-8x24": "de1fc6b1100c5990",
+    "422-annexk-q100-r3-48x64": "a76ccd9deebeeae2",
+    "422-annexk-nodht-q50-r0-33x9": "e23d66541967c6ec",
+    "422-annexk-nodht-q75-r1-37x53": "b137b8741b2bd076",
+    "422-annexk-nodht-q100-r3-8x24": "c48d42932df88baf",
+    "420-custom-q50-r0-48x64": "6bbb7beb54dfd3bd",
+    "420-custom-q75-r1-33x9": "cdcc215cf6b1f4ab",
+    "420-custom-q100-r3-37x53": "4d3b914a13a91c20",
+    "420-annexk-q50-r0-8x24": "c5e97bc94ac2bc36",
+    "420-annexk-q75-r1-48x64": "d3c7b57e54a11cf4",
+    "420-annexk-q100-r3-33x9": "63240d4fa0b585be",
+    "420-annexk-nodht-q50-r0-37x53": "45924789a97330e4",
+    "420-annexk-nodht-q75-r1-8x24": "5a3e70d179fbdacd",
+    "420-annexk-nodht-q100-r3-48x64": "babbf7cc203d8271",
+    "gray-custom-q50-r3-33x9": "39fa90fafeca5941",
+    "gray-custom-q75-r0-37x53": "7e28b9211a1b773d",
+    "gray22-custom-q75-r0-37x53": "7e28b9211a1b773d",
+    "gray-custom-q100-r1-8x24": "120e7d68043ca64a",
+    "gray-annexk-q50-r3-48x64": "2a6f1cc58d5ca55b",
+    "gray-annexk-q75-r0-33x9": "55471edfa1869079",
+    "gray22-annexk-q75-r0-33x9": "55471edfa1869079",
+    "gray-annexk-q100-r1-37x53": "8f1cd13982bff0de",
+    "gray-annexk-nodht-q50-r3-8x24": "bc288b1be0f582f8",
+    "gray-annexk-nodht-q75-r0-48x64": "8b270c744f48b0dd",
+    "gray22-annexk-nodht-q75-r0-48x64": "8b270c744f48b0dd",
+    "gray-annexk-nodht-q100-r1-33x9": "da4bd9d22612a524",
+    "sampling-11-22-11": "84caf3a6fd6e47bb",
+    "sampling-11-12-21": "83e330d151d95479",
+    "sampling-12-11-11": "abfffcec3354a81f",
+    "sampling-21-11-12": "347f0ffc5fe6c741",
+    "sampling-11-22-22": "73c305a6ba1bed64",
+}
+
+
+def test_decoder_output_digests_pinned():
+    got = {name: _digest(decode_jpeg(data)) for name, data in _digest_corpus()}
+    assert got == _CORPUS_DIGESTS
+
+
+def _mutated_streams() -> list[bytes]:
+    """Fixed-seed single-byte mutations, some also truncated, of three
+    base streams (4:4:4 custom tables, 4:2:0 Annex K with restarts, and
+    DHT-less grayscale with restarts)."""
+    bases = [
+        encode_jpeg(_digest_image(16, 16, 100), quality=90),
+        encode_jpeg(
+            _digest_image(24, 40, 101),
+            quality=75,
+            subsampling="420",
+            restart_interval=1,
+            tables="annexk",
+        ),
+        encode_jpeg(
+            _digest_image(17, 23, 102, gray=True),
+            quality=50,
+            restart_interval=3,
+            tables="annexk-nodht",
+        ),
+    ]
+    rng = np.random.default_rng(2024)
+    streams = []
+    for base in bases:
+        for k in range(60):
+            mangled = bytearray(base)
+            mangled[int(rng.integers(2, len(base)))] = int(rng.integers(0, 256))
+            if k % 4 == 3:
+                mangled = mangled[: int(rng.integers(len(base) // 2, len(base)))]
+            streams.append(bytes(mangled))
+    return streams
+
+
+def _outcome(data: bytes) -> str:
+    try:
+        return _digest(decode_jpeg(data))
+    except JpegError:
+        return "JpegError"
+
+
+# (number of streams refused with JpegError, sha256 over all outcomes)
+_MUTATED_OUTCOMES = (74, "a9a5203687583859")
+
+
+def test_mutated_stream_outcomes_pinned():
+    outcomes = [_outcome(s) for s in _mutated_streams()]
+    summary = (
+        outcomes.count("JpegError"),
+        hashlib.sha256("\n".join(outcomes).encode()).hexdigest()[:16],
+    )
+    assert summary == _MUTATED_OUTCOMES

@@ -14,7 +14,7 @@ import base64
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from distributed_video_analytics_flink_spark.functions.motion import (
@@ -118,9 +118,17 @@ def _brute_force_components(mask: np.ndarray) -> list[tuple[int, int, int, int, 
     st.integers(1, 20),
     st.integers(0, 2**32 - 1),
     st.floats(0.05, 0.8),
+    st.integers(0, 2**20 - 1),
 )
-def test_components_match_brute_force(h, w, seed, density):
+@example(20, 20, 3, 0.5, 2**20 - 1)  # every row blanked: no components
+@example(1, 20, 7, 0.5, 0)  # a single row
+@example(3, 12, 11, 0.8, 0b010)  # runs one blank row apart stay apart
+def test_components_match_brute_force(h, w, seed, density, blank_rows):
+    """``blank_rows`` clears row y when bit y is set, so masks also come
+    row-sparse: runs separated by empty rows must not merge, and the
+    run rows must map back to their image rows."""
     mask = np.random.default_rng(seed).random((h, w)) < density
+    mask[[y for y in range(h) if blank_rows >> y & 1]] = False
     fast = sorted(_connected_components_bboxes(mask))
     slow = sorted(_brute_force_components(mask))
     assert fast == slow
