@@ -491,18 +491,25 @@ def resize_frames(frames: DataFrame, out_h: int = 480, out_w: int = 640) -> Data
     """T5: the producer's per-frame resize (cv2.resize INTER_CUBIC to
     640x480, VideoEventCreator.java:75,40-41) as a DataFrame transform —
     pure-numpy separable bicubic (functions/resize.py) in one Arrow-batched
-    pandas UDF; rows/cols columns are rewritten to the target dims."""
+    pandas UDF; rows/cols columns are rewritten to the target dims. ``data``
+    keeps its type: base64 strings (``FRAME_SCHEMA``) in and out, or pixel
+    bytes (``WIRE_FRAME_SCHEMA``, the parsed wire frames) in and out."""
     from distributed_video_analytics_flink_spark.functions.resize import resize_payload
 
-    @F.pandas_udf(T.StringType())
+    binary = isinstance(frames.schema["data"].dataType, T.BinaryType)
+
+    @F.pandas_udf(T.BinaryType() if binary else T.StringType())
     def _resize(data: pd.Series, rows: pd.Series, cols: pd.Series) -> pd.Series:
         out = []
         for d, r, c in zip(data, rows, cols):
             if d is None:
                 out.append(None)
                 continue
-            resized = resize_payload(base64.b64decode(d), int(r), int(c), out_h, out_w)
-            out.append(None if resized is None else base64.b64encode(resized).decode("ascii"))
+            pixels = bytes(d) if binary else base64.b64decode(d)
+            resized = resize_payload(pixels, int(r), int(c), out_h, out_w)
+            if resized is not None and not binary:
+                resized = base64.b64encode(resized).decode("ascii")
+            out.append(resized)
         return pd.Series(out)
 
     return frames.select(

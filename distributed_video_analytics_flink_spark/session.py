@@ -12,7 +12,8 @@ archive changed. Without it every Python task start re-reads ``pyspark.zip``
 16 times (CPython 3.11), about 160-300 ms of CPU per task on a 4-vCPU host;
 with it the per-task invalidation costs about 0.2 ms. The package must be
 importable by the Python workers, as it already must be for every pandas UDF
-the engine ships.
+the engine ships, so ``get_spark`` puts the package root on the workers'
+``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``).
 """
 
 from __future__ import annotations
@@ -28,9 +29,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+# Large-state streaming (the reference declared RocksDB but never enabled
+# it, processor/pom.xml:41-45): set as
+# ``spark.sql.streaming.stateStore.providerClass``, the per-camera state
+# spills to local disk with incremental checkpointing.
 ROCKSDB_STATE_STORE = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def assert_environment(spark: SparkSession) -> None:
@@ -100,7 +107,6 @@ def get_spark(
     app_name: str = "distributed_video_analytics_flink_spark",
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
@@ -133,16 +139,12 @@ def get_spark(
             "spark.python.daemon.module",
             "distributed_video_analytics_flink_spark.worker_daemon",
         )
+        # The workers import the package (the daemon module, every pandas
+        # UDF) whatever the driver's cwd: pyspark appends this to their
+        # PYTHONPATH, after its own pyspark and py4j entries.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    if rocksdb_state:
-        # Large-state streaming (the reference declared RocksDB but never
-        # enabled it, processor/pom.xml:41-45): per-camera frame state at
-        # million-camera scale outgrows the heap-backed store; RocksDB
-        # spills to local disk with incremental checkpointing.
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_STORE
-        )
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):

@@ -43,6 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
 from distributed_video_analytics_flink_spark.sources.gif import is_gif
@@ -476,10 +477,14 @@ def decode_chunk_to_pixels(
 
 def prepare_motion_input(frames: DataFrame) -> tuple[DataFrame, bool]:
     """Project motion input for the keyBy exchange; returns (projection,
-    chunked). Wire frames (FRAME schema) decode base64 JVM-side before the
-    exchange; chunk frames (``read_video_chunks`` / the ``videochunks``
-    source) keep the still-encoded payload across it and decode
-    post-shuffle in ``iter_pixel_rows`` — the compressed passthrough."""
+    chunked). Wire-parsed frames (``schemas.WIRE_FRAME_SCHEMA``, the
+    streaming sources) already carry binary ``data`` and pass it through as
+    ``pix``; the in-engine producers that still emit base64 strings
+    (``FRAME_SCHEMA``: ``read_video_files``, the frame formats,
+    ``fixture_frames``) decode it JVM-side before the exchange. Chunk frames
+    (``read_video_chunks`` / the ``videochunks`` source) keep the
+    still-encoded payload across it and decode post-shuffle in
+    ``iter_pixel_rows`` — the compressed passthrough."""
     if {"codec", "chunk"}.issubset(set(frames.columns)):
         return (
             frames.select(
@@ -488,10 +493,11 @@ def prepare_motion_input(frames: DataFrame) -> tuple[DataFrame, bool]:
             ),
             True,
         )
+    data = F.col("data")
+    if not isinstance(frames.schema["data"].dataType, T.BinaryType):
+        data = F.unbase64(data)
     return (
-        frames.select(
-            "camId", "timestamp", "rows", "cols", F.unbase64("data").alias("pix")
-        ),
+        frames.select("camId", "timestamp", "rows", "cols", data.alias("pix")),
         False,
     )
 

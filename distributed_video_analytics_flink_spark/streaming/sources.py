@@ -11,6 +11,14 @@ No Kafka broker exists in this container, so ``kafka_frame_stream`` is the
 production builder (exercised for plan construction only) and the tested
 paths are the file-replay source (deterministic micro-batches for CI /
 golden tests) and the rate-source synthetic generator (throughput work).
+
+Every wire-frame source parses with ``schemas.WIRE_FRAME_SCHEMA``: ``data``
+is binary, so Spark's JSON parser base64-decodes the payload straight into
+pixel bytes — no JVM String copy of the ~1.2 MB payload and no separate
+``unbase64`` before the keyBy exchange. Only strict base64 decodes; any
+other ``data`` value (illegal characters, missing padding, a number) parses
+to ``data = null`` with the rest of the row kept, which the motion fold
+treats as an undecodable frame (0 boxes, the camera's carry advances).
 """
 
 from __future__ import annotations
@@ -18,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
+from distributed_video_analytics_flink_spark.schemas import WIRE_FRAME_SCHEMA
 
 # Spark's JSON timestamp default truncates to milliseconds; the reference
 # writes ISO-8601 instants (VideoEventCreator.java:31-33). Microsecond
@@ -27,12 +35,17 @@ TS_OPTS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
 
 
 def parse_frames(raw_json: DataFrame, value_col: str = "value") -> DataFrame:
-    """T1+T2: PERMISSIVE ``from_json`` (malformed input -> null row, exactly
-    the reference's swallow-and-filter mapper, VideoProcessor.java:143-153)
-    followed by the null filter (:83-84)."""
+    """T1+T2 for value-column sources (Kafka): PERMISSIVE ``from_json`` with
+    the binary wire schema (malformed input -> null row, exactly the
+    reference's swallow-and-filter mapper, VideoProcessor.java:143-153)
+    followed by the null filter (:83-84). ``data`` comes out as decoded
+    pixel bytes. A line holding a top-level JSON array is dropped (the
+    struct schema does not match it)."""
     return (
         raw_json.select(
-            F.from_json(F.col(value_col).cast("string"), FRAME_SCHEMA, TS_OPTS).alias("f")
+            F.from_json(
+                F.col(value_col).cast("string"), WIRE_FRAME_SCHEMA, TS_OPTS
+            ).alias("f")
         )
         .select("f.*")
         .filter(F.col("camId").isNotNull())
@@ -140,14 +153,21 @@ def file_frame_stream(
 ) -> DataFrame:
     """S4-as-replay: JSON-lines files of wire-format frames consumed as a
     stream, one file per micro-batch by default — the deterministic CI
-    substitute for Kafka micro-batching (FIXTURES.md §4). Schema is imposed,
-    not inferred; malformed lines flow through the same PERMISSIVE parse."""
-    raw = (
-        spark.readStream.schema("value string")
+    substitute for Kafka micro-batching (FIXTURES.md §4). Read with the JSON
+    file source under the imposed binary wire schema (never inferred):
+    Jackson parses the line bytes directly and decodes ``data`` to pixels,
+    PERMISSIVE as in :func:`parse_frames`, then the same camId null filter.
+
+    One difference from :func:`parse_frames`: a line holding a top-level
+    JSON array of frame objects yields one row per element here, while
+    ``from_json`` drops it."""
+    return (
+        spark.readStream.schema(WIRE_FRAME_SCHEMA)
+        .options(**TS_OPTS)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .text(path)
+        .json(path)
+        .filter(F.col("camId").isNotNull())
     )
-    return parse_frames(raw)
 
 
 def rate_frame_stream(
@@ -163,5 +183,5 @@ def rate_frame_stream(
         F.lit(480).alias("rows"),
         F.lit(640).alias("cols"),
         F.lit(16).alias("type"),
-        F.lit(None).cast("string").alias("data"),
+        F.lit(None).cast("binary").alias("data"),
     )

@@ -240,3 +240,42 @@ def test_spark_runs_tasks_in_the_engine_daemon(spark, tmp_path):
 
     got = df.mapInPandas(late_import, "v long").toPandas()
     assert list(got["v"]) == [42, 42]
+
+
+_WORKER_PATH_SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+import pandas as pd
+from distributed_video_analytics_flink_spark.session import get_spark
+
+spark = get_spark(master="local[1]")
+def double(batches):
+    for pdf in batches:
+        yield pd.DataFrame({{"id": pdf["id"] * 2}})
+print(sorted(r.id for r in spark.range(4).mapInPandas(double, "id long").collect()))
+spark.stop()
+"""
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver that found the package through its own ``sys.path``, run
+    from an unrelated cwd with no ``PYTHONPATH``: the workers still start
+    (their daemon module lives in the package) because ``get_spark`` puts
+    the package root on ``spark.executorEnv.PYTHONPATH``."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(worker_daemon.__file__)))
+    script = tmp_path / "job.py"
+    script.write_text(_WORKER_PATH_SCRIPT.format(root=root))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_LOCAL_DIRS=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4, 6]"
