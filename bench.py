@@ -404,10 +404,9 @@ def _force(df) -> int:
 
 
 def bench_motion_fps(spark) -> tuple[float, int]:
-    """Distributed synthetic 640x480 BGR frames through the full batch
-    motion pipeline (lag window + pandas-UDF CV chain); returns (sec, frames)."""
-    import base64
-
+    """Distributed synthetic 640x480 BGR frames (raw ``data`` bytes)
+    through the full batch motion pipeline (the keyBy exchange + the one
+    per-camera ``mapInPandas`` fold); returns (sec, frames)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -435,7 +434,7 @@ def bench_motion_fps(spark) -> tuple[float, int]:
                         480,
                         640,
                         16,
-                        base64.b64encode(frame.tobytes()).decode("ascii"),
+                        frame.tobytes(),
                     )
                 )
             yield pd.DataFrame(

@@ -12,10 +12,14 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # --- VideoFrameData analog (reference VideoFrameData.java:15-35) -----------
-# JSON wire format: ISO-8601 timestamp string, base64 pixel payload.
-# FRAME_SCHEMA is the row shape of the in-engine producers that still emit
-# base64 strings (``fixture_frames``, ``read_video_files``, the frame Data
-# Source formats); ``prepare_motion_input`` unbase64s their ``data``.
+# One frame row shape for every producer and consumer. ``data`` holds the raw
+# interleaved BGR bytes. Base64 exists only on the JSON wire (ISO-8601
+# timestamp string, base64 pixel payload): wire sources parse with this
+# schema, so Spark's JSON parser base64-decodes the payload straight into
+# bytes. Parsed in PERMISSIVE mode => malformed rows become nulls, matching
+# the reference's parse-to-null + filter behavior
+# (VideoProcessor.java:143-153); a payload that is not strict base64 parses
+# to ``data = null`` with the rest of the row kept.
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("camId", T.StringType(), True),
@@ -23,19 +27,8 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("rows", T.IntegerType(), True),
         T.StructField("cols", T.IntegerType(), True),
         T.StructField("type", T.IntegerType(), True),  # OpenCV Mat.type(); 16 = CV_8UC3
-        T.StructField("data", T.StringType(), True),  # base64 raw interleaved BGR bytes
+        T.StructField("data", T.BinaryType(), True),  # raw interleaved BGR bytes
     ]
-)
-
-# The parse schema of every wire-frame source (streaming/sources.py): the
-# same fields with ``data`` binary, so Spark's JSON parser base64-decodes the
-# payload straight into bytes (no JVM String, no separate unbase64). Parsed
-# in PERMISSIVE mode => malformed rows become nulls, matching the
-# reference's parse-to-null + filter behavior (VideoProcessor.java:143-153);
-# a payload that is not strict base64 parses to ``data = null`` with the
-# rest of the row kept.
-WIRE_FRAME_SCHEMA = T.StructType(
-    FRAME_SCHEMA.fields[:-1] + [T.StructField("data", T.BinaryType(), True)]
 )
 
 # Motion box struct emitted by the detector (reference boundingRect list,

@@ -12,8 +12,8 @@ SPARK-44076's Python Data Source API lets the pure-stdlib decoders plug
 into the reader surface itself, so each container is a first-class
 format instead of a binaryFile+mapInPandas recipe. The formats:
 
-- ``y4m``, ``avi``, ``gif``, ``apng``: wire-frame rows (schemas.
-  FRAME_SCHEMA, base64 pixels) that feed ``detect_motion_batch``
+- ``y4m``, ``avi``, ``gif``, ``apng``: frame rows (schemas.
+  FRAME_SCHEMA, raw BGR pixels) that feed ``detect_motion_batch``
   unchanged.
 - ``videochunks``: compressed passthrough for the r9 shuffle posture.
   MJPEG AVI/MP4 files are demuxed by pure offset math on the scan
@@ -59,7 +59,6 @@ strictly more bytes (the raw segment)."""
 
 from __future__ import annotations
 
-import base64
 import datetime as _dt
 import glob as _glob
 import os
@@ -72,7 +71,9 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.types import StructType
 
+from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
 from distributed_video_analytics_flink_spark.sources.apng import (
     decode_apng_permissive,
 )
@@ -93,10 +94,6 @@ from distributed_video_analytics_flink_spark.sources.warc import (
     warc_record_rows,
 )
 from distributed_video_analytics_flink_spark.sources.y4m import Y4MError, decode_y4m
-
-FRAME_DDL_SCHEMA = (
-    "camId string, timestamp timestamp, rows int, cols int, type int, data string"
-)
 
 
 def _read_file(path: str) -> bytes:
@@ -166,7 +163,7 @@ def _warc_rows(path: str) -> Iterator[tuple]:
 
 class Format(NamedTuple):
     exts: tuple[str, ...]  # a directory lists every ``*.{ext}``
-    schema: str  # DDL
+    schema: str | StructType  # DDL, or the shared frame StructType
     rows: Callable[..., Iterator[tuple]]  # (path, **options) -> rows
     options: dict[str, int]  # settable int option -> default
 
@@ -188,10 +185,10 @@ def _frame_format(ext: str, decode: Callable[[bytes, int], tuple]) -> Format:
                 int(bgr.shape[0]),
                 int(bgr.shape[1]),
                 16,  # CV_8UC3
-                base64.b64encode(bgr.tobytes()).decode("ascii"),
+                bgr.tobytes(),
             )
 
-    return Format((ext,), FRAME_DDL_SCHEMA, rows, {"maxframesperfile": 64})
+    return Format((ext,), FRAME_SCHEMA, rows, {"maxframesperfile": 64})
 
 
 FORMATS: dict[str, Format] = {
@@ -325,7 +322,7 @@ class _FileDataSource(DataSource):
     def name(cls) -> str:
         return cls.format_name
 
-    def schema(self) -> str:
+    def schema(self) -> str | StructType:
         return FORMATS[self.format_name].schema
 
     def reader(self, schema) -> FileReader:

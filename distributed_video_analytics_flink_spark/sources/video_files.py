@@ -5,8 +5,10 @@ file or device, read frames, resize to 640x480, pace at ~30 fps).
 Spark shape: ``spark.read.format("binaryFile")`` scans the files (one
 partition per file up to maxPartitionBytes — embarrassingly parallel across
 a 100 TB video corpus), then a ``mapInPandas`` extractor turns each file's
-bytes into wire-format frame rows (FRAME_SCHEMA: camId from the file stem,
-timestamps paced 33 ms apart, base64 BGR payloads).
+bytes into frame rows (FRAME_SCHEMA: camId from the file stem,
+timestamps paced 33 ms apart, raw BGR payloads). One dispatch,
+:func:`decode_frames`, picks the container decoder for this scan and for
+the raw-bgr rows of the compressed-passthrough scan alike.
 
 Decode is REAL for FIVE containers — Y4M (YUV4MPEG2: pure byte-slicing
 header/frame parse + integer-exact YUV->BGR, sources/y4m.py), AVI (RIFF
@@ -34,7 +36,6 @@ and pacing are the production path — swap the stub for a
 
 from __future__ import annotations
 
-import base64
 import hashlib
 import os
 from collections.abc import Iterator
@@ -43,14 +44,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
-from distributed_video_analytics_flink_spark.sources.gif import is_gif
 from distributed_video_analytics_flink_spark.sources.avi import (
     AviError,
     decode_avi,
     is_avi,
+)
+from distributed_video_analytics_flink_spark.sources.gif import (
+    decode_gif_permissive,
+    is_gif,
 )
 from distributed_video_analytics_flink_spark.sources.y4m import (
     Y4M_MAGIC,
@@ -84,26 +87,21 @@ def _decode_frames_stub(
         yield frame
 
 
-def _decode_frame_png(content: bytes, rows: int, cols: int) -> Iterator[np.ndarray]:
+def _decode_png_still(content: bytes) -> Iterator[np.ndarray]:
     """REAL decoder for PNG images (single frame per file): the general
     stdlib decoder (functions/png.py::decode_png — all five scanline
-    filters, gray/RGB/RGBA) + the engine's bicubic resize to the pipeline
-    dims. Closes the multimodal loop: the engine's own annotated
-    side-output PNGs (CV7) and externally produced 8-bit images ingest as
-    pixel rows. Unsupported subsets (16-bit, palette, interlaced) yield
-    no rows, not failures (PERMISSIVE)."""
+    filters, gray/RGB/RGBA). Closes the multimodal loop: the engine's own
+    annotated side-output PNGs (CV7) and externally produced 8-bit images
+    ingest as pixel rows. Unsupported subsets (16-bit, palette,
+    interlaced) yield no rows, not failures (PERMISSIVE)."""
     import zlib
 
     from distributed_video_analytics_flink_spark.functions.png import decode_png
-    from distributed_video_analytics_flink_spark.functions.resize import cubic_resize
 
     try:
-        bgr = decode_png(content)
+        yield decode_png(content)
     except (ValueError, zlib.error):
         return
-    if bgr.shape[:2] != (rows, cols):
-        bgr = cubic_resize(bgr, rows, cols)
-    yield bgr
 
 
 def _resized(frames: Iterator[np.ndarray], rows: int, cols: int) -> Iterator[np.ndarray]:
@@ -115,94 +113,57 @@ def _resized(frames: Iterator[np.ndarray], rows: int, cols: int) -> Iterator[np.
         yield bgr
 
 
-def _decode_frames_y4m(
-    content: bytes, rows: int, cols: int, max_frames: int
+def decode_frames(
+    raw: bytes, rows: int, cols: int, max_frames: int
 ) -> Iterator[np.ndarray]:
-    """REAL decoder for uncompressed Y4M bytes: frame slices -> BGR ->
-    bicubic resize to the pipeline dims when the container dims differ
-    (VideoEventCreator.java:75's resize step). Malformed tails end the
-    stream (PERMISSIVE). NOT a generator function: the header parse (and
-    its Y4MError on corrupt input) runs HERE, so the caller's try/except
-    actually sees it — a lazy generator would defer the raise into the
-    iteration loop, past the guard (ADVICE-grade bug found in r6 review)."""
-    _, frames = decode_y4m(content, max_frames=max_frames)  # eager header parse
-    return _resized(frames, rows, cols)
+    """The one container dispatch, shared by ``read_video_files`` and the
+    raw-bgr fallback of ``iter_chunk_rows``: (rows, cols, 3) BGR frames,
+    picked by content magic, not extension. Y4M, AVI (raw-DIB + MJPEG),
+    PNG stills, animated PNG, GIF (inter-frame compositing) and MJPEG-MP4
+    decode for real, then take the bicubic resize to the pipeline dims
+    when the container dims differ (VideoEventCreator.java:75's resize
+    step). PERMISSIVE throughout: a corrupt Y4M/AVI header yields no
+    frames; GIF and APNG share their strict-header/permissive-tail stance
+    with the ``format("gif")``/``format("apng")`` Data Sources
+    (``decode_*_permissive``); an MP4 whose video track is not MJPEG
+    (avc1/H.264 etc.) or does not parse, and any unrecognised bytes, fall
+    to the compressed-codec stub.
 
-
-def _decode_frames_avi(
-    content: bytes, rows: int, cols: int, max_frames: int
-) -> Iterator[np.ndarray]:
-    """REAL decoder for raw-DIB AVI bytes (sources/avi.py): movi chunks
-    are already literal BGR rows, so this is slicing + the same resize
-    step as the Y4M path. Same eager-header contract as the Y4M twin:
-    AviError (corrupt header, compressed stream) raises here, inside the
-    caller's guard, not lazily at first iteration."""
-    _, frames = decode_avi(content, max_frames=max_frames)  # eager header parse
-    return _resized(frames, rows, cols)
-
-
-def _decode_frames_mp4(
-    content: bytes, rows: int, cols: int, max_frames: int
-) -> Iterator[np.ndarray]:
-    """REAL decoder for MJPEG-carrying MP4s (sources/mp4.py): sample-table
-    walk + baseline-JPEG decode per sample, then the shared resize. Same
-    eager-header contract: Mp4Error (no video track, avc1/H.264, missing
-    sample tables) raises here so the caller can fall back to the
-    compressed-codec stub — exactly the behavior such files had before."""
-    from distributed_video_analytics_flink_spark.sources.mp4 import decode_mp4
-
-    _, frames = decode_mp4(content, max_frames=max_frames)  # eager trak parse
-    return _resized(frames, rows, cols)
-
-
-def _decode_frames_gif(
-    content: bytes, rows: int, cols: int, max_frames: int
-) -> Iterator[np.ndarray]:
-    """REAL decoder for animated GIF (sources/gif.py): LZW + palette +
-    inter-frame compositing (disposal/transparency) to full-canvas BGR,
-    then the shared resize. The strict-header/permissive-tail stance
-    (corrupt header -> zero rows, corrupt tail -> stream ends after the
-    good prefix, the task never dies) lives in ONE place —
-    gif.decode_gif_permissive — shared with the ``format("gif")`` Data
-    Source so the two ingest paths cannot drift."""
-    from distributed_video_analytics_flink_spark.sources.gif import (
-        decode_gif_permissive,
-    )
-
-    _, frames = decode_gif_permissive(content, max_frames=max_frames)
-    return _resized(frames, rows, cols)
-
-
-def _decode_frames_apng(
-    content: bytes, rows: int, cols: int, max_frames: int
-) -> Iterator[np.ndarray]:
-    """REAL decoder for animated PNG (sources/apng.py): fdAT chains
-    through the engine's own PNG unfilter, composited per fcTL
-    dispose/blend ops, then the shared resize. Strict-header/
-    permissive-tail stance lives in decode_apng_permissive (the
-    gif-decoder contract)."""
+    Header parses run HERE, eagerly, so the guards below see their errors;
+    a lazy generator would defer the raise into the caller's iteration,
+    past the guard."""
     from distributed_video_analytics_flink_spark.sources.apng import (
         decode_apng_permissive,
+        is_apng,
     )
+    from distributed_video_analytics_flink_spark.sources.mp4 import Mp4Error, decode_mp4
 
-    _, frames = decode_apng_permissive(content, max_frames=max_frames)
+    if raw.startswith(Y4M_MAGIC):
+        try:
+            _, frames = decode_y4m(raw, max_frames=max_frames)
+        except Y4MError:
+            return iter(())
+    elif is_avi(raw):
+        try:
+            _, frames = decode_avi(raw, max_frames=max_frames)
+        except AviError:
+            return iter(())  # corrupt header or unsupported stream
+    elif raw.startswith(b"\x89PNG"):
+        # acTL before IDAT means animated, else a single still frame
+        if is_apng(raw):
+            _, frames = decode_apng_permissive(raw, max_frames=max_frames)
+        else:
+            frames = _decode_png_still(raw)
+    elif is_gif(raw):
+        _, frames = decode_gif_permissive(raw, max_frames=max_frames)
+    elif len(raw) >= 12 and raw[4:8] == b"ftyp":
+        try:
+            _, frames = decode_mp4(raw, max_frames=max_frames)
+        except Mp4Error:
+            return _decode_frames_stub(raw, rows, cols, max_frames)
+    else:
+        return _decode_frames_stub(raw, rows, cols, max_frames)
     return _resized(frames, rows, cols)
-
-
-def _decode_frames_png_or_apng(
-    content: bytes, rows: int, cols: int, max_frames: int
-) -> Iterator[np.ndarray]:
-    """ONE dispatch site for PNG-signature bytes (r10 review: the
-    animated-vs-still branch was copy-pasted into read_video_files and
-    iter_chunk_rows — a stance change landing in one and not the other
-    would silently diverge the binaryFile and chunk-passthrough paths):
-    acTL before IDAT means animated (inter-frame compositing decode,
-    source-side), else a single still frame."""
-    from distributed_video_analytics_flink_spark.sources.apng import is_apng
-
-    if is_apng(content):
-        return _decode_frames_apng(content, rows, cols, max_frames)
-    return _decode_frame_png(content, rows, cols)
 
 
 def read_video_files(
@@ -213,13 +174,10 @@ def read_video_files(
     cols: int = 640,
     max_frames_per_file: int = 64,
 ) -> DataFrame:
-    """Scan video files into wire-format frame rows. camId = file stem (the
-    producer keys messages by camera id the same way), timestamps are paced
-    FRAME_INTERVAL_MS apart from a fixed deterministic epoch. Dispatch is
-    by content magic, not extension: Y4M, AVI (raw-DIB + MJPEG), PNG, GIF
-    (inter-frame compositing), and MJPEG-MP4 get the real decode;
-    remaining inter-frame codecs (avc1 etc.) fall to the compressed-codec
-    stub."""
+    """Scan video files into frame rows (``FRAME_SCHEMA``, raw BGR
+    ``data``). camId = file stem (the producer keys messages by camera id
+    the same way), timestamps are paced FRAME_INTERVAL_MS apart from a
+    fixed deterministic epoch, frames come from :func:`decode_frames`."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -232,37 +190,7 @@ def read_video_files(
             out = []
             for p, content in zip(pdf["path"], pdf["content"]):
                 cam = os.path.splitext(os.path.basename(p))[0]
-                raw = bytes(content)
-                if raw.startswith(Y4M_MAGIC):
-                    try:
-                        decoded = _decode_frames_y4m(raw, rows, cols, max_frames_per_file)
-                    except Y4MError:
-                        decoded = iter(())  # corrupt header: no rows, no failure
-                elif is_avi(raw):
-                    try:
-                        decoded = _decode_frames_avi(raw, rows, cols, max_frames_per_file)
-                    except AviError:
-                        decoded = iter(())  # corrupt/compressed: no rows, no failure
-                elif raw.startswith(b"\x89PNG"):
-                    decoded = _decode_frames_png_or_apng(
-                        raw, rows, cols, max_frames_per_file
-                    )
-                elif is_gif(raw):
-                    # corrupt header/tail handled inside (shared stance)
-                    decoded = _decode_frames_gif(raw, rows, cols, max_frames_per_file)
-                elif len(raw) >= 12 and raw[4:8] == b"ftyp":
-                    from distributed_video_analytics_flink_spark.sources.mp4 import Mp4Error
-
-                    try:
-                        decoded = _decode_frames_mp4(raw, rows, cols, max_frames_per_file)
-                    except Mp4Error:
-                        # inter-frame codec (avc1 etc.) or corrupt: the
-                        # stub keeps these files' pre-MJPEG behavior
-                        decoded = _decode_frames_stub(
-                            raw, rows, cols, max_frames_per_file
-                        )
-                else:
-                    decoded = _decode_frames_stub(raw, rows, cols, max_frames_per_file)
+                decoded = decode_frames(bytes(content), rows, cols, max_frames_per_file)
                 for i, frame in enumerate(decoded):
                     out.append(
                         (
@@ -273,7 +201,7 @@ def read_video_files(
                             rows,
                             cols,
                             16,  # CV_8UC3
-                            base64.b64encode(frame.tobytes()).decode("ascii"),
+                            frame.tobytes(),
                         )
                     )
             yield pd.DataFrame(
@@ -314,11 +242,12 @@ def iter_chunk_rows(
     """One file's compressed-passthrough rows:
     ``(camId, ts_us, src_rows, src_cols, rows, cols, codec, chunk_bytes)``.
     MJPEG AVI/MP4 demux by pure offset math (codec='mjpeg', chunk = the
-    still-encoded JPEG); everything else decodes source-side exactly like
-    ``read_video_files`` and emits codec='raw-bgr' pixels at the target
-    dims. The single copy shared by the binaryFile scan
-    (:func:`read_video_chunks`) and the ``videochunks`` Data Source
-    (batch + streaming), so skip semantics cannot drift between them."""
+    still-encoded JPEG); everything else decodes source-side through
+    :func:`decode_frames`, the dispatch ``read_video_files`` runs, and
+    emits codec='raw-bgr' pixels at the target dims. The single copy
+    shared by the binaryFile scan (:func:`read_video_chunks`) and the
+    ``videochunks`` Data Source (batch + streaming), so skip semantics
+    cannot drift between them."""
     from distributed_video_analytics_flink_spark.sources.avi import (
         _chunks as _avi_chunks,
     )
@@ -382,33 +311,12 @@ def iter_chunk_rows(
         try:
             chunks = _mjpeg_mp4()
         except Mp4Error:
-            chunks = None  # inter-frame codec: raw fallback below
+            chunks = None  # inter-frame codec: decode_frames' stub below
     if chunks is None:
-        # non-compressed (or non-MJPEG) container: decode at the source
-        # like read_video_files — these bytes ARE pixels
+        # non-compressed (or non-MJPEG) container: decode at the source,
+        # the read_video_files dispatch — these bytes ARE pixels
         codec = "raw-bgr"
-        if raw.startswith(Y4M_MAGIC):
-            try:
-                decoded = _decode_frames_y4m(raw, rows, cols, max_frames)
-            except Y4MError:
-                decoded = iter(())
-        elif is_avi(raw):
-            try:
-                decoded = _decode_frames_avi(raw, rows, cols, max_frames)
-            except AviError:
-                decoded = iter(())
-        elif raw.startswith(b"\x89PNG"):
-            # APNG is inter-frame like GIF: decode source-side (shared
-            # animated-vs-still dispatch)
-            decoded = _decode_frames_png_or_apng(raw, rows, cols, max_frames)
-        elif is_gif(raw):
-            # GIF frames are inter-frame (palette + canvas compositing
-            # state), so a chunk is NOT independently decodable — GIF
-            # decodes source-side and ships raw-bgr, the same stance as
-            # every non-MJPEG container; corrupt files handled inside
-            decoded = _decode_frames_gif(raw, rows, cols, max_frames)
-        else:
-            decoded = _decode_frames_stub(raw, rows, cols, max_frames)
+        decoded = decode_frames(raw, rows, cols, max_frames)
         chunks = ((rows, cols, f.tobytes()) for f in decoded)
     for i, (sr, sc, body) in enumerate(chunks):
         yield (
@@ -477,12 +385,9 @@ def decode_chunk_to_pixels(
 
 def prepare_motion_input(frames: DataFrame) -> tuple[DataFrame, bool]:
     """Project motion input for the keyBy exchange; returns (projection,
-    chunked). Wire-parsed frames (``schemas.WIRE_FRAME_SCHEMA``, the
-    streaming sources) already carry binary ``data`` and pass it through as
-    ``pix``; the in-engine producers that still emit base64 strings
-    (``FRAME_SCHEMA``: ``read_video_files``, the frame formats,
-    ``fixture_frames``) decode it JVM-side before the exchange. Chunk frames
-    (``read_video_chunks`` / the ``videochunks`` source) keep the
+    chunked). Frame rows (``schemas.FRAME_SCHEMA``: every producer and
+    wire source) pass their binary ``data`` through as ``pix``. Chunk
+    frames (``read_video_chunks`` / the ``videochunks`` source) keep the
     still-encoded payload across it and decode post-shuffle in
     ``iter_pixel_rows`` — the compressed passthrough."""
     if {"codec", "chunk"}.issubset(set(frames.columns)):
@@ -493,11 +398,8 @@ def prepare_motion_input(frames: DataFrame) -> tuple[DataFrame, bool]:
             ),
             True,
         )
-    data = F.col("data")
-    if not isinstance(frames.schema["data"].dataType, T.BinaryType):
-        data = F.unbase64(data)
     return (
-        frames.select("camId", "timestamp", "rows", "cols", data.alias("pix")),
+        frames.select("camId", "timestamp", "rows", "cols", F.col("data").alias("pix")),
         False,
     )
 

@@ -8,7 +8,7 @@ header, then each frame as a ``FRAME\\n`` marker followed by raw planar YUV
 bytes. Parsing it needs nothing beyond byte slicing, which makes the video
 path end-to-end REAL on genuine video bytes: binaryFile scan -> Y4M frame
 slices -> integer-exact YUV->BGR -> (optional) bicubic resize -> the same
-base64-BGR wire rows the Kafka producer emits.
+raw-BGR frame rows (schemas.FRAME_SCHEMA) the wire sources parse into.
 
 Format (public spec, shipped as doc/y4m.txt with mjpegtools):
   ``YUV4MPEG2 W<w> H<h> F<n>:<d> [Ip|t|b|m] [A<n>:<d>] [C<space>] ...\\n``

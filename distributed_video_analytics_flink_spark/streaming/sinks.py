@@ -171,9 +171,8 @@ def kafka_writer_options(
 
 def kafka_frame_payload(frames: DataFrame) -> DataFrame:
     """The producer's wire contract: key=camId (per-camera ordering on a
-    keyed topic), value=JSON of the frame struct. ``to_json`` writes a
-    binary ``data`` (wire-parsed frames) as padded standard base64 and a
-    string one (the base64 producers) as is: the wire text either way."""
+    keyed topic), value=JSON of the frame struct. ``to_json`` writes the
+    binary ``data`` as padded standard base64, the wire text."""
     # TS_OPTS keeps the wire roundtrip lossless (r14 review: the default
     # to_json format truncates to milliseconds, so a produce->consume hop
     # would collapse sub-millisecond frames onto one (camId, timestamp)

@@ -12,7 +12,7 @@ production builder (exercised for plan construction only) and the tested
 paths are the file-replay source (deterministic micro-batches for CI /
 golden tests) and the rate-source synthetic generator (throughput work).
 
-Every wire-frame source parses with ``schemas.WIRE_FRAME_SCHEMA``: ``data``
+Every wire-frame source parses with ``schemas.FRAME_SCHEMA``: ``data``
 is binary, so Spark's JSON parser base64-decodes the payload straight into
 pixel bytes — no JVM String copy of the ~1.2 MB payload and no separate
 ``unbase64`` before the keyBy exchange. Only strict base64 decodes; any
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_video_analytics_flink_spark.schemas import WIRE_FRAME_SCHEMA
+from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
 
 # Spark's JSON timestamp default truncates to milliseconds; the reference
 # writes ISO-8601 instants (VideoEventCreator.java:31-33). Microsecond
@@ -36,7 +36,7 @@ TS_OPTS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
 
 def parse_frames(raw_json: DataFrame, value_col: str = "value") -> DataFrame:
     """T1+T2 for value-column sources (Kafka): PERMISSIVE ``from_json`` with
-    the binary wire schema (malformed input -> null row, exactly the
+    the frame schema (malformed input -> null row, exactly the
     reference's swallow-and-filter mapper, VideoProcessor.java:143-153)
     followed by the null filter (:83-84). ``data`` comes out as decoded
     pixel bytes. A line holding a top-level JSON array is dropped (the
@@ -44,7 +44,7 @@ def parse_frames(raw_json: DataFrame, value_col: str = "value") -> DataFrame:
     return (
         raw_json.select(
             F.from_json(
-                F.col(value_col).cast("string"), WIRE_FRAME_SCHEMA, TS_OPTS
+                F.col(value_col).cast("string"), FRAME_SCHEMA, TS_OPTS
             ).alias("f")
         )
         .select("f.*")
@@ -55,15 +55,17 @@ def parse_frames(raw_json: DataFrame, value_col: str = "value") -> DataFrame:
 def write_frame_replay_dir(
     frames: list[dict], dirpath: str, frames_per_file: int = 4
 ) -> int:
-    """Serialize wire-format frame dicts (``fixture_frames``' shape) into
-    JSON-lines replay files consumable by :func:`file_frame_stream` — the
-    deterministic broker-less stand-in for the producer's Kafka writes
+    """Serialize frame dicts (``fixture_frames``' shape, raw BGR ``data``)
+    into JSON-lines replay files consumable by :func:`file_frame_stream`,
+    base64-encoding the payload as the wire does — the deterministic
+    broker-less stand-in for the producer's Kafka writes
     (``VideoEventCreator.java:235-245``). Frames are interleaved in global
     event-time order and split ``frames_per_file`` per file so each file is
     one micro-batch; mtimes are pinned strictly increasing because
     FileStreamSource orders same-batch discoveries by modification time and
     sub-second writes would tie (the arrival-order contract Kafka provides
     per key). Returns the file count."""
+    import base64
     import json
     import os
 
@@ -83,7 +85,7 @@ def write_frame_replay_dir(
                             "rows": f["rows"],
                             "cols": f["cols"],
                             "type": f["type"],
-                            "data": f["data"],
+                            "data": base64.b64encode(f["data"]).decode("ascii"),
                         }
                     )
                     for f in ordered[i : i + frames_per_file]
@@ -154,7 +156,7 @@ def file_frame_stream(
     """S4-as-replay: JSON-lines files of wire-format frames consumed as a
     stream, one file per micro-batch by default — the deterministic CI
     substitute for Kafka micro-batching (FIXTURES.md §4). Read with the JSON
-    file source under the imposed binary wire schema (never inferred):
+    file source under the imposed frame schema (never inferred):
     Jackson parses the line bytes directly and decodes ``data`` to pixels,
     PERMISSIVE as in :func:`parse_frames`, then the same camId null filter.
 
@@ -162,7 +164,7 @@ def file_frame_stream(
     JSON array of frame objects yields one row per element here, while
     ``from_json`` drops it."""
     return (
-        spark.readStream.schema(WIRE_FRAME_SCHEMA)
+        spark.readStream.schema(FRAME_SCHEMA)
         .options(**TS_OPTS)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(path)

@@ -355,7 +355,7 @@ def test_probe_n_frames_follows_fctl_count_not_actl():
 
 def test_apng_python_datasource(spark, tmp_path):
     """Spark 4 Python Data Source: spark.read.format('apng') yields the
-    same wire-format frames as read_video_files (one partition per file)
+    same frame rows as read_video_files (one partition per file)
     and feeds the motion pipeline unchanged; a corrupt file — and a plain
     still PNG, which is not an animation — contributes zero rows, not a
     task failure."""

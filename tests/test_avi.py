@@ -121,9 +121,8 @@ def test_avi_resize_path(spark, tmp_path):
         encode_avi(_bgr_square_frames(240, 320, [32], 24))
     )
     [row] = read_video_files(spark, str(tmp_path), glob="*.avi").collect()
-    import base64
 
-    px = np.frombuffer(base64.b64decode(row["data"]), np.uint8).reshape(480, 640, 3)
+    px = np.frombuffer(bytes(row["data"]), np.uint8).reshape(480, 640, 3)
     assert (px[40, 88] > 200).all()
     assert (px[400, 600] < 30).all()
 
@@ -143,7 +142,7 @@ def test_metadata_scan_covers_avi(spark, tmp_path):
 
 def test_avi_python_datasource(spark, tmp_path):
     """Spark 4 Python Data Source: spark.read.format('avi') yields the
-    same wire-format frames as read_video_files (one partition per file)
+    same frame rows as read_video_files (one partition per file)
     and feeds the motion pipeline unchanged."""
     from distributed_video_analytics_flink_spark.sources.datasources import (
         register_sources,

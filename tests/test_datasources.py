@@ -11,6 +11,10 @@ added — is held to the same rules:
    on an empty directory (files arrive later).
 4. **Batch == stream rows** — both readers emit byte-identical rows for
    the same file.
+5. **Binary frame rows** — every in-engine frame producer (the frame
+   formats, ``read_video_files``, ``fixture_frames``) emits
+   ``schemas.FRAME_SCHEMA`` rows whose ``data`` is the decoder's raw BGR
+   bytes, so the motion plan decodes no base64.
 """
 
 from __future__ import annotations
@@ -20,18 +24,34 @@ import re
 import numpy as np
 import pytest
 
-from distributed_video_analytics_flink_spark.sources.apng import encode_apng
-from distributed_video_analytics_flink_spark.sources.avi import encode_avi
+from pyspark.sql import types as T
+
+from distributed_video_analytics_flink_spark.operators.video import (
+    detect_motion_batch,
+    fixture_frames,
+)
+from distributed_video_analytics_flink_spark.plans.inspect import formatted_plan
+from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
+from distributed_video_analytics_flink_spark.sources.apng import (
+    decode_apng_permissive,
+    encode_apng,
+)
+from distributed_video_analytics_flink_spark.sources.avi import decode_avi, encode_avi
 from distributed_video_analytics_flink_spark.sources.datasources import (
     FORMATS,
     FilePartition,
     FileReader,
     FileStreamReader,
+    register_sources,
 )
-from distributed_video_analytics_flink_spark.sources.gif import encode_gif
+from distributed_video_analytics_flink_spark.sources.gif import (
+    decode_gif_permissive,
+    encode_gif,
+)
+from distributed_video_analytics_flink_spark.sources.video_files import read_video_files
 from distributed_video_analytics_flink_spark.sources.warc import build_warc
 from distributed_video_analytics_flink_spark.sources.wav import encode_wav
-from distributed_video_analytics_flink_spark.sources.y4m import encode_y4m
+from distributed_video_analytics_flink_spark.sources.y4m import decode_y4m, encode_y4m
 from tests.test_avi import _bgr_square_frames
 from tests.test_y4m import _square_planes
 
@@ -103,3 +123,55 @@ def test_batch_and_stream_rows_identical(name, tmp_path):
     assert isinstance(spart, FilePartition) and spart.path == part.path
     assert batch, f"{name} fixture decoded to zero rows"
     assert list(stream.read(spart)) == batch
+
+
+# each frame format's container decoder: (data, max_frames) -> (header, BGR frames)
+_DECODERS = {
+    "y4m": decode_y4m,
+    "avi": decode_avi,
+    "gif": decode_gif_permissive,
+    "apng": decode_apng_permissive,
+}
+_FRAME_FORMATS = list(_DECODERS)
+
+
+def _fixture_pixels(cam: int, i: int) -> bytes:
+    """FIXTURES.md §1.1 at 48x64: gray 50, from frame 5 a 24x24 block of
+    200 at (8, 8 + 12 * (i - 5))."""
+    px = np.full((48, 64, 3), 50, dtype=np.uint8)
+    if i >= 5:
+        px[8:32, 8 + 12 * (i - 5) : 32 + 12 * (i - 5), :] = 200
+    return px.tobytes()
+
+
+@pytest.mark.parametrize("producer", _FRAME_FORMATS + ["read_video_files", "fixture_frames"])
+def test_frame_producers_emit_binary_pixels(spark, tmp_path, producer):
+    """``data`` is binary and holds the decoder's BGR bytes, frame by frame
+    in timestamp order, and the motion plan over the rows has no
+    ``unbase64``."""
+    assert [n for n, f in FORMATS.items() if f.schema is FRAME_SCHEMA] == _FRAME_FORMATS
+    want: dict[str, list[bytes]] = {}
+    if producer == "fixture_frames":
+        df = spark.createDataFrame(fixture_frames(), FRAME_SCHEMA)
+        for cam in range(4):
+            want[f"cam{cam}"] = [_fixture_pixels(cam, i) for i in range(10)]
+    else:
+        names = _FRAME_FORMATS if producer == "read_video_files" else [producer]
+        for name in names:
+            fname, blob = _fixture(name)
+            cam = f"{name}cam"
+            (tmp_path / fname.replace("cam0", cam)).write_bytes(blob)
+            _, frames = _DECODERS[name](blob, 64)
+            want[cam] = [f.tobytes() for f in frames]
+        if producer == "read_video_files":
+            # the fixtures' native dims: no resize, so the bytes are the decoder's
+            df = read_video_files(spark, str(tmp_path), rows=16, cols=16)
+        else:
+            register_sources(spark)
+            df = spark.read.format(producer).load(str(tmp_path))
+    assert df.schema["data"].dataType == T.BinaryType()
+    got: dict[str, list[bytes]] = {}
+    for r in df.orderBy("camId", "timestamp").collect():
+        got.setdefault(r["camId"], []).append(bytes(r["data"]))
+    assert got == want and all(got.values())
+    assert "unbase64" not in formatted_plan(detect_motion_batch(df)).lower()

@@ -47,7 +47,7 @@ def _run_available_now(spark, src_dir, ckpt, out):
     ):
         return []
     return spark.read.schema(
-        "camId string, timestamp timestamp, rows int, cols int, type int, data string"
+        "camId string, timestamp timestamp, rows int, cols int, type int, data binary"
     ).parquet(str(out)).collect()
 
 

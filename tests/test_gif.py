@@ -329,9 +329,8 @@ def test_gif_resize_path(spark, tmp_path):
     f[20:44, 32:56] = 255
     (tmp_path / "small.gif").write_bytes(encode_gif([f]))
     [row] = read_video_files(spark, str(tmp_path), glob="*.gif").collect()
-    import base64
 
-    px = np.frombuffer(base64.b64decode(row["data"]), np.uint8).reshape(480, 640, 3)
+    px = np.frombuffer(bytes(row["data"]), np.uint8).reshape(480, 640, 3)
     assert (px[64, 88] > 200).all()
     assert (px[400, 600] < 30).all()
 
@@ -383,7 +382,7 @@ def _square_bgr_frames(n=5, h=480, w=640, side=48):
 
 def test_gif_python_datasource(spark, tmp_path):
     """Spark 4 Python Data Source: spark.read.format('gif') yields the
-    same wire-format frames as read_video_files (one partition per file)
+    same frame rows as read_video_files (one partition per file)
     and feeds the motion pipeline unchanged; a corrupt file contributes
     zero rows, not a task failure."""
     from distributed_video_analytics_flink_spark.sources.datasources import (

@@ -10,7 +10,6 @@ brute-force flood fill on random masks (hypothesis).
 
 from __future__ import annotations
 
-import base64
 
 import numpy as np
 import pytest
@@ -52,21 +51,21 @@ def _cam_frames(cam: str) -> list[dict]:
 
 def test_kernel_golden_sequence():
     frames = _cam_frames("cam0")
-    assert detect_motion_boxes(None, base64.b64decode(frames[0]["data"]), 48, 64) == []
+    assert detect_motion_boxes(None, bytes(frames[0]["data"]), 48, 64) == []
     for i in range(1, 10):
-        prev = base64.b64decode(frames[i - 1]["data"])
-        cur = base64.b64decode(frames[i]["data"])
+        prev = bytes(frames[i - 1]["data"])
+        cur = bytes(frames[i]["data"])
         assert detect_motion_boxes(prev, cur, 48, 64) == GOLDEN_BOXES[i], f"frame {i}"
 
 
 def test_kernel_split_composes():
     """preprocess_gray + motion_boxes_from_gray == detect_motion_boxes."""
     frames = _cam_frames("cam1")
-    grays = [preprocess_gray(base64.b64decode(f["data"]), 48, 64) for f in frames]
+    grays = [preprocess_gray(bytes(f["data"]), 48, 64) for f in frames]
     for i in range(1, 10):
         whole = detect_motion_boxes(
-            base64.b64decode(frames[i - 1]["data"]),
-            base64.b64decode(frames[i]["data"]),
+            bytes(frames[i - 1]["data"]),
+            bytes(frames[i]["data"]),
             48,
             64,
         )

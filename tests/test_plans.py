@@ -598,7 +598,8 @@ def test_train_step_hashes_once_behind_barrier(spark):
     by filter pushdown — the full md5 scoring lambda appeared in BOTH the
     pushed Filter and the Project above it, plus a third md5 per
     surviving token (plans/r17/text_classifier_train_step_before.txt;
-    interleaved A/B measured 2.3x: scripts/ab_r17_train_step.py). With
+    interleaved A/B measured 2.3x; its one-shot script,
+    scripts/ab_r17_train_step.py, is in git history). With
     the bucket arrays pinned behind the _materialize barrier, no md5 may
     appear anywhere in the serving plan (the hashing lives below the
     ExistingRDD leaf), and the misclassified-only filter must still sit

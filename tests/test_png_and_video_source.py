@@ -206,8 +206,6 @@ def test_png_files_ingest_as_real_pixels(spark, tmp_path):
     output) flow through read_video_files as REAL decoded pixels —
     exact bytes when dims match, bicubic-resized otherwise; corrupt PNGs
     skip PERMISSIVE-style."""
-    import base64
-
     from distributed_video_analytics_flink_spark.functions.png import encode_png_bgr
 
     d = tmp_path / "imgs"
@@ -223,7 +221,7 @@ def test_png_files_ingest_as_real_pixels(spark, tmp_path):
     rows = {r["camId"]: r for r in frames.collect()}
     assert set(rows) == {"camX", "camY"}  # corrupt camZ skipped, not failed
     got = np.frombuffer(
-        base64.b64decode(rows["camX"]["data"]), dtype=np.uint8
+        bytes(rows["camX"]["data"]), dtype=np.uint8
     ).reshape(48, 64, 3)
     assert (got == exact).all()  # dims match -> byte-exact decode
     assert rows["camY"]["rows"] == 48 and rows["camY"]["cols"] == 64  # resized

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import base64
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -77,12 +76,12 @@ def test_resize_operator_composes_with_motion(spark):
                 "rows": 24,
                 "cols": 32,
                 "type": 16,
-                "data": base64.b64encode(frame.tobytes()).decode("ascii"),
+                "data": frame.tobytes(),
             }
         )
     native = spark.createDataFrame(rows, schema=FRAME_SCHEMA)
     resized = resize_frames(native, out_h=48, out_w=64)
-    got = resized.select("rows", "cols", F.octet_length(F.unbase64("data")).alias("nb")).collect()
+    got = resized.select("rows", "cols", F.octet_length("data").alias("nb")).collect()
     assert all(r["rows"] == 48 and r["cols"] == 64 and r["nb"] == 48 * 64 * 3 for r in got)
 
     det = {

@@ -87,8 +87,8 @@ def test_sql_motion_boxes_matches_batch_pipeline(spark):
         """
         SELECT camId, unix_micros(timestamp) AS ts_us,
                dvaf_motion_boxes(
-                 unbase64(lag(data) OVER (PARTITION BY camId ORDER BY timestamp)),
-                 unbase64(data), `rows`, cols) AS motion_boxes
+                 lag(data) OVER (PARTITION BY camId ORDER BY timestamp),
+                 data, `rows`, cols) AS motion_boxes
         FROM fixture_frames
         """
     ).collect()

@@ -6,6 +6,7 @@ checkpoint restart idempotence; FPS tumbling windows; results sink layout.
 
 from __future__ import annotations
 
+import base64
 import json
 import os
 
@@ -36,7 +37,7 @@ def _frame_json(f: dict) -> str:
             "rows": f["rows"],
             "cols": f["cols"],
             "type": f["type"],
-            "data": f["data"],
+            "data": base64.b64encode(f["data"]).decode("ascii"),
         }
     )
 
@@ -162,7 +163,6 @@ def test_stream_equals_batch_random_sequences(spark, tmp_path, seed):
     content, random camera interleaving, random micro-batch splits, some
     cameras missing from some batches) the streaming stateful fold and the
     batch secondary-sort fold agree exactly."""
-    import base64
     from datetime import datetime, timedelta, timezone
 
     import numpy as np
@@ -184,7 +184,7 @@ def test_stream_equals_batch_random_sequences(spark, tmp_path, seed):
                     "rows": 32,
                     "cols": 32,
                     "type": 16,
-                    "data": base64.b64encode(px.tobytes()).decode("ascii"),
+                    "data": px.tobytes(),
                 }
             )
     frames.sort(key=lambda f: f["timestamp"])

@@ -1,6 +1,6 @@
 """The wire-parse contract of the frame sources (streaming/sources.py).
 
-Both wire paths parse with ``schemas.WIRE_FRAME_SCHEMA``, whose ``data`` is
+Both wire paths parse with ``schemas.FRAME_SCHEMA``, whose ``data`` is
 binary: ``file_frame_stream`` through the JSON file source, ``parse_frames``
 (Kafka and other value-column sources) through ``from_json``. Pins:
 
@@ -18,6 +18,8 @@ binary: ``file_frame_stream`` through the JSON file source, ``parse_frames``
 5. **Old checkpoints resume.** A checkpoint written by the earlier
    ``text`` + ``from_json`` (string ``data``) + ``unbase64`` plan restarts
    under the binary parse with rows identical to an uninterrupted run.
+
+The earlier lenient parse lives on here only, as :func:`_parse_lenient`.
 """
 
 from __future__ import annotations
@@ -28,16 +30,15 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from distributed_video_analytics_flink_spark.functions.resize import resize_payload
 from distributed_video_analytics_flink_spark.operators.video import (
     detect_motion_batch,
     fixture_frames,
     resize_frames,
 )
-from distributed_video_analytics_flink_spark.schemas import (
-    FRAME_SCHEMA,
-    WIRE_FRAME_SCHEMA,
-)
+from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
 from distributed_video_analytics_flink_spark.streaming import (
     camera_fps,
     detect_motion_stream,
@@ -52,6 +53,10 @@ from distributed_video_analytics_flink_spark.streaming.sinks import (
 from distributed_video_analytics_flink_spark.streaming.sources import TS_OPTS
 
 
+def _b64(f: dict) -> str:
+    return base64.b64encode(f["data"]).decode("ascii")
+
+
 def _line(f: dict, data=None, data_first: bool = False) -> str:
     rec = {
         "camId": f["camId"],
@@ -59,7 +64,7 @@ def _line(f: dict, data=None, data_first: bool = False) -> str:
         "rows": f["rows"],
         "cols": f["cols"],
         "type": f["type"],
-        "data": f["data"] if data is None else data,
+        "data": _b64(f) if data is None else data,
     }
     if data_first:
         rec = {"data": rec.pop("data"), **rec}
@@ -97,7 +102,7 @@ def _wire_lines() -> list[str]:
     for f in sorted(frames.values(), key=lambda f: f["timestamp"]):
         key = _key(f)
         if key == STRAY:
-            lines.append(_line(f, data=f["data"][:100] + "!" + f["data"][100:]))
+            lines.append(_line(f, data=_b64(f)[:100] + "!" + _b64(f)[100:]))
         elif key == NOT_B64:
             lines.append(_line(f, data="@@notb64!!"))
         elif key == NO_PAD:
@@ -158,13 +163,21 @@ def _paths(spark, data_dir):
     }
 
 
+# the earlier wire parse schema: ``data`` as the base64 string
+_STRING_DATA_SCHEMA = T.StructType(
+    FRAME_SCHEMA.fields[:-1] + [T.StructField("data", T.StringType(), True)]
+)
+
+
 def _parse_lenient(raw):
-    """The earlier wire parse: ``from_json`` with string ``data`` (left for
-    ``prepare_motion_input`` to ``unbase64``) and the camId null filter."""
+    """The earlier wire parse: ``from_json`` with string ``data``, the
+    camId null filter, then the lenient ``unbase64`` that
+    ``prepare_motion_input`` used to apply."""
     return (
-        raw.select(F.from_json("value", FRAME_SCHEMA, TS_OPTS).alias("f"))
+        raw.select(F.from_json("value", _STRING_DATA_SCHEMA, TS_OPTS).alias("f"))
         .select("f.*")
         .filter(F.col("camId").isNotNull())
+        .withColumn("data", F.unbase64("data"))
     )
 
 
@@ -189,7 +202,7 @@ def test_malformed_lines_give_documented_rows(spark, tmp_path, wire_dir, path):
         if _key(f) in (STRAY, NOT_B64, NO_PAD, NUMBER):
             assert r["data"] is None, _key(f)  # strict base64 only; the row stays
         else:
-            assert bytes(r["data"]) == base64.b64decode(f["data"]), _key(f)
+            assert bytes(r["data"]) == f["data"], _key(f)
     assert not any(r["camId"] == "trunc" for r in rows)  # truncated: dropped
     arr = sorted(i for c, i in by_key if c == "camA")
     # the one difference: the JSON source reads an array line's elements,
@@ -205,10 +218,10 @@ def test_motion_stream_equals_batch_and_lenient_decode(spark, tmp_path, wire_dir
     got = _collect(
         spark, detect_motion_stream(stream()), f"wire_motion_{path}", str(tmp_path / "ck2")
     )
-    batch = detect_motion_batch(spark.createDataFrame(parsed, WIRE_FRAME_SCHEMA)).collect()
+    batch = detect_motion_batch(spark.createDataFrame(parsed, FRAME_SCHEMA)).collect()
     assert _motion_key(got) == _motion_key(batch)
 
-    # the earlier lenient parse: string data, unbase64 in prepare_motion_input
+    # the earlier lenient parse: string data, then unbase64
     lenient = detect_motion_batch(
         _parse_lenient(spark.read.text(str(wire_dir)))
     ).collect()
@@ -270,36 +283,36 @@ def test_kafka_payload_round_trip_is_byte_identical(spark):
     payload = kafka_frame_payload(parsed).collect()
     recs = [json.loads(r["value"]) for r in payload]
     assert [r["key"] for r in payload] == [rec["camId"] for rec in recs]
-    assert sorted(rec["data"] for rec in recs) == sorted(f["data"] for f in frames)
+    assert sorted(rec["data"] for rec in recs) == sorted(_b64(f) for f in frames)
     again = parse_frames(kafka_frame_payload(parsed))
     assert sorted(again.collect()) == sorted(parsed.collect())
     assert again.count() == 40
 
 
 def test_resize_frames_accepts_binary_data(spark):
-    """Binary ``data`` in, binary out, the same pixels as the base64 path
-    (decoding raw bytes as base64 would silently yield garbage)."""
+    """Binary ``data`` in, binary out: each frame's pixels are what
+    ``resize_payload`` gives for its bytes (decoding raw bytes as base64
+    would silently yield garbage)."""
     frames = fixture_frames()[:3]
     wire = resize_frames(_wire_batch(spark, frames), out_h=24, out_w=32)
-    text = resize_frames(spark.createDataFrame(frames, FRAME_SCHEMA), out_h=24, out_w=32)
     assert dict(wire.dtypes)["data"] == "binary"
-    assert dict(text.dtypes)["data"] == "string"
-    got = sorted((r["camId"], r["timestamp"], bytes(r["data"])) for r in wire.collect())
+    got = sorted((_row_key(r), bytes(r["data"])) for r in wire.collect())
     want = sorted(
-        (r["camId"], r["timestamp"], base64.b64decode(r["data"])) for r in text.collect()
+        (_key(f), resize_payload(f["data"], f["rows"], f["cols"], 24, 32))
+        for f in frames
     )
     assert got == want
-    assert all(len(d) == 24 * 32 * 3 for _, _, d in got)
+    assert all(len(d) == 24 * 32 * 3 for _, d in got)
 
 
 def test_fps_and_joins_unchanged_on_binary_frames(spark):
     """camera_fps and the stream-static and interval joins give the same
-    rows on wire-parsed (binary) frames as on base64 frames. (Their
-    streaming runs, and the dedup's, read through ``file_frame_stream`` in
-    tests/test_streaming.py.)"""
+    rows on wire-parsed frames as on frames built in-engine, and carry the
+    fixture's pixel bytes. (Their streaming runs, and the dedup's, read
+    through ``file_frame_stream`` in tests/test_streaming.py.)"""
     frames = fixture_frames()
     wire = _wire_batch(spark, frames)
-    text = spark.createDataFrame(frames, FRAME_SCHEMA)
+    engine = spark.createDataFrame(frames, FRAME_SCHEMA)
     cameras = spark.createDataFrame([("cam0", "lobby"), ("cam1", "gate")], ["camId", "location"])
 
     def rows(df, cols):
@@ -310,9 +323,9 @@ def test_fps_and_joins_unchanged_on_binary_frames(spark):
         (lambda d: enrich_with_cameras(d, cameras), ["camId", "timestamp", "location"]),
         (lambda d: interval_join_streams(d, d), ["l_key", "l_ts", "r_ts"]),
     ):
-        assert rows(build(wire), cols) == rows(build(text), cols)
+        assert rows(build(wire), cols) == rows(build(engine), cols)
     assert rows(enrich_with_cameras(wire, cameras), ["camId", "data"]) == sorted(
-        (f["camId"], bytearray(base64.b64decode(f["data"]))) for f in frames
+        (f["camId"], bytearray(f["data"])) for f in frames
     )
 
 

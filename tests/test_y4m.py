@@ -156,9 +156,8 @@ def test_y4m_resize_path(spark, tmp_path):
         encode_y4m([_square_planes(240, 320, 32, 24)])
     )
     [row] = read_video_files(spark, str(tmp_path), glob="*.y4m").collect()
-    import base64
 
-    px = np.frombuffer(base64.b64decode(row["data"]), np.uint8).reshape(480, 640, 3)
+    px = np.frombuffer(bytes(row["data"]), np.uint8).reshape(480, 640, 3)
     # the square (y 8..32, x 32..56 at 240x320) doubles to (y 16..64,
     # x 64..112); sample its interior and the far background
     assert (px[40, 88] > 200).all()
@@ -180,7 +179,7 @@ def test_metadata_scan_covers_y4m(spark, tmp_path):
 
 def test_y4m_python_datasource(spark, tmp_path):
     """Spark 4 Python Data Source: spark.read.format('y4m') yields the
-    same wire-format frames as read_video_files (one partition per file,
+    same frame rows as read_video_files (one partition per file,
     decode on the partition) and feeds the motion pipeline unchanged."""
     from distributed_video_analytics_flink_spark.sources.datasources import (
         register_sources,
