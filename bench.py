@@ -714,27 +714,24 @@ def main() -> None:
     # died at query 15/36 and produced no numbers at all — never again).
     timings: dict[str, float | None] = {}
     errors: dict[str, str] = {}
-    # Which queries rode the session-scoped k-NN scoring memo (VERDICT
-    # r10 #4): the shared frame serves sim_label_knn + the graph family,
-    # so the FIRST of them to run pays the scoring and the rest are
+    # Which queries rode a session memo (memo.py; VERDICT r10 #4): the
+    # shared k-NN frame serves sim_label_knn + the graph family, the PQ
+    # codebook and the at-rest index serve the IVF-PQ legs, the audio
+    # fixture decode serves the two multimodal_audio_* queries, so the
+    # FIRST of a family to run pays the build and the rest are
     # memo-served — round-over-round diff tooling must compare the family
     # SUM, not individual rows. memo_cached[name] = True means the
     # recorded (min) time had a warm memo; False means it paid the build.
-    from distributed_video_analytics_flink_spark.operators.audio import (
-        _AUDIO_MEMO_STATS,
-    )
-    from distributed_video_analytics_flink_spark.operators.similarity import (
-        _KNN_MEMO_STATS,
-    )
+    from distributed_video_analytics_flink_spark.memo import memo_stats
 
-    # every session-scoped memo a timed query can ride (r12 adds the audio
-    # fixture-decode memo shared by the two multimodal_audio_* queries)
-    _MEMOS = (_KNN_MEMO_STATS, _AUDIO_MEMO_STATS)
+    def _memo_totals() -> tuple[int, int]:
+        counts = memo_stats().values()
+        return sum(c["hits"] for c in counts), sum(c["misses"] for c in counts)
 
     memo_cached: dict[str, bool] = {}
     for name in HEADLINE:
         best = float("inf")
-        stats0 = [dict(m) for m in _MEMOS]
+        hits0, misses0 = _memo_totals()
         try:
             fn = ops.QUERIES[name].fn  # inside the fence: a renamed entry must not kill the run
             for _ in range(1 if _over_budget() else 2):
@@ -745,13 +742,12 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — harness must survive any query
             timings[name] = None
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        hits = sum(m["hits"] - s["hits"] for m, s in zip(_MEMOS, stats0))
-        misses = sum(m["misses"] - s["misses"] for m, s in zip(_MEMOS, stats0))
-        if hits or misses:  # this query consumed a session memo
+        hits1, misses1 = _memo_totals()
+        if hits1 > hits0 or misses1 > misses0:  # this query consumed a session memo
             # with min-of-2, run 1 may build (miss) and run 2 ride the
             # memo (hit) — the min is then the cached run, so hits>0 is
             # the honest marker for the recorded number
-            memo_cached[name] = hits > 0
+            memo_cached[name] = hits1 > hits0
 
     motion_fps: float | None = None
     try:

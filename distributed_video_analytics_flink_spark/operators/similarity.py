@@ -24,13 +24,14 @@ exactly; parity stays bit-for-bit.
 
 from __future__ import annotations
 
-import threading
+import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_video_analytics_flink_spark.memo import fingerprint, memo
 from distributed_video_analytics_flink_spark.operators.registry import query
 from distributed_video_analytics_flink_spark.sinks.index_store import (
     DEFAULT_INDEX_STORE,
@@ -676,51 +677,21 @@ def sim_label_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_knn_frame(spark, sf_dir)
 
 
-# Session-scoped memo of the scored k-NN frame: the exact pair-cell
-# scoring is the single most expensive step on FOUR registered queries'
-# critical paths (sim_label_knn itself, graph_triangle_count, and both
-# PageRank variants — r8 VERDICT #7). All four consume the SAME scored
-# frame, so one localCheckpoint per (app, sf_dir) serves them all;
-# results are unchanged (the memo pins the identical frame the callers
-# would recompute — exact integer-quantized scoring, so there is no
-# run-to-run drift to freeze in). Keyed by applicationId so a new
-# session never sees a stale handle. BOUNDED (r9 ADVICE): entries from
-# dead applications are evicted on insert (their checkpoint blocks died
-# with the context — appId inequality IS a liveness check here: PySpark
-# supports one active SparkContext per process, so an entry under a
-# different applicationId can only belong to a stopped context, never a
-# concurrently-live session) and at most _KNN_MEMO_MAX live entries are kept,
-# oldest-first eviction — dropping the last DataFrame reference lets
-# the ContextCleaner reclaim the pinned localCheckpoint blocks, so a
-# long-lived session sweeping many sf_dirs holds O(1) indexes, not one
-# per directory it ever touched.
-_KNN_EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_KNN_MEMO_MAX = 4  # live (app, sf_dir) entries; a bench session uses 1-2
-# Observable hit/miss counters so the bench can mark which graph-family
-# timings rode a warm memo vs paid the one-time scoring (VERDICT r10 #4:
-# the bench-order attribution caveat, machine-readable instead of prose).
-_KNN_MEMO_STATS = {"hits": 0, "misses": 0}
+def _embeddings_src(sf_dir: str) -> str:
+    return os.path.join(sf_dir, "embeddings.parquet")
 
 
 def _shared_knn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    df = _KNN_EDGE_MEMO.pop(key, None)
-    if df is not None:
-        _KNN_MEMO_STATS["hits"] += 1
-        _KNN_EDGE_MEMO[key] = df  # re-insert: dict order becomes true LRU
-    else:
-        _KNN_MEMO_STATS["misses"] += 1
-        for stale in [k for k in _KNN_EDGE_MEMO if k[0] != app]:
-            del _KNN_EDGE_MEMO[stale]
-        while len(_KNN_EDGE_MEMO) >= _KNN_MEMO_MAX:
-            del _KNN_EDGE_MEMO[next(iter(_KNN_EDGE_MEMO))]  # LRU first
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", "embedding"
-        )
-        df = label_knn_exact(emb, _EXACT_CELL_BUCKETS, k=3).localCheckpoint()
-        _KNN_EDGE_MEMO[key] = df
-    return df
+    """The scored k-NN frame, checkpointed once per session and fixture
+    content (memo.py): its exact scoring is the most expensive step of
+    the four queries that share it (sim_label_knn, graph_triangle_count,
+    both PageRank variants — r8 VERDICT #7)."""
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+        return label_knn_exact(emb, _EXACT_CELL_BUCKETS, k=3).localCheckpoint()
+
+    return memo(spark, "knn_frame", sf_dir, [_embeddings_src(sf_dir)], build)
 
 
 def _shared_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2073,24 +2044,13 @@ def emb_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CODEBOOK_CACHE: dict = {}
-
-# r18 (VERDICT r17 #5): the lifecycle legs run sequences of BOUNDED
-# driver actions (top-5 collects, tiny M-step collects) whose jobs are
-# independent of each other; running them from a small driver thread
-# pool lets each job's task tail back-fill the others' idle executors
-# (guide §2.6 overlap-independent-jobs). Toggle exists for interleaved
-# A/B measurement only.
-_LIFECYCLE_OVERLAP = True
-
-
 def _overlap(*thunks):
-    """Run independent bounded driver actions concurrently and return
-    their results in submission order. Spark's scheduler interleaves
-    concurrent jobs FIFO (earlier job first, later ones back-fill), and
-    every thunk here collects a bounded result, so the pool is small and
-    short-lived. Falls back to sequential execution when toggled off."""
-    if not _LIFECYCLE_OVERLAP or len(thunks) <= 1:
+    """Run independent bounded driver actions (the lifecycle legs' top-5
+    and M-step collects, VERDICT r17 #5) concurrently and return their
+    results in submission order: Spark's scheduler interleaves concurrent
+    jobs FIFO, so each job's task tail back-fills the others' idle
+    executors. One thunk or none runs inline."""
+    if len(thunks) <= 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
@@ -2099,21 +2059,21 @@ def _overlap(*thunks):
         return [f.result() for f in futures]
 
 
-def _pq_refined_codebook(emb: DataFrame, cache_key: str | None = None):
+def _fixture_codebook(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """``_pq_refined_codebook(emb)`` of the fixture, memoized per session
+    and fixture content (memo.py): the refined queries share one training
+    index, so a round runs the two training jobs once (r6 review)."""
+    inputs = [_embeddings_src(sf_dir)]
+    return memo(spark, "pq_codebook", sf_dir, inputs, lambda: _pq_refined_codebook(emb))
+
+
+def _pq_refined_codebook(emb: DataFrame):
     """(CT0, CT1): the seeded PQ codebook and its one-Lloyd-round
     refinement, both (subspace, centroid, dim) tensors. The E-step is a
     zero-shuffle Arrow map; the M-step is a partial-aggregable groupBy
     producing one row per (subspace, centroid, dim) — vector-count
     independent — whose result returns to the driver as a tiny constant.
-    Empty cells keep their seed centroid (standard Lloyd).
-
-    ``cache_key`` (the sf_dir) memoizes the trained tensors per process:
-    three refined queries share one training index in production, so one
-    bench/driver round should run the two training jobs once, not three
-    times (r6 review). Safe because the parquet fixtures are immutable
-    within a process."""
-    if cache_key is not None and cache_key in _PQ_CODEBOOK_CACHE:
-        return _PQ_CODEBOOK_CACHE[cache_key]
+    Empty cells keep their seed centroid (standard Lloyd)."""
     import numpy as np
 
     seed_rows = (
@@ -2152,8 +2112,6 @@ def _pq_refined_codebook(emb: DataFrame, cache_key: str | None = None):
     CT1 = CT0.copy()  # empty cells keep their seed centroid
     for r in mstep:
         CT1[r["s"], r["j"], r["i"]] = r["sq"] / 1e6 / r["n"]
-    if cache_key is not None:
-        _PQ_CODEBOOK_CACHE[cache_key] = (CT0, CT1)
     return CT0, CT1
 
 
@@ -2259,7 +2217,7 @@ def emb_pq_codes_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    CT0, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    CT0, CT1 = _fixture_codebook(spark, sf_dir, emb)
 
     @F.pandas_udf("sd: array<long>, rd: array<long>, mv: array<int>")
     def _both(embs: pd.Series) -> pd.DataFrame:
@@ -2315,7 +2273,7 @@ def emb_pq_adc_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qv = np.asarray(
         emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
         dtype=np.float64,
@@ -2736,7 +2694,7 @@ def sim_ivf_pq_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which must stay bit-identical) can never desynchronize."""
     emb = load_table(spark, sf_dir, "embeddings")
     C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
         axis=2
     )
@@ -2892,7 +2850,7 @@ def sim_ivf_pq_multiprobe_recall_checked(spark: SparkSession, sf_dir: str) -> Da
     crossJoin of five broadcast 1-row aggregates."""
     emb = load_table(spark, sf_dir, "embeddings")
     C, cn, qv, qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
         axis=2
     )
@@ -3059,10 +3017,6 @@ def sim_ivf_pq_gc_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-_IVF_PQ_INDEX_BUILT: set = set()
-_IVF_PQ_BUILD_LOCK = threading.Lock()  # intra-process: one build at a time
-
-
 # Bump when the at-rest layout changes: the version feeds the index path
 # tag, so a directory left by an older code version can never be reused.
 # v2: the index carries a _model.json sidecar (frozen coarse centroids +
@@ -3078,22 +3032,11 @@ def ivf_pq_index_path(sf_dir: str) -> str:
     yields a NEW index path — the publish race-loser's "existing
     directory is the same index" assumption can then never pin a stale
     index to fresh data (r7 review)."""
-    import glob
     import hashlib
-    import os
     import tempfile
 
-    parts = [os.path.abspath(sf_dir), f"v{_IVF_PQ_INDEX_FORMAT}"]
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    paths = [src] if os.path.isfile(src) else sorted(
-        glob.glob(os.path.join(src, "**", "*"), recursive=True)
-    )
-    for p in paths:
-        try:
-            st = os.stat(p)
-            parts.append(f"{os.path.relpath(p, sf_dir)}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            continue
+    stamp = fingerprint([_embeddings_src(sf_dir)])
+    parts = [os.path.abspath(sf_dir), f"v{_IVF_PQ_INDEX_FORMAT}", stamp]
     tag = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
     # Root the cache in a per-user 0700 subdirectory rather than directly
     # under the world-shared temp dir: a predictable name at a shared path
@@ -3123,8 +3066,7 @@ def write_ivf_pq_index(
     index holds a few small ints per vector instead of the 64-float
     embedding: the at-rest footprint drop IS the point of PQ.
 
-    Memoized per (process, path): serving queries rebuild at most once per
-    session; the parquet fixtures are immutable within a process. Across
+    Memoized per (session, path, embeddings content) (memo.py). Across
     processes the publish is ATOMIC: the build lands in a sibling temp
     dir and a single os.rename exposes it, so a concurrent reader never
     sees a half-written (or half-deleted, as mode-overwrite would leave)
@@ -3137,13 +3079,10 @@ def write_ivf_pq_index(
     the embedding column again."""
     if path is None:
         path = ivf_pq_index_path(sf_dir)
-    # the lock makes the check-then-build atomic INSIDE the process (two
-    # concurrent first-use queries must not write the same tmp dir); the
-    # rename below handles the cross-process race
-    with _IVF_PQ_BUILD_LOCK:
-        if path in _IVF_PQ_INDEX_BUILT:
-            return path
-        return _build_ivf_pq_index(spark, sf_dir, path, coarse, store=store)
+    return memo(
+        spark, "ivf_pq_index", path, [_embeddings_src(sf_dir)],
+        lambda: _build_ivf_pq_index(spark, sf_dir, path, coarse, store=store),
+    )
 
 
 _IVF_PQ_MODEL_FILE = "_model.json"  # "_"-prefixed: invisible to the scan
@@ -3227,7 +3166,7 @@ def _build_ivf_pq_index(
         C, cn = _ivf_coarse_and_query(emb)[:2]
     else:
         C, cn = coarse
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
 
     tmp = store.stage(path)
     (
@@ -3259,7 +3198,6 @@ def _build_ivf_pq_index(
         if store.resolve(path) is None:
             raise
         _validated_live_dir(path, store)
-    _IVF_PQ_INDEX_BUILT.add(path)
     return path
 
 
@@ -3612,7 +3550,7 @@ def sim_ivf_pq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline index job, run once per corpus version."""
     emb = load_table(spark, sf_dir, "embeddings")
     C, cn, qv, qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
         axis=2
     )
@@ -4367,7 +4305,7 @@ def sim_ivf_pq_append_recall_checked(spark: SparkSession, sf_dir: str) -> DataFr
 
     emb = load_table(spark, sf_dir, "embeddings")
     C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
         axis=2
     )
@@ -4746,7 +4684,7 @@ def sim_ivf_pq_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
 
     def _adc_top5(idx, qtab):
@@ -4818,7 +4756,7 @@ def sim_ivf_pq_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # retrain on CURRENT vectors; roll v2 through the store
         pre_top, extop, (_, CT1u) = _overlap(
-            _pre, _ext, lambda: _pq_refined_codebook(union, cache_key=None)
+            _pre, _ext, lambda: _pq_refined_codebook(union)
         )
         v2 = os.path.join(root, "v2")
         tmp = store.stage(v2)
@@ -5038,7 +4976,7 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
 
     emb = load_table(spark, sf_dir, "embeddings")
     C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _pq_refined_codebook(emb, cache_key=sf_dir)
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
 
     base = write_ivf_pq_index(spark, sf_dir, coarse=(C, cn))
@@ -5153,7 +5091,7 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
             return C1, cn1, probes2, n_reassigned
 
         pre_top, extop, (C1, cn1, probes2, n_reassigned), (_, CT1u) = _overlap(
-            _pre, _ext, _coarse, lambda: _pq_refined_codebook(union, cache_key=None)
+            _pre, _ext, _coarse, lambda: _pq_refined_codebook(union)
         )
 
         # re-encode EVERYTHING under (new coarse, new codebook) and roll

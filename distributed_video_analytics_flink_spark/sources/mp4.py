@@ -372,6 +372,17 @@ def video_sample_ranges(trak: dict[str, Any]) -> Iterator[tuple[int, int]]:
             s += 1
 
 
+def mjpeg_sample_ranges(content: bytes) -> tuple[dict[str, Any], list[tuple[int, int]]]:
+    """(video trak, its sample ranges) for an MJPEG-carrying MP4. Non-MP4
+    input, a missing video track or sample table, or a non-MJPEG codec
+    raise Mp4Error."""
+    trak = _find_video_trak(content)
+    codec = trak.get("codec")
+    if codec not in MJPEG_SAMPLE_ENTRIES:
+        raise Mp4Error(f"unsupported codec {codec!r} (MJPEG sample entries only)")
+    return trak, list(video_sample_ranges(trak))
+
+
 def decode_mp4(
     content: bytes, max_frames: int | None = None
 ) -> tuple[dict[str, Any], Iterator[np.ndarray]]:
@@ -391,11 +402,7 @@ def decode_mp4(
         is_jpeg,
     )
 
-    trak = _find_video_trak(content)
-    codec = trak.get("codec")
-    if codec not in MJPEG_SAMPLE_ENTRIES:
-        raise Mp4Error(f"unsupported codec {codec!r} (MJPEG sample entries only)")
-    ranges = list(video_sample_ranges(trak))  # raises eagerly if tables absent
+    trak, ranges = mjpeg_sample_ranges(content)
     want_h = int(trak.get("height") or 0)
     want_w = int(trak.get("width") or 0)
 

@@ -113,21 +113,38 @@ def _resized(frames: Iterator[np.ndarray], rows: int, cols: int) -> Iterator[np.
         yield bgr
 
 
+_MAGIC = (
+    ("y4m", lambda b: b.startswith(Y4M_MAGIC)),
+    ("avi", is_avi),
+    ("png", lambda b: b.startswith(b"\x89PNG")),  # still or animated
+    ("gif", is_gif),
+    ("mp4", lambda b: len(b) >= 12 and b[4:8] == b"ftyp"),
+)
+
+
+def sniff_container(raw: bytes) -> str | None:
+    """The one magic-byte container test, shared by :func:`decode_frames`,
+    :func:`iter_chunk_rows` and :func:`video_container_metadata`: the
+    first ``_MAGIC`` kind whose test passes, or None for unrecognised
+    bytes."""
+    return next((kind for kind, test in _MAGIC if test(raw)), None)
+
+
 def decode_frames(
     raw: bytes, rows: int, cols: int, max_frames: int
 ) -> Iterator[np.ndarray]:
-    """The one container dispatch, shared by ``read_video_files`` and the
+    """The container decode, shared by ``read_video_files`` and the
     raw-bgr fallback of ``iter_chunk_rows``: (rows, cols, 3) BGR frames,
-    picked by content magic, not extension. Y4M, AVI (raw-DIB + MJPEG),
-    PNG stills, animated PNG, GIF (inter-frame compositing) and MJPEG-MP4
-    decode for real, then take the bicubic resize to the pipeline dims
-    when the container dims differ (VideoEventCreator.java:75's resize
-    step). PERMISSIVE throughout: a corrupt Y4M/AVI header yields no
-    frames; GIF and APNG share their strict-header/permissive-tail stance
-    with the ``format("gif")``/``format("apng")`` Data Sources
-    (``decode_*_permissive``); an MP4 whose video track is not MJPEG
-    (avc1/H.264 etc.) or does not parse, and any unrecognised bytes, fall
-    to the compressed-codec stub.
+    picked by :func:`sniff_container`, not by extension. Y4M, AVI
+    (raw-DIB + MJPEG), PNG stills, animated PNG, GIF (inter-frame
+    compositing) and MJPEG-MP4 decode for real, then take the bicubic
+    resize to the pipeline dims when the container dims differ
+    (VideoEventCreator.java:75's resize step). PERMISSIVE throughout: a
+    corrupt Y4M/AVI header yields no frames; GIF and APNG share their
+    strict-header/permissive-tail stance with the ``format("gif")``/
+    ``format("apng")`` Data Sources (``decode_*_permissive``); an MP4
+    whose video track is not MJPEG (avc1/H.264 etc.) or does not parse,
+    and any unrecognised bytes, fall to the compressed-codec stub.
 
     Header parses run HERE, eagerly, so the guards below see their errors;
     a lazy generator would defer the raise into the caller's iteration,
@@ -138,25 +155,26 @@ def decode_frames(
     )
     from distributed_video_analytics_flink_spark.sources.mp4 import Mp4Error, decode_mp4
 
-    if raw.startswith(Y4M_MAGIC):
+    kind = sniff_container(raw)
+    if kind == "y4m":
         try:
             _, frames = decode_y4m(raw, max_frames=max_frames)
         except Y4MError:
             return iter(())
-    elif is_avi(raw):
+    elif kind == "avi":
         try:
             _, frames = decode_avi(raw, max_frames=max_frames)
         except AviError:
             return iter(())  # corrupt header or unsupported stream
-    elif raw.startswith(b"\x89PNG"):
+    elif kind == "png":
         # acTL before IDAT means animated, else a single still frame
         if is_apng(raw):
             _, frames = decode_apng_permissive(raw, max_frames=max_frames)
         else:
             frames = _decode_png_still(raw)
-    elif is_gif(raw):
+    elif kind == "gif":
         _, frames = decode_gif_permissive(raw, max_frames=max_frames)
-    elif len(raw) >= 12 and raw[4:8] == b"ftyp":
+    elif kind == "mp4":
         try:
             _, frames = decode_mp4(raw, max_frames=max_frames)
         except Mp4Error:
@@ -242,18 +260,22 @@ def iter_chunk_rows(
     """One file's compressed-passthrough rows:
     ``(camId, ts_us, src_rows, src_cols, rows, cols, codec, chunk_bytes)``.
     MJPEG AVI/MP4 demux by pure offset math (codec='mjpeg', chunk = the
-    still-encoded JPEG); everything else decodes source-side through
-    :func:`decode_frames`, the dispatch ``read_video_files`` runs, and
-    emits codec='raw-bgr' pixels at the target dims. The single copy
-    shared by the binaryFile scan (:func:`read_video_chunks`) and the
-    ``videochunks`` Data Source (batch + streaming), so skip semantics
+    still-encoded JPEG); everything else decodes source-side as
+    :func:`decode_frames` does for ``read_video_files`` and emits
+    codec='raw-bgr' pixels at the target dims. Each container header is
+    parsed once: a raw-DIB AVI takes its frames from the same
+    ``decode_avi`` call, a non-MJPEG MP4 goes straight to the stub. The
+    single copy shared by the binaryFile scan (:func:`read_video_chunks`)
+    and the ``videochunks`` Data Source (batch + streaming), so skip semantics
     cannot drift between them."""
     from distributed_video_analytics_flink_spark.sources.avi import (
         _chunks as _avi_chunks,
     )
-    from distributed_video_analytics_flink_spark.sources.avi import parse_avi_header
     from distributed_video_analytics_flink_spark.sources.jpeg import is_jpeg
-    from distributed_video_analytics_flink_spark.sources.mp4 import Mp4Error
+    from distributed_video_analytics_flink_spark.sources.mp4 import (
+        Mp4Error,
+        mjpeg_sample_ranges,
+    )
 
     def _mjpeg_avi(hdr) -> Iterator[tuple[int, int, bytes]]:
         want = (b"%02ddb" % hdr.stream_id, b"%02ddc" % hdr.stream_id)
@@ -270,54 +292,42 @@ def iter_chunk_rows(
             yield hdr.height, hdr.width, raw[body : body + size]
             n += 1
 
-    def _mjpeg_mp4() -> Iterator[tuple[int, int, bytes]]:
-        from distributed_video_analytics_flink_spark.sources.mp4 import (
-            MJPEG_SAMPLE_ENTRIES,
-            _find_video_trak,
-            video_sample_ranges,
-        )
-
-        trak = _find_video_trak(raw)
-        if trak.get("codec") not in MJPEG_SAMPLE_ENTRIES:
-            raise Mp4Error(f"unsupported codec {trak.get('codec')!r}")
-        ranges = list(video_sample_ranges(trak))
+    def _mjpeg_mp4(trak, ranges) -> Iterator[tuple[int, int, bytes]]:
         sr = int(trak.get("height") or 0)
         sc = int(trak.get("width") or 0)
+        n = 0
+        for off, size in ranges:
+            if n >= max_frames:
+                return
+            if off + size > len(raw):
+                return  # truncated mdat ends the stream
+            if not is_jpeg(raw[off : off + 3]):
+                continue
+            yield sr, sc, raw[off : off + size]
+            n += 1
 
-        def gen() -> Iterator[tuple[int, int, bytes]]:
-            n = 0
-            for off, size in ranges:
-                if n >= max_frames:
-                    return
-                if off + size > len(raw):
-                    return  # truncated mdat ends the stream
-                if not is_jpeg(raw[off : off + 3]):
-                    continue
-                yield sr, sc, raw[off : off + size]
-                n += 1
-
-        return gen()
-
+    kind = sniff_container(raw)
     chunks: Iterator[tuple[int, int, bytes]] | None = None
-    codec = "mjpeg"
-    if is_avi(raw):
+    if kind == "avi":
         try:
-            hdr = parse_avi_header(raw)
+            hdr, frames = decode_avi(raw, max_frames=max_frames)
         except AviError:
             return  # corrupt header: no rows, no failure
         if hdr.codec == "mjpeg":
             chunks = _mjpeg_avi(hdr)
-    elif len(raw) >= 12 and raw[4:8] == b"ftyp":
+        else:
+            frames = _resized(frames, rows, cols)
+    elif kind == "mp4":
         try:
-            chunks = _mjpeg_mp4()
-        except Mp4Error:
-            chunks = None  # inter-frame codec: decode_frames' stub below
-    if chunks is None:
-        # non-compressed (or non-MJPEG) container: decode at the source,
-        # the read_video_files dispatch — these bytes ARE pixels
+            chunks = _mjpeg_mp4(*mjpeg_sample_ranges(raw))
+        except Mp4Error:  # decode_mp4 would raise the same: the stub
+            frames = _decode_frames_stub(raw, rows, cols, max_frames)
+    else:
+        frames = decode_frames(raw, rows, cols, max_frames)
+    codec = "mjpeg"
+    if chunks is None:  # decoded at the source: these bytes ARE pixels
         codec = "raw-bgr"
-        decoded = decode_frames(raw, rows, cols, max_frames)
-        chunks = ((rows, cols, f.tobytes()) for f in decoded)
+        chunks = ((rows, cols, f.tobytes()) for f in frames)
     for i, (sr, sc, body) in enumerate(chunks):
         yield (
             cam,
@@ -498,8 +508,44 @@ def video_container_metadata(
     it against the reference's own sample videos. Corrupt/unknown files
     yield null metadata columns, not task failures (PERMISSIVE, like the
     JSON source)."""
+    import struct
+
+    from distributed_video_analytics_flink_spark.sources.apng import (
+        ApngError,
+        is_apng,
+        probe_apng,
+    )
+    from distributed_video_analytics_flink_spark.sources.avi import probe_avi
+    from distributed_video_analytics_flink_spark.sources.gif import GifError, probe_gif
     from distributed_video_analytics_flink_spark.sources.mp4 import probe_mp4
     from distributed_video_analytics_flink_spark.sources.y4m import probe_y4m
+
+    # probe_mp4 never raises: it takes MP4s and every unrecognised file
+    probes = {
+        "y4m": (probe_y4m, Y4MError),
+        "avi": (probe_avi, AviError),
+        "gif": (probe_gif, GifError),
+        "apng": (probe_apng, ApngError),
+        None: (probe_mp4, ()),
+    }
+
+    def _meta(b: bytes) -> dict:
+        kind = sniff_container(b)
+        if kind == "png":
+            if len(b) < 24:
+                kind = None
+            elif is_apng(b):
+                kind = "apng"
+            else:
+                # still PNG: IHDR is always the first chunk
+                w, h = struct.unpack(">II", b[16:24])
+                meta = {"width": float(w), "height": float(h), "n_frames": 1}
+                return {**_null_meta(), **meta, "codec": "png"}
+        probe, err = probes.get(kind, probes[None])
+        try:
+            return probe(b)
+        except err:
+            return _null_meta()
 
     files = (
         spark.read.format("binaryFile")
@@ -513,74 +559,9 @@ def video_container_metadata(
             rows = []
             for p, content in zip(pdf["path"], pdf["content"]):
                 b = bytes(content)
-                if b.startswith(Y4M_MAGIC):
-                    try:
-                        meta = probe_y4m(b)
-                    except Y4MError:
-                        meta = _null_meta()
-                elif is_avi(b):
-                    from distributed_video_analytics_flink_spark.sources.avi import probe_avi
-
-                    try:
-                        meta = probe_avi(b)
-                    except AviError:
-                        meta = _null_meta()
-                elif is_gif(b):
-                    from distributed_video_analytics_flink_spark.sources.gif import (
-                        GifError,
-                        probe_gif,
-                    )
-
-                    try:
-                        meta = probe_gif(b)
-                    except GifError:
-                        meta = _null_meta()
-                elif b.startswith(b"\x89PNG") and len(b) >= 24:
-                    from distributed_video_analytics_flink_spark.sources.apng import (
-                        ApngError,
-                        is_apng,
-                        probe_apng,
-                    )
-
-                    if is_apng(b):
-                        try:
-                            meta = probe_apng(b)
-                        except ApngError:
-                            meta = _null_meta()
-                    else:
-                        # still PNG: IHDR is always the first chunk
-                        import struct as _struct
-
-                        w, h = _struct.unpack(">II", b[16:24])
-                        meta = {
-                            "duration_s": None,
-                            "width": float(w),
-                            "height": float(h),
-                            "n_frames": 1,
-                            "codec": "png",
-                            "fps": None,
-                        }
-                else:
-                    meta = probe_mp4(b)
-                rows.append(
-                    (
-                        os.path.splitext(os.path.basename(p))[0],
-                        p,
-                        len(b),
-                        meta["duration_s"],
-                        meta["width"],
-                        meta["height"],
-                        meta["n_frames"],
-                        meta["codec"],
-                        meta["fps"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "camId", "path", "size_bytes", "duration_s",
-                    "width", "height", "n_frames", "codec", "fps",
-                ],
-            )
+                meta = _meta(b)
+                cam = os.path.splitext(os.path.basename(p))[0]
+                rows.append((cam, p, len(b), *(meta[k] for k in _META_KEYS)))
+            yield pd.DataFrame(rows, columns=["camId", "path", "size_bytes", *_META_KEYS])
 
     return files.mapInPandas(_probe, VIDEO_META_SCHEMA)

@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Capture `.explain("formatted")` for named registry queries into
-plans/r17/<name>_<tag>.txt (the optimization round's evidence files).
+plans/<round>/<name>_<tag>.txt (an optimization round's evidence files).
 
-Usage: python scripts/r17_capture_plan.py <tag> <query> [<query> ...]
+Usage: python scripts/capture_plan.py <round> <tag> <query> [<query> ...]
 
-tag is normally "before" or "after". The plan captured is the final
-DataFrame's plan as built by the query function at $SPARK_GRAFT_SF_DIR
-(default sf0.1) — for lifecycle queries whose fn() executes intermediate
-actions, those run too (the final frame's plan is still the serving plan).
+round names the plans/ subdirectory (e.g. "r18"); tag is normally
+"before" or "after". The plan captured is the final DataFrame's plan as
+built by the query function at $SPARK_GRAFT_SF_DIR (default sf0.1) — for
+lifecycle queries whose fn() executes intermediate actions, those run too
+(the final frame's plan is still the serving plan).
 """
 
 from __future__ import annotations
@@ -21,15 +22,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_, tag, *names = sys.argv[1:]
     from distributed_video_analytics_flink_spark import operators as ops
     from distributed_video_analytics_flink_spark.plans import formatted_plan
     from distributed_video_analytics_flink_spark.session import get_spark
 
-    spark = get_spark(app_name="r17-plan-capture")
+    spark = get_spark(app_name=f"{round_}-plan-capture")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:

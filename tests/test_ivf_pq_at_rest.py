@@ -29,6 +29,13 @@ from distributed_video_analytics_flink_spark.sources.tables import load_table
 SF = "/root/testdata/sf0.001"
 
 
+def _index_keys(path):
+    """The session memo's entries for the index published at ``path``."""
+    from distributed_video_analytics_flink_spark.memo import _ENTRIES
+
+    return [k for k in _ENTRIES if k[1] == "ivf_pq_index" and k[2] == path]
+
+
 def test_at_rest_serving_prunes_to_probed_cells(spark, tmp_path):
     path = write_ivf_pq_index(spark, SF, str(tmp_path / "index"))
     table = spark.read.parquet(path)
@@ -80,15 +87,19 @@ def test_index_publish_is_atomic_and_race_tolerant(spark, tmp_path):
     build."""
     import os
 
-    from distributed_video_analytics_flink_spark.operators import similarity as S
+    from distributed_video_analytics_flink_spark import memo as M
 
     path = str(tmp_path / "idx")
     write_ivf_pq_index(spark, SF, path)
+    assert len(_index_keys(path)) == 1
     files = set(os.listdir(path))
-    # a second process misses the per-process memo and builds again onto
-    # the same published path: simulate by clearing the memo
-    S._IVF_PQ_INDEX_BUILT.discard(path)
+    # a second process misses the session memo and builds again onto
+    # the same published path: simulate by forgetting the memo entry
+    for k in _index_keys(path):
+        del M._ENTRIES[k]
+    misses = M.memo_stats()["ivf_pq_index"]["misses"]
     assert write_ivf_pq_index(spark, SF, path) == path
+    assert M.memo_stats()["ivf_pq_index"]["misses"] == misses + 1  # rebuilt
     assert set(os.listdir(path)) == files  # existing index kept intact
     leftovers = [d for d in os.listdir(tmp_path) if d.startswith("idx.build-")]
     assert leftovers == []  # losing build cleaned up
@@ -140,16 +151,14 @@ def test_race_loser_rejects_incomplete_existing_index(spark, tmp_path, monkeypat
     loser refuses to serve from it instead of silently trusting it."""
     import os
 
-    from distributed_video_analytics_flink_spark.operators import similarity as S
-
     path = str(tmp_path / "idx")
     os.makedirs(path)  # pre-existing, incomplete: no _SUCCESS inside
     monkeypatch.setattr(
         os, "rename", lambda *a, **k: (_ for _ in ()).throw(OSError("race"))
     )
     with pytest.raises(RuntimeError, match="ownership/completeness"):
-        S._build_ivf_pq_index(spark, SF, path, None)
-    assert path not in S._IVF_PQ_INDEX_BUILT
+        write_ivf_pq_index(spark, SF, path)
+    assert _index_keys(path) == []  # a failed build leaves no memo entry
 
 
 # ---------------------------------------------------------------------------

@@ -2,8 +2,9 @@
 IVF-PQ retrain legs run their independent bounded driver actions
 (pre-roll top-5, exact ground truth, coarse Lloyd chain, PQ retrain)
 from a small driver thread pool instead of sequentially. The overlap
-must be result-invisible: both modes produce identical rows, result
-order follows submission order, and a thunk's exception propagates."""
+must be result-invisible: the overlapped rows equal a sequential run of
+the same thunks, result order follows submission order, and a thunk's
+exception propagates."""
 
 from __future__ import annotations
 
@@ -24,13 +25,9 @@ def test_overlap_preserves_order_and_propagates_errors():
         S._overlap(lambda: 1, boom)
 
 
-def test_retrain_rows_identical_with_and_without_overlap(spark):
-    old = S._LIFECYCLE_OVERLAP
-    try:
-        S._LIFECYCLE_OVERLAP = False
-        seq = S.sim_ivf_pq_retrain_checked(spark, SF_DIR).collect()
-        S._LIFECYCLE_OVERLAP = True
-        ovl = S.sim_ivf_pq_retrain_checked(spark, SF_DIR).collect()
-    finally:
-        S._LIFECYCLE_OVERLAP = old
+def test_retrain_rows_identical_with_and_without_overlap(spark, monkeypatch):
+    ovl = S.sim_ivf_pq_retrain_checked(spark, SF_DIR).collect()
+    # the sequential reference: the same thunks, run one after another
+    monkeypatch.setattr(S, "_overlap", lambda *thunks: [t() for t in thunks])
+    seq = S.sim_ivf_pq_retrain_checked(spark, SF_DIR).collect()
     assert seq == ovl

@@ -120,61 +120,69 @@ def test_converged_edges_partitioned_once(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_knn_memo_bounded_and_stale_apps_evicted(spark, monkeypatch):
-    """r9 ADVICE: the shared k-NN frame memo must not grow without bound —
-    entries from dead applications are evicted on insert (their checkpoint
-    blocks died with the context) and at most _KNN_MEMO_MAX live entries
-    are kept, oldest first, so dropping the reference lets the
-    ContextCleaner reclaim the pinned localCheckpoint blocks."""
+def test_knn_memo_bounded_and_stale_apps_evicted(spark):
+    """r9 ADVICE: the shared k-NN frame memo (memo.py) must not grow
+    without bound — entries from dead applications are evicted on insert
+    (their checkpoint blocks died with the context) and each name keeps
+    at most _MAX_PER_NAME live entries, least recently used first, so
+    dropping the reference lets the ContextCleaner reclaim the pinned
+    localCheckpoint blocks."""
+    import distributed_video_analytics_flink_spark.memo as M
     import distributed_video_analytics_flink_spark.operators.similarity as S
 
     app = spark.sparkContext.applicationId
-    saved = dict(S._KNN_EDGE_MEMO)
+    saved = dict(M._ENTRIES)
     try:
-        S._KNN_EDGE_MEMO.clear()
+        M._ENTRIES.clear()
         dummy = spark.range(1)
-        S._KNN_EDGE_MEMO[("dead-app", "sfX")] = dummy  # stale application
-        S._KNN_EDGE_MEMO[(app, "old1")] = dummy
-        S._KNN_EDGE_MEMO[(app, "old2")] = dummy
-        monkeypatch.setattr(S, "_KNN_MEMO_MAX", 2)
+        M._ENTRIES[("dead-app", "knn_frame", "sfX", "fp")] = dummy  # stale app
+        for i in range(M._MAX_PER_NAME):
+            M._ENTRIES[(app, "knn_frame", f"old{i}", "fp")] = dummy
+        M._ENTRIES[(app, "other", "k", "fp")] = dummy  # another name
         df = S._shared_knn_frame(spark, SF)
-        assert ("dead-app", "sfX") not in S._KNN_EDGE_MEMO
-        assert len(S._KNN_EDGE_MEMO) <= 2
-        assert S._KNN_EDGE_MEMO[(app, SF)] is df
+        assert not [k for k in M._ENTRIES if k[0] == "dead-app"]
+        knn = [k for k in M._ENTRIES if k[1] == "knn_frame"]
+        assert len(knn) == M._MAX_PER_NAME
+        assert (app, "knn_frame", "old0", "fp") not in M._ENTRIES  # LRU went
+        assert (app, "other", "k", "fp") in M._ENTRIES  # bound is per name
+        (key,) = [k for k in M._ENTRIES if k[1] == "knn_frame" and k[2] == SF]
+        assert M._ENTRIES[key] is df
         # hit path: same handle back, no growth, no eviction churn
-        n = len(S._KNN_EDGE_MEMO)
+        n = len(M._ENTRIES)
         assert S._shared_knn_frame(spark, SF) is df
-        assert len(S._KNN_EDGE_MEMO) == n
+        assert len(M._ENTRIES) == n
         # LRU, not insertion-FIFO (r10 review): a hit refreshes the
         # entry's position, so the just-used frame is evicted LAST
-        S._KNN_EDGE_MEMO.clear()
-        S._KNN_EDGE_MEMO[(app, "oldA")] = dummy
-        S._KNN_EDGE_MEMO[(app, SF)] = df
-        S._KNN_EDGE_MEMO[(app, "oldB")] = dummy  # SF now middle-aged
+        M._ENTRIES.clear()
+        M._ENTRIES[(app, "knn_frame", "oldA", "fp")] = dummy
+        M._ENTRIES[key] = df
+        M._ENTRIES[(app, "knn_frame", "oldB", "fp")] = dummy  # SF middle-aged
         assert S._shared_knn_frame(spark, SF) is df  # hit -> most recent
-        assert list(S._KNN_EDGE_MEMO)[-1] == (app, SF)
-        assert next(iter(S._KNN_EDGE_MEMO)) == (app, "oldA")  # LRU head
+        assert list(M._ENTRIES)[-1] == key
+        assert next(iter(M._ENTRIES)) == (app, "knn_frame", "oldA", "fp")
     finally:
-        S._KNN_EDGE_MEMO.clear()
-        S._KNN_EDGE_MEMO.update(saved)
+        M._ENTRIES.clear()
+        M._ENTRIES.update(saved)
 
 
 def test_knn_memo_stats_observable(spark):
     """r10 VERDICT #4: the memo exposes hit/miss counters so bench.py can
     mark which graph-family timings rode a warm memo (memo_cached in
     BENCH_DETAIL) instead of relying on the SCALE.md prose caveat."""
+    import distributed_video_analytics_flink_spark.memo as M
     import distributed_video_analytics_flink_spark.operators.similarity as S
 
-    app = spark.sparkContext.applicationId
-    saved = dict(S._KNN_EDGE_MEMO)
+    zero = {"hits": 0, "misses": 0}
+    saved = dict(M._ENTRIES)
     try:
-        S._KNN_EDGE_MEMO.clear()
-        s0 = dict(S._KNN_MEMO_STATS)
+        M._ENTRIES.clear()
+        s0 = M.memo_stats().get("knn_frame", zero)
         df = S._shared_knn_frame(spark, SF)  # cold: a miss
-        assert S._KNN_MEMO_STATS["misses"] == s0["misses"] + 1
-        assert S._KNN_MEMO_STATS["hits"] == s0["hits"]
+        s1 = M.memo_stats()["knn_frame"]
+        assert s1 == {"hits": s0["hits"], "misses": s0["misses"] + 1}
         assert S._shared_knn_frame(spark, SF) is df  # warm: a hit
-        assert S._KNN_MEMO_STATS["hits"] == s0["hits"] + 1
+        s2 = M.memo_stats()["knn_frame"]
+        assert s2 == {"hits": s0["hits"] + 1, "misses": s0["misses"] + 1}
     finally:
-        S._KNN_EDGE_MEMO.clear()
-        S._KNN_EDGE_MEMO.update(saved)
+        M._ENTRIES.clear()
+        M._ENTRIES.update(saved)
