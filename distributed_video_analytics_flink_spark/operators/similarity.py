@@ -19,27 +19,44 @@ interpreted, not codegen'd — fine for one dot per row (sim_cosine_topk),
 ruinous for many dots per row. The multi-comparison operators therefore run
 their array math as Arrow-batched numpy (pandas UDF / applyInPandas) with a
 quantization that replicates both engines' round-half-away-from-zero
-exactly; parity stays bit-for-bit.
+exactly; parity stays bit-for-bit. That numpy is written once, in the
+vector kernel ``functions/vectors.py`` (quantized dot/norm, coarse-cell
+assignment, PQ encode, ADC); every UDF here is a short composition of it.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_video_analytics_flink_spark.functions.vectors import (
+    _Q,
+    adc_lookup,
+    adc_table,
+    as_matrix,
+    coarse_assign,
+    cosine_q,
+    dot_q,
+    dots_q,
+    pq_encode,
+    self_norm_q,
+    sqrt_norm_q,
+)
 from distributed_video_analytics_flink_spark.memo import fingerprint, memo
 from distributed_video_analytics_flink_spark.operators.registry import query
 from distributed_video_analytics_flink_spark.sinks.index_store import (
+    DEFAULT_GRACE_S,
     DEFAULT_INDEX_STORE,
     PublishConflict,
+    _expired,
+    _remove_tree,
 )
 from distributed_video_analytics_flink_spark.sources.tables import load_table
-
-_Q = 1e12  # quantization scale for integer dot products
 
 
 def _dot_q(a: str, b: str) -> Column:
@@ -207,8 +224,8 @@ def _cell_frame(key: tuple, pdf: pd.DataFrame):
     pdf = pdf.sort_values("vec_id")
     ids = pdf["vec_id"].to_numpy()
     label = int(pdf["label"].iloc[0])
-    V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    sqrt_norms = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
+    V = as_matrix(pdf["embedding"])
+    sqrt_norms = sqrt_norm_q(V)
     if ci == cj:  # one bucket: intra-bucket scoring
         a_idx = c_idx = np.arange(n)
     else:  # two buckets: cross-bucket only (intra handled on diagonals)
@@ -251,9 +268,7 @@ def neardup_pairs_exact(
         chunk = max(1, (64 << 20) // max(1, len(c_idx) * V.shape[1] * 8))
         for i0 in range(0, len(a_idx), chunk):
             sel = a_idx[i0 : i0 + chunk]
-            A = V[sel]
-            dots = _np_q(A[:, None, :] * C[None, :, :] * _Q).sum(axis=2)
-            cos = dots / (sqrt_norms[sel, None] * cn[None, :])
+            cos = cosine_q(V[sel], sqrt_norms[sel], C, cn)
             keep = cos >= threshold  # False for NaN: degenerates drop out
             if diag:
                 keep &= ids[sel, None] < cid[None, :]
@@ -279,12 +294,27 @@ def neardup_pairs_exact(
 _N_PLANES = 8
 
 
-def _np_q(t):
-    """Numpy twin of the engines' round-half-away-from-zero quantization
-    (see sim_neardup_pairs docstring for the exactness argument)."""
-    import numpy as np
+def _query_vector(emb: DataFrame) -> np.ndarray:
+    """The query embedding (vec_id 0) as a float64 vector: a
+    pushdown-filtered single-row scan."""
+    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]
+    return np.asarray(row["embedding"], dtype=np.float64)
 
-    return (np.floor(np.abs(t) + 0.5) * np.sign(t)).astype(np.int64)
+
+def _seed_matrix(emb: DataFrame, hi: int, lo: int | None = None) -> np.ndarray:
+    """Embeddings ``lo..hi`` (every id up to ``hi`` when ``lo`` is None)
+    in vec_id order as an (n, d) float64 matrix: the deterministic seeds
+    (coarse centroids 0..9, PQ codebook 1.._PQ_K, LSH planes 1..n), a
+    tiny driver-collected constant shipped in UDF closures. The rows are
+    ordered on the driver: a Spark-side sort of a handful of rows would
+    cost two range-partition sampling jobs per collect."""
+    ids = F.col("vec_id")
+    rows = (
+        emb.filter(ids <= hi if lo is None else ids.between(lo, hi))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return as_matrix([r["embedding"] for r in sorted(rows, key=lambda r: r["vec_id"])])
 
 
 def _dots_q_udf(ref_vectors):
@@ -294,14 +324,11 @@ def _dots_q_udf(ref_vectors):
     higher-order lambdas (which Catalyst cannot codegen). Returns
     array<long> of len(ref_vectors) per row, bit-identical to the SQL
     aggregate(zip_with(...)) form."""
-    R = np.asarray([np.asarray(v, dtype=np.float64) for v in ref_vectors])
+    R = as_matrix(ref_vectors)
 
     @F.pandas_udf("array<long>")
     def _dots(emb: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in emb])
-        # per-term quantize THEN sum, matching the SQL form exactly
-        dots = _np_q(V[:, None, :] * R[None, :, :] * _Q).sum(axis=2)
-        return pd.Series(list(dots))
+        return pd.Series(list(dots_q(as_matrix(emb), R)))
 
     return _dots
 
@@ -312,10 +339,24 @@ def _self_norm_q_udf():
 
     @F.pandas_udf("long")
     def _norm(emb: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in emb])
-        return pd.Series(_np_q(V * V * _Q).sum(axis=1))
+        return pd.Series(self_norm_q(as_matrix(emb)))
 
     return _norm
+
+
+def _coarse_assigner(Cmat: np.ndarray, norms: np.ndarray):
+    """Pandas UDF assigning each embedding its coarse cell (argmax
+    quantized cosine, first-max tie = lowest cent_id) for a GIVEN
+    centroid tensor and its :func:`sqrt_norm_q` norms — one assignment
+    arithmetic for the IVF cells, the seeded Lloyd E-step and both
+    tensor sets of the full-retrain roll."""
+
+    @F.pandas_udf("int")
+    def _assign(embs: pd.Series) -> pd.Series:
+        V = as_matrix(embs)
+        return pd.Series(coarse_assign(V, sqrt_norm_q(V), Cmat, norms)[0])
+
+    return _assign
 
 
 @query(
@@ -353,60 +394,50 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized in one Arrow batch per partition (planes are a tiny driver-
     collected matrix shipped in the UDF closure — the numpy analog of a
     broadcast join) instead of interpreted per-row lambdas; quantization
-    keeps values bit-identical to the SQL oracle."""
-    import numpy as np
+    keeps values bit-identical to the SQL oracle.
 
+    The query vector's bucket/norm are computed driver-side with the SAME
+    quantization as the distributed path, so the plane dots run over
+    every vector once, not twice."""
     emb = load_table(spark, sf_dir, "embeddings")
-    plane_rows = (
-        emb.filter(F.col("vec_id").between(1, _N_PLANES))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    planes = [r["embedding"] for r in plane_rows]
-    dots = _dots_q_udf(planes)
-
-    # The query vector's bucket/norm are computed driver-side with the SAME
-    # quantization as the distributed path (previously this collected from
-    # the full bucket pipeline, running the plane dot products over every
-    # vector twice — one extra full pass over the table at 100 TB). The
-    # vec_id = 0 lookup is a pushdown-filtered single-row scan.
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    R = np.asarray([np.asarray(v, dtype=np.float64) for v in planes])
-    qdots = _np_q(qv[None, :] * R * _Q).sum(axis=1)
+    planes, qv, qdots = _lsh_planes_and_query(emb)
     qbucket = int(sum((1 << i) for i in range(_N_PLANES) if qdots[i] > 0))
-    qnorm = float(_np_q(qv * qv * _Q).sum())
-
-    bucket = sum(
-        F.when(F.col("ds")[i] > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(_N_PLANES)
-    )
-    norm = _self_norm_q_udf()
-    buckets = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        dots("embedding").alias("ds"),
-        norm("embedding").alias("nq"),
-    ).select("vec_id", "label", "embedding", "nq", bucket.alias("bucket"))
-
-    qdot = _dots_q_udf([qv])
     return (
-        buckets.filter((F.col("vec_id") != 0) & (F.col("bucket") == F.lit(int(qbucket))))
-        .select(
-            "vec_id",
-            "label",
-            (
-                qdot("embedding")[0]
-                / (F.sqrt(F.col("nq").cast("double")) * F.lit(float(np.sqrt(qnorm))))
-            ).alias("cosine"),
-        )
+        _lsh_scored(emb, planes, qv)
+        .filter((F.col("vec_id") != 0) & (F.col("bucket") == F.lit(int(qbucket))))
+        .select("vec_id", "label", "cosine")
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
     )
+
+
+def _lsh_planes_and_query(emb: DataFrame):
+    """(planes, qv, qdots): the deterministic hyperplanes (embeddings
+    1.._N_PLANES), the query vector and its quantized plane dots — the
+    driver-side constants the LSH serving variants share."""
+    planes = _seed_matrix(emb, _N_PLANES, lo=1)
+    qv = _query_vector(emb)
+    return planes, qv, dot_q(planes, qv)
+
+
+def _lsh_scored(emb: DataFrame, planes: np.ndarray, qv: np.ndarray) -> DataFrame:
+    """(vec_id, label, cosine, bucket): every vector's sign-bucket over
+    ``planes`` and its quantized cosine to the query, in one projection
+    (plane dots, self-norm and query dot are Arrow-batched UDFs)."""
+    bucket = sum(
+        F.when(F.col("ds")[i] > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        for i in range(len(planes))
+    )
+    qn = float(sqrt_norm_q(qv))
+    return emb.select(
+        "vec_id",
+        "label",
+        _dots_q_udf(planes)("embedding").alias("ds"),
+        (
+            _dots_q_udf([qv])("embedding")[0]
+            / (F.sqrt(_self_norm_q_udf()("embedding").cast("double")) * F.lit(qn))
+        ).alias("cosine"),
+    ).select("vec_id", "label", "cosine", bucket.alias("bucket"))
 
 
 @query(
@@ -460,21 +491,10 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_ivf_at_rest.py pins the pruning on real parquet);
     sim_ivf_cells aggregates it into the cell histogram."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id").select("embedding").collect()
+    C, cn = _fixture_coarse(spark, sf_dir, emb)[:2]
+    return emb.select(
+        "vec_id", "embedding", _coarse_assigner(C, cn)("embedding").alias("cent_id")
     )
-    C = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    cnorm_sqrt = np.sqrt(_np_q(C * C * _Q).sum(axis=1).astype(np.float64))
-
-    @F.pandas_udf("int")
-    def _nearest(embs: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        dots = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2)
-        vnorm_sqrt = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        cos = dots / (vnorm_sqrt[:, None] * cnorm_sqrt[None, :])
-        return pd.Series(np.argmax(cos, axis=1).astype(np.int32))
-
-    return emb.select("vec_id", "embedding", _nearest("embedding").alias("cent_id"))
 
 
 _N_PROBE = 3
@@ -538,42 +558,30 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the IVF analog of partition pruning) and the top-5 is
     TakeOrderedAndProject — per-partition heaps, no global sort."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id").select("embedding").collect()
-    )
-    C = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    cn = np.sqrt(_np_q(C * C * _Q).sum(axis=1).astype(np.float64))
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    qn = float(np.sqrt(_np_q(qv * qv * _Q).sum()))
-
-    probe_cos = _np_q(C * qv[None, :] * _Q).sum(axis=1) / (cn * qn)
-    # lexsort is ascending; negate cosine for DESC, cent_id asc breaks ties
-    order = np.lexsort((np.arange(len(C)), -probe_cos))
-    probes = [int(i) for i in order[:_N_PROBE]]
-
-    @F.pandas_udf("struct<cent_id: int, cosine: double>")
-    def _assign_and_score(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        ccos = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2) / (
-            vn[:, None] * cn[None, :]
-        )
-        qcos = _np_q(V * qv[None, :] * _Q).sum(axis=1) / (vn * qn)
-        return pd.DataFrame(
-            {"cent_id": np.argmax(ccos, axis=1).astype(np.int32), "cosine": qcos}
-        )
-
+    C, cn, qv, qn, probes = _fixture_coarse(spark, sf_dir, emb)
     return (
         emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", "label", _assign_and_score("embedding").alias("s"))
+        .select("vec_id", "label", _cell_and_cosine(C, cn, qv, qn).alias("s"))
         .filter(F.col("s.cent_id").isin(probes))
         .select("vec_id", "label", F.col("s.cosine").alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
     )
+
+
+def _cell_and_cosine(C, cn, qv, qn) -> Column:
+    """struct<cent_id, cosine> of the embedding column: each vector's
+    coarse cell and its quantized cosine to the query, from ONE Arrow
+    pass (the scored scan of sim_ivf_topk and sim_ivf_recall_checked)."""
+
+    @F.pandas_udf("struct<cent_id: int, cosine: double>")
+    def _assign_and_score(embs: pd.Series) -> pd.DataFrame:
+        V = as_matrix(embs)
+        vn = sqrt_norm_q(V)
+        cell = coarse_assign(V, vn, C, cn)[0]
+        return pd.DataFrame({"cent_id": cell, "cosine": dot_q(V, qv) / (vn * qn)})
+
+    return _assign_and_score("embedding")
 
 
 @query(
@@ -757,8 +765,7 @@ def label_knn_exact(emb: DataFrame, n_buckets: int, k: int = 3) -> DataFrame:
             chunk = max(1, (64 << 20) // max(1, len(cand_idx) * V.shape[1] * 8))
             for i0 in range(0, len(q_idx), chunk):
                 sel = q_idx[i0 : i0 + chunk]
-                dots = _np_q(V[sel][:, None, :] * C[None, :, :] * _Q).sum(axis=2)
-                cos = dots / (sqrt_norms[sel, None] * cn[None, :])
+                cos = cosine_q(V[sel], sqrt_norms[sel], C, cn)
                 _select(cos, sel, cid, kk, diag_offset=i0 if diag_chunks else None)
 
         if diag:
@@ -773,10 +780,7 @@ def label_knn_exact(emb: DataFrame, n_buckets: int, k: int = 3) -> DataFrame:
                 chunk = max(1, (64 << 20) // max(1, nc * V.shape[1] * 8))
                 for i0 in range(0, na, chunk):
                     sel = a_idx[i0 : i0 + chunk]
-                    dots = _np_q(V[sel][:, None, :] * C[None, :, :] * _Q).sum(axis=2)
-                    cos[i0 : i0 + len(sel)] = dots / (
-                        sqrt_norms[sel, None] * cn[None, :]
-                    )
+                    cos[i0 : i0 + len(sel)] = cosine_q(V[sel], sqrt_norms[sel], C, cn)
                 _select(cos, a_idx, ids[c_idx], min(k, nc))
                 _select(cos.T, c_idx, ids[a_idx], min(k, na))
             else:  # pathological cell (n_buckets set far too low): two-pass
@@ -841,9 +845,6 @@ def knn_bucketed(emb: DataFrame, planes: list, k: int = 3) -> DataFrame:
     the final lexsort on (cosine DESC, neighbor_id ASC) over that small
     candidate set reproduces the oracle's deterministic tie-break exactly.
     """
-    import numpy as np
-    import pandas as pd
-
     bucketed = _with_bucket_key(emb, planes)
 
     def _block_knn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -864,15 +865,14 @@ def knn_bucketed(emb: DataFrame, planes: list, k: int = 3) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         label = int(pdf["label"].iloc[0])
         bkt = int(pdf["bucket"].iloc[0])
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-        sqrt_norms = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
+        V = as_matrix(pdf["embedding"])
+        sqrt_norms = sqrt_norm_q(V)
         out = []
         kk = min(k, n - 1)
         chunk = max(1, (64 << 20) // max(1, n * V.shape[1] * 8))
         for i0 in range(0, n, chunk):
             A = V[i0 : i0 + chunk]
-            dots_blk = _np_q(A[:, None, :] * V[None, :, :] * _Q).sum(axis=2)
-            cos = dots_blk / (sqrt_norms[i0 : i0 + chunk, None] * sqrt_norms[None, :])
+            cos = cosine_q(A, sqrt_norms[i0 : i0 + chunk], V, sqrt_norms)
             for li in range(A.shape[0]):
                 gi = i0 + li
                 c = cos[li].copy()
@@ -913,9 +913,6 @@ def neardup_pairs_bucketed(emb: DataFrame, planes: list, threshold: float = 0.35
     land in the same bucket; raise the plane count with corpus size and/or
     union several independent plane sets to recover recall (each set is one
     more pass of this same bounded shape)."""
-    import numpy as np
-    import pandas as pd
-
     bucketed = _with_bucket_key(emb, planes)
 
     def _block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -935,14 +932,13 @@ def neardup_pairs_bucketed(emb: DataFrame, planes: list, threshold: float = 0.35
         ids = pdf["vec_id"].to_numpy()
         label = int(pdf["label"].iloc[0])
         bkt = int(pdf["bucket"].iloc[0])
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-        sqrt_norms = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
+        V = as_matrix(pdf["embedding"])
+        sqrt_norms = sqrt_norm_q(V)
         out = []
         chunk = max(1, (64 << 20) // max(1, n * V.shape[1] * 8))
         for i0 in range(0, n, chunk):
             A = V[i0 : i0 + chunk]
-            dots_blk = _np_q(A[:, None, :] * V[None, :, :] * _Q).sum(axis=2)
-            cos = dots_blk / (sqrt_norms[i0 : i0 + chunk, None] * sqrt_norms[None, :])
+            cos = cosine_q(A, sqrt_norms[i0 : i0 + chunk], V, sqrt_norms)
             ii, jj = np.nonzero(
                 (cos >= threshold) & (ids[i0 : i0 + chunk, None] < ids[None, :])
             )
@@ -1007,20 +1003,7 @@ def sim_knn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (itself skew-bounded via pair-cell blocking, at a B-fold replication
     cost this variant avoids)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    return knn_bucketed(emb, _load_knn_planes(spark, sf_dir), k=3)
-
-
-def _load_knn_planes(spark: SparkSession, sf_dir: str, n: int = _KNN_BUCKET_PLANES) -> list:
-    """The deterministic hyperplane set shared by every bucketed block key:
-    embeddings 1..n (same convention as sim_ann_lsh's plane choice)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.filter(F.col("vec_id").between(1, n))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    return [r["embedding"] for r in rows]
+    return knn_bucketed(emb, _seed_matrix(emb, _KNN_BUCKET_PLANES, lo=1), k=3)
 
 
 def _duck_bucketed_pairs_sql(lo: int, hi: int, suffix: str = "") -> str:
@@ -1078,7 +1061,8 @@ def sim_neardup_pairs_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant is measured against (itself skew-bounded via pair-cell
     blocking, at a B-fold replication cost this variant avoids)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    return neardup_pairs_bucketed(emb, _load_knn_planes(spark, sf_dir), threshold=0.35)
+    planes = _seed_matrix(emb, _KNN_BUCKET_PLANES, lo=1)
+    return neardup_pairs_bucketed(emb, planes, threshold=0.35)
 
 
 @query(
@@ -1109,7 +1093,7 @@ def sim_neardup_pairs_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine) edge tuples, never embeddings. tests/test_neardup_bucketed.py
     pins multiband ⊇ each single set."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    planes = _load_knn_planes(spark, sf_dir, n=4)
+    planes = _seed_matrix(emb, 4, lo=1)
     cols = ["vec_a", "vec_b", "label", "cosine"]
     p1 = neardup_pairs_bucketed(emb, planes[0:2], threshold=0.35).select(cols)
     p2 = neardup_pairs_bucketed(emb, planes[2:4], threshold=0.35).select(cols)
@@ -1293,7 +1277,7 @@ _KMEANS_ASSIGN_DUCK = f"""{_DUCK_LLOYD_CTES},
     )"""
 
 
-def _lloyd_round(emb: DataFrame):
+def _lloyd_round(spark: SparkSession, sf_dir: str, emb: DataFrame):
     """One exact-integer Lloyd round (E-step to the deterministic seeds,
     distributed M-step), factored out of sim_kmeans_lloyd so the
     k-means-anchored curation passes anchor on the SAME iterated
@@ -1303,19 +1287,10 @@ def _lloyd_round(emb: DataFrame):
     matrix (rows ordered by ascending surviving cell id), the surviving
     cell ids, and the centroids' quantized norms. The centroid matrix is
     driver-collected — a legitimate tiny constant (K x dim), the LSH-
-    planes discipline; every per-vector pass stays distributed."""
-    seed_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id").select("embedding").collect()
-    )
-    C0 = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows])
-    c0_norm = np.sqrt(_np_q(C0 * C0 * _Q).sum(axis=1).astype(np.float64))
-
-    @F.pandas_udf("int")
-    def _assign0(embs: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        dots = _np_q(V[:, None, :] * C0[None, :, :] * _Q).sum(axis=2)
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        return pd.Series(np.argmax(dots / (vn[:, None] * c0_norm[None, :]), axis=1).astype(np.int32))
+    planes discipline; every per-vector pass stays distributed. The
+    seeds are the fixture's coarse centroids (the IVF prelude's memo)."""
+    C0, c0_norm = _fixture_coarse(spark, sf_dir, emb)[:2]
+    _assign0 = _coarse_assigner(C0, c0_norm)
 
     # round-1 assignment feeds both the M-step and the caller's migration
     # count — compute it once (lazy local checkpoint, dedup.py's
@@ -1338,9 +1313,22 @@ def _lloyd_round(emb: DataFrame):
     idx = {c: i for i, c in enumerate(cells)}
     for r in mstep:
         C1[idx[r["cell1"]], r["pos"]] = r["sq"] / 1e6 / r["n"]
-    c1_norm = np.sqrt(_np_q(C1 * C1 * _Q).sum(axis=1).astype(np.float64))
     cell_ids = np.asarray(cells, dtype=np.int32)
-    return assigned, C1, cell_ids, c1_norm
+    return assigned, C1, cell_ids, sqrt_norm_q(C1)
+
+
+def _lloyd_assigner(C1: np.ndarray, cell_ids: np.ndarray, c1_norm: np.ndarray):
+    """Pandas UDF struct<cent_id, ccos>: each embedding's cell under the
+    UPDATED centroids of :func:`_lloyd_round` (first max = smallest
+    surviving cell id) and its winning quantized cosine."""
+
+    @F.pandas_udf("struct<cent_id: int, ccos: double>")
+    def _assign_score(embs: pd.Series) -> pd.DataFrame:
+        V = as_matrix(embs)
+        best, ccos = coarse_assign(V, sqrt_norm_q(V), C1, c1_norm)
+        return pd.DataFrame({"cent_id": cell_ids[best], "ccos": ccos})
+
+    return _assign_score
 
 
 @query(
@@ -1382,18 +1370,10 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     additional Lloyd round repeats the same two shuffles (assignment
     groupBy + M-step groupBy) — rounds compose linearly, nothing grows."""
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned, C1, cell_ids, c1_norm = _lloyd_round(emb)
-
-    @F.pandas_udf("int")
-    def _assign1(embs: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        dots = _np_q(V[:, None, :] * C1[None, :, :] * _Q).sum(axis=2)
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        best = np.argmax(dots / (vn[:, None] * c1_norm[None, :]), axis=1)
-        return pd.Series(cell_ids[best])
-
+    assigned, C1, cell_ids, c1_norm = _lloyd_round(spark, sf_dir, emb)
+    assign1 = _lloyd_assigner(C1, cell_ids, c1_norm)
     return (
-        assigned.select("cell1", _assign1("embedding").alias("cent_id"))
+        assigned.select("cell1", assign1("embedding").cent_id.alias("cent_id"))
         .groupBy("cent_id")
         .agg(
             F.count(F.lit(1)).alias("cell_size"),
@@ -1466,35 +1446,10 @@ def sim_ivf_recall_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     per index build; at 100 TB the brute leg runs on a sampled validation
     slice while the IVF leg is the production path."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id").select("embedding").collect()
-    )
-    C = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    cn = np.sqrt(_np_q(C * C * _Q).sum(axis=1).astype(np.float64))
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    qn = float(np.sqrt(_np_q(qv * qv * _Q).sum()))
-    probe_cos = _np_q(C * qv[None, :] * _Q).sum(axis=1) / (cn * qn)
-    order = np.lexsort((np.arange(len(C)), -probe_cos))
-    probes = [int(i) for i in order[:_N_PROBE]]
-
-    @F.pandas_udf("struct<cent_id: int, cosine: double>")
-    def _assign_and_score(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        ccos = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2) / (
-            vn[:, None] * cn[None, :]
-        )
-        qcos = _np_q(V * qv[None, :] * _Q).sum(axis=1) / (vn * qn)
-        return pd.DataFrame(
-            {"cent_id": np.argmax(ccos, axis=1).astype(np.int32), "cosine": qcos}
-        )
-
+    C, cn, qv, qn, probes = _fixture_coarse(spark, sf_dir, emb)
     scored = (
         emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", _assign_and_score("embedding").alias("s"))
+        .select("vec_id", _cell_and_cosine(C, cn, qv, qn).alias("s"))
         .select("vec_id", F.col("s.cent_id").alias("cent_id"), F.col("s.cosine").alias("qcos"))
         .localCheckpoint(eager=False)  # one scan feeds brute, ivf, and n_scanned
     )
@@ -1566,7 +1521,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf("scale: double, q: array<int>, max_err: double, within_bound: boolean")
     def _quant(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
+        V = as_matrix(embs)
         mx = np.abs(V).max(axis=1)
         safe = np.where(mx > 0, mx, 1.0)
         t = V * 127.0 / safe[:, None]
@@ -1660,58 +1615,26 @@ def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bucket IN (...)` scan predicate, so at rest a `partitionBy(bucket)`
     table prunes to 4 partitions. Scoring is the same one-Arrow-batch
     vectorized pass as `sim_ann_lsh`."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    plane_rows = (
-        emb.filter(F.col("vec_id").between(1, _N_PLANES))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    planes = [r["embedding"] for r in plane_rows]
-    dots = _dots_q_udf(planes)
-
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    R = np.asarray([np.asarray(v, dtype=np.float64) for v in planes])
-    qdots = _np_q(qv[None, :] * R * _Q).sum(axis=1)
-    qbucket = int(sum((1 << i) for i in range(_N_PLANES) if qdots[i] > 0))
-    flip_order = sorted(range(_N_PLANES), key=lambda i: (abs(int(qdots[i])), i))
-    probes = [qbucket] + [qbucket ^ (1 << i) for i in flip_order[:_N_PROBES_EXTRA]]
-    qnorm = float(_np_q(qv * qv * _Q).sum())
-
-    bucket = sum(
-        F.when(F.col("ds")[i] > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(_N_PLANES)
-    )
-    norm = _self_norm_q_udf()
-    buckets = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        dots("embedding").alias("ds"),
-        norm("embedding").alias("nq"),
-    ).select("vec_id", "label", "embedding", "nq", bucket.alias("bucket"))
-
-    qdot = _dots_q_udf([qv])
+    planes, qv, qdots = _lsh_planes_and_query(emb)
+    qbucket, probes = _multiprobe_buckets(qdots)
     return (
-        buckets.filter(
-            (F.col("vec_id") != 0) & (F.col("bucket").isin([int(p) for p in probes]))
-        )
-        .select(
-            "vec_id",
-            "label",
-            (
-                qdot("embedding")[0]
-                / (F.sqrt(F.col("nq").cast("double")) * F.lit(float(np.sqrt(qnorm))))
-            ).alias("cosine"),
-        )
+        _lsh_scored(emb, planes, qv)
+        .filter((F.col("vec_id") != 0) & (F.col("bucket").isin(probes)))
+        .select("vec_id", "label", "cosine")
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
     )
+
+
+def _multiprobe_buckets(qdots: np.ndarray) -> tuple[int, list[int]]:
+    """(home bucket, probe buckets): the query's sign bucket plus the
+    buckets reached by flipping its _N_PROBES_EXTRA smallest-|margin|
+    plane bits (margin ties break on plane index)."""
+    qbucket = int(sum((1 << i) for i in range(_N_PLANES) if qdots[i] > 0))
+    flip_order = sorted(range(_N_PLANES), key=lambda i: (abs(int(qdots[i])), i))
+    flips = [qbucket ^ (1 << i) for i in flip_order[:_N_PROBES_EXTRA]]
+    return qbucket, [qbucket] + flips
 
 
 @query(
@@ -1799,48 +1722,12 @@ def sim_multiprobe_recall_checked(spark: SparkSession, sf_dir: str) -> DataFrame
     containment invariant, which hold on any distribution; on clustered
     real embeddings the same plan's recall rises with cluster
     structure."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    plane_rows = (
-        emb.filter(F.col("vec_id").between(1, _N_PLANES))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    planes = [r["embedding"] for r in plane_rows]
-    dots = _dots_q_udf(planes)
-
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    R = np.asarray([np.asarray(v, dtype=np.float64) for v in planes])
-    qdots = _np_q(qv[None, :] * R * _Q).sum(axis=1)
-    qbucket = int(sum((1 << i) for i in range(_N_PLANES) if qdots[i] > 0))
-    flip_order = sorted(range(_N_PLANES), key=lambda i: (abs(int(qdots[i])), i))
-    probes = [qbucket] + [qbucket ^ (1 << i) for i in flip_order[:_N_PROBES_EXTRA]]
-    qnorm = float(_np_q(qv * qv * _Q).sum())
-
-    bucket = sum(
-        F.when(F.col("ds")[i] > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(_N_PLANES)
-    )
-    qdot = _dots_q_udf([qv])
+    planes, qv, qdots = _lsh_planes_and_query(emb)
+    qbucket, probes = _multiprobe_buckets(qdots)
     scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            dots("embedding").alias("ds"),
-            (
-                qdot("embedding")[0]
-                / (
-                    F.sqrt(_self_norm_q_udf()("embedding").cast("double"))
-                    * F.lit(float(np.sqrt(qnorm)))
-                )
-            ).alias("cosine"),
-        )
-        .select("vec_id", "cosine", bucket.alias("bucket"))
+        _lsh_scored(emb.filter(F.col("vec_id") != 0), planes, qv)
+        .select("vec_id", "cosine", "bucket")
         .localCheckpoint(eager=False)
     )
     brute = scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(5).select("vec_id")
@@ -1851,7 +1738,7 @@ def sim_multiprobe_recall_checked(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("vec_id")
     )
     multi = (
-        scored.filter(F.col("bucket").isin([int(p) for p in probes]))
+        scored.filter(F.col("bucket").isin(probes))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
         .select("vec_id")
@@ -1924,31 +1811,13 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k, s, d) tensor in the UDF closure (numpy analog of a broadcast
     join); no shuffle at all. The oracle's |vectors| x s x k unnest is the
     DuckDB mirror, not the Spark plan."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    seed_rows = (
-        emb.filter(F.col("vec_id").between(1, _PQ_K))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    C = np.asarray(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-    ).reshape(_PQ_K, _PQ_SUBSPACES, 16)
-    CT = np.transpose(C, (1, 0, 2))  # (s, j, d)
+    CT = _pq_seed_codebook(emb)
 
     @F.pandas_udf("code: array<int>, recon_err_q: long")
     def _pq(embs: pd.Series) -> pd.DataFrame:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in embs]).reshape(
-            len(embs), _PQ_SUBSPACES, 16
-        )
-        D = _np_q((X[:, :, None, :] - CT[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        codes = D.argmin(axis=2)  # first min = lowest centroid index on ties
-        err = D.min(axis=2).sum(axis=1)
-        return pd.DataFrame(
-            {"code": list(codes.astype(np.int32)), "recon_err_q": err}
-        )
+        codes, dist = pq_encode(as_matrix(embs), CT)
+        return pd.DataFrame({"code": list(codes), "recon_err_q": dist.sum(axis=1)})
 
     return (
         emb.select("vec_id", _pq("embedding").alias("z"))
@@ -2008,33 +1877,27 @@ def emb_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads codes only (at rest the codes column is ~1 byte/vector vs 512
     for the floats — the scan cost drop IS the point of PQ); top-k is a
     per-partition heap."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    seed_rows = (
-        emb.filter(F.col("vec_id").between(1, _PQ_K))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    C = np.asarray(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-    ).reshape(_PQ_K, _PQ_SUBSPACES, 16)
-    CT = np.transpose(C, (1, 0, 2))  # (s, j, d)
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    ).reshape(_PQ_SUBSPACES, 16)
-    qtab = _np_q((qv[:, None, :] - CT) ** 2 * _Q).sum(axis=2)  # (s, j)
+    return _adc_topk(emb, _pq_seed_codebook(emb))
+
+
+def _pq_seed_codebook(emb: DataFrame) -> np.ndarray:
+    """The seeded PQ codebook: embeddings 1.._PQ_K split into
+    _PQ_SUBSPACES 16-dim sub-vectors, as a (subspace, centroid, dim)
+    tensor."""
+    C = _seed_matrix(emb, _PQ_K, lo=1).reshape(_PQ_K, _PQ_SUBSPACES, 16)
+    return np.transpose(C, (1, 0, 2))
+
+
+def _adc_topk(emb: DataFrame, CT: np.ndarray) -> DataFrame:
+    """Top-5 by exact-integer ADC distance to the query under codebook
+    ``CT`` (vec_id tie-break): the query's table is built once driver-side,
+    each vector encodes and looks its codes up in one Arrow pass."""
+    qtab = adc_table(_query_vector(emb), CT)
 
     @F.pandas_udf("long")
     def _adc(embs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in embs]).reshape(
-            len(embs), _PQ_SUBSPACES, 16
-        )
-        D = _np_q((X[:, :, None, :] - CT[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        codes = D.argmin(axis=2)  # (n, s)
-        return pd.Series(qtab[np.arange(_PQ_SUBSPACES)[None, :], codes].sum(axis=1))
+        return pd.Series(adc_lookup(qtab, pq_encode(as_matrix(embs), CT)[0]))
 
     return (
         emb.filter(F.col("vec_id") != 0)
@@ -2074,26 +1937,11 @@ def _pq_refined_codebook(emb: DataFrame):
     producing one row per (subspace, centroid, dim) — vector-count
     independent — whose result returns to the driver as a tiny constant.
     Empty cells keep their seed centroid (standard Lloyd)."""
-    import numpy as np
-
-    seed_rows = (
-        emb.filter(F.col("vec_id").between(1, _PQ_K))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    C = np.asarray(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-    ).reshape(_PQ_K, _PQ_SUBSPACES, 16)
-    CT0 = np.transpose(C, (1, 0, 2))  # (s, j, d)
+    CT0 = _pq_seed_codebook(emb)
 
     @F.pandas_udf("array<int>")
     def _assign0(embs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in embs]).reshape(
-            len(embs), _PQ_SUBSPACES, 16
-        )
-        D = _np_q((X[:, :, None, :] - CT0[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        return pd.Series(list(D.argmin(axis=2).astype(np.int32)))
+        return pd.Series(list(pq_encode(as_matrix(embs), CT0)[0]))
 
     # M-step: distributed exact-integer per-(subspace, centroid, dim) means
     mstep = (
@@ -2214,22 +2062,15 @@ def emb_pq_codes_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding the next map. Further Lloyd rounds and the
     `emb_pq_adc_topk_refined` serving path compose from the same two
     stages, nothing grows."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
     CT0, CT1 = _fixture_codebook(spark, sf_dir, emb)
 
     @F.pandas_udf("sd: array<long>, rd: array<long>, mv: array<int>")
     def _both(embs: pd.Series) -> pd.DataFrame:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in embs]).reshape(
-            len(embs), _PQ_SUBSPACES, 16
-        )
-        D0 = _np_q((X[:, :, None, :] - CT0[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        D1 = _np_q((X[:, :, None, :] - CT1[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        moved = (D0.argmin(axis=2) != D1.argmin(axis=2)).astype(np.int32)
-        return pd.DataFrame(
-            {"sd": list(D0.min(axis=2)), "rd": list(D1.min(axis=2)), "mv": list(moved)}
-        )
+        V = as_matrix(embs)
+        (c0, d0), (c1, d1) = pq_encode(V, CT0), pq_encode(V, CT1)
+        moved = (c0 != c1).astype(np.int32)
+        return pd.DataFrame({"sd": list(d0), "rd": list(d1), "mv": list(moved)})
 
     flat = emb.select(_both("embedding").alias("z")).select("z.sd", "z.rd", "z.mv")
     per = flat.select(F.posexplode(F.arrays_zip("sd", "rd", "mv")).alias("s", "t"))
@@ -2270,31 +2111,8 @@ def emb_pq_adc_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the seeded serving path — training cost is one
     extra groupBy whose output is vector-count independent; serving stays
     a zero-shuffle code scan + per-partition top-k heap."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    ).reshape(_PQ_SUBSPACES, 16)
-    qtab = _np_q((qv[:, None, :] - CT1) ** 2 * _Q).sum(axis=2)  # (s, j)
-
-    @F.pandas_udf("long")
-    def _adc(embs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in embs]).reshape(
-            len(embs), _PQ_SUBSPACES, 16
-        )
-        D = _np_q((X[:, :, None, :] - CT1[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        codes = D.argmin(axis=2)  # (n, s)
-        return pd.Series(qtab[np.arange(_PQ_SUBSPACES)[None, :], codes].sum(axis=1))
-
-    return (
-        emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", _adc("embedding").alias("adc_dist_q"))
-        .orderBy(F.asc("adc_dist_q"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return _adc_topk(emb, _fixture_codebook(spark, sf_dir, emb)[1])
 
 
 @query(
@@ -2381,59 +2199,9 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns — probing prunes partitions AND each scanned byte is 1/128 of
     the raw floats; the single pandas UDF computes (cell, code, ADC) in
     one Arrow pass so every vector crosses Python once."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id").select("embedding").collect()
-    )
-    C = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    cn = np.sqrt(_np_q(C * C * _Q).sum(axis=1).astype(np.float64))
-    seed_rows = (
-        emb.filter(F.col("vec_id").between(1, _PQ_K))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    PC = np.asarray(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-    ).reshape(_PQ_K, _PQ_SUBSPACES, 16)
-    CT = np.transpose(PC, (1, 0, 2))
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    qn = float(np.sqrt(_np_q(qv * qv * _Q).sum()))
-    probe_cos = _np_q(C * qv[None, :] * _Q).sum(axis=1) / (cn * qn)
-    order = np.lexsort((np.arange(len(C)), -probe_cos))
-    probes = [int(i) for i in order[:_N_PROBE]]
-    qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT) ** 2 * _Q).sum(
-        axis=2
-    )
-
-    @F.pandas_udf("struct<cent_id: int, adc_dist_q: long>")
-    def _cell_and_adc(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        ccos = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2) / (
-            vn[:, None] * cn[None, :]
-        )
-        X = V.reshape(len(embs), _PQ_SUBSPACES, 16)
-        D = _np_q((X[:, :, None, :] - CT[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        codes = D.argmin(axis=2)
-        adc = qtab[np.arange(_PQ_SUBSPACES)[None, :], codes].sum(axis=1)
-        return pd.DataFrame(
-            {"cent_id": np.argmax(ccos, axis=1).astype(np.int32), "adc_dist_q": adc}
-        )
-
-    return (
-        emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", _cell_and_adc("embedding").alias("s"))
-        .filter(F.col("s.cent_id").isin(probes))
-        .select("vec_id", F.col("s.adc_dist_q").alias("adc_dist_q"))
-        .orderBy(F.asc("adc_dist_q"), F.asc("vec_id"))
-        .limit(5)
-    )
+    coarse = _fixture_coarse(spark, sf_dir, emb)
+    return _ivf_pq_topk(emb, coarse, _pq_seed_codebook(emb))
 
 
 @query(
@@ -2693,26 +2461,23 @@ def sim_ivf_pq_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ivf_coarse_and_query helper so this twin and sim_ivf_pq_at_rest
     (which must stay bit-identical) can never desynchronize."""
     emb = load_table(spark, sf_dir, "embeddings")
-    C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
-    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
-    qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
-        axis=2
-    )
+    coarse = _fixture_coarse(spark, sf_dir, emb)
+    return _ivf_pq_topk(emb, coarse, _fixture_codebook(spark, sf_dir, emb)[1])
+
+
+def _ivf_pq_topk(emb: DataFrame, coarse: tuple, CT: np.ndarray) -> DataFrame:
+    """IVF+PQ top-5 in one Arrow pass: each vector's coarse cell and its
+    ADC distance under codebook ``CT``, probe-filtered, then the
+    per-partition top-k heap."""
+    C, cn, qv, _qn, probes = coarse
+    qtab = adc_table(qv, CT)
 
     @F.pandas_udf("struct<cent_id: int, adc_dist_q: long>")
     def _cell_and_adc(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        ccos = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2) / (
-            vn[:, None] * cn[None, :]
-        )
-        X = V.reshape(len(embs), _PQ_SUBSPACES, 16)
-        D = _np_q((X[:, :, None, :] - CT1[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        codes = D.argmin(axis=2)
-        adc = qtab[np.arange(_PQ_SUBSPACES)[None, :], codes].sum(axis=1)
-        return pd.DataFrame(
-            {"cent_id": np.argmax(ccos, axis=1).astype(np.int32), "adc_dist_q": adc}
-        )
+        V = as_matrix(embs)
+        cell = coarse_assign(V, sqrt_norm_q(V), C, cn)[0]
+        adc = adc_lookup(qtab, pq_encode(V, CT)[0])
+        return pd.DataFrame({"cent_id": cell, "adc_dist_q": adc})
 
     return (
         emb.filter(F.col("vec_id") != 0)
@@ -2725,22 +2490,34 @@ def sim_ivf_pq_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_coarse_and_query(emb: DataFrame):
-    """(C, cn, qv, qn, probes): the coarse centroid tensor, its quantized
-    norms, the query vector/norm, and the top-nprobe cell ids — the
-    driver-side constants every IVF serving variant shares."""
-    cent_rows = (
-        emb.filter(F.col("vec_id") < 10).orderBy("vec_id").select("embedding").collect()
-    )
-    C = np.asarray([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-    cn = np.sqrt(_np_q(C * C * _Q).sum(axis=1).astype(np.float64))
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    qn = float(np.sqrt(_np_q(qv * qv * _Q).sum()))
-    probe_cos = _np_q(C * qv[None, :] * _Q).sum(axis=1) / (cn * qn)
-    order = np.lexsort((np.arange(len(C)), -probe_cos))
+    """(C, cn, qv, qn, probes): the coarse centroid tensor (seeds = ids
+    0..9), its quantized norms, the query vector/norm, and the top-nprobe
+    cell ids — the driver-side constants every IVF serving variant
+    shares. A pure builder; fixture callers reuse it through
+    :func:`_fixture_coarse`."""
+    C = _seed_matrix(emb, 9)
+    cn = sqrt_norm_q(C)
+    qv = _query_vector(emb)
+    qn = float(sqrt_norm_q(qv))
+    # lexsort is ascending; negate cosine for DESC, cent_id asc breaks ties
+    order = np.lexsort((np.arange(len(C)), -(dot_q(C, qv) / (cn * qn))))
     return C, cn, qv, qn, [int(i) for i in order[:_N_PROBE]]
+
+
+def _fixture_coarse(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """``_ivf_coarse_and_query(emb)`` of the fixture, memoized per session
+    and fixture content (memo.py) like :func:`_fixture_codebook`: every
+    IVF query, the index build and both Lloyd seedings share one
+    prelude. The arrays are read-only, so an in-place edit by one caller
+    raises instead of poisoning a later query."""
+
+    def build():
+        coarse = _ivf_coarse_and_query(emb)
+        for arr in coarse[:3]:
+            arr.setflags(write=False)
+        return coarse
+
+    return memo(spark, "ivf_coarse", sf_dir, [_embeddings_src(sf_dir)], build)
 
 
 @query(
@@ -2849,29 +2626,19 @@ def sim_ivf_pq_multiprobe_recall_checked(spark: SparkSession, sf_dir: str) -> Da
     (TakeOrderedAndProject), never a global sort; the final row is a
     crossJoin of five broadcast 1-row aggregates."""
     emb = load_table(spark, sf_dir, "embeddings")
-    C, cn, qv, qn, probes = _ivf_coarse_and_query(emb)
+    C, cn, qv, qn, probes = _fixture_coarse(spark, sf_dir, emb)
     _, CT1 = _fixture_codebook(spark, sf_dir, emb)
-    qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
-        axis=2
-    )
+    qtab = adc_table(qv, CT1)
 
     @F.pandas_udf("struct<cent_id: int, adc_dist_q: long, cosine: double>")
     def _score(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        ccos = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2) / (
-            vn[:, None] * cn[None, :]
-        )
-        X = V.reshape(len(embs), _PQ_SUBSPACES, 16)
-        D = _np_q((X[:, :, None, :] - CT1[None, :, :, :]) ** 2 * _Q).sum(axis=3)
-        codes = D.argmin(axis=2)
-        adc = qtab[np.arange(_PQ_SUBSPACES)[None, :], codes].sum(axis=1)
-        qdots = _np_q(V * qv[None, :] * _Q).sum(axis=1).astype(np.float64)
+        V = as_matrix(embs)
+        vn = sqrt_norm_q(V)
         return pd.DataFrame(
             {
-                "cent_id": np.argmax(ccos, axis=1).astype(np.int32),
-                "adc_dist_q": adc,
-                "cosine": qdots / (vn * qn),
+                "cent_id": coarse_assign(V, vn, C, cn)[0],
+                "adc_dist_q": adc_lookup(qtab, pq_encode(V, CT1)[0]),
+                "cosine": dot_q(V, qv) / (vn * qn),
             }
         )
 
@@ -2950,7 +2717,6 @@ def sim_ivf_pq_gc_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually collectable pays its one full O(files) scan on the sweep
     that removes it. The grace window is the only reader fence a
     rename-free store can offer (SCALE.md, index store retention)."""
-    import os
     import shutil
     import tempfile
 
@@ -3026,18 +2792,22 @@ _IVF_PQ_INDEX_FORMAT = 2
 
 def ivf_pq_index_path(sf_dir: str) -> str:
     """Deterministic per-(fixture-content, format-version) location of
-    the at-rest IVF+PQ index (outside the read-only testdata tree). The
-    tag includes a stat fingerprint (size + mtime) of the embeddings
-    source, so regenerating the fixture IN PLACE at the same directory
-    yields a NEW index path — the publish race-loser's "existing
-    directory is the same index" assumption can then never pin a stale
-    index to fresh data (r7 review)."""
+    the at-rest IVF+PQ index (outside the read-only testdata tree),
+    named ``ivf_pq_index_{fixture}_{tag}``. ``fixture`` hashes the
+    absolute fixture path, so every index one fixture ever built shares
+    that prefix and a rebuild can find its stale siblings
+    (:func:`write_ivf_pq_index`). ``tag`` hashes the format version and
+    a stat fingerprint (size + mtime) of the embeddings source, so
+    regenerating the fixture IN PLACE at the same directory yields a NEW
+    index path — the publish race-loser's "existing directory is the
+    same index" assumption can then never pin a stale index to fresh
+    data (r7 review)."""
     import hashlib
     import tempfile
 
     stamp = fingerprint([_embeddings_src(sf_dir)])
-    parts = [os.path.abspath(sf_dir), f"v{_IVF_PQ_INDEX_FORMAT}", stamp]
-    tag = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+    fixture = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    tag = hashlib.md5(f"v{_IVF_PQ_INDEX_FORMAT}|{stamp}".encode()).hexdigest()[:12]
     # Root the cache in a per-user 0700 subdirectory rather than directly
     # under the world-shared temp dir: a predictable name at a shared path
     # could be pre-created (squatted) by another local user, and the
@@ -3048,14 +2818,13 @@ def ivf_pq_index_path(sf_dir: str) -> str:
     os.chmod(root, 0o700)
     if os.stat(root).st_uid != os.getuid():
         raise RuntimeError(f"index cache root {root!r} owned by another user")
-    return os.path.join(root, f"ivf_pq_index_{tag}")
+    return os.path.join(root, f"ivf_pq_index_{fixture}_{tag}")
 
 
 def write_ivf_pq_index(
     spark: SparkSession,
     sf_dir: str,
     path: str | None = None,
-    coarse: tuple | None = None,
     store=None,
 ) -> str:
     """BUILD step of the at-rest IVF+PQ index: one Arrow pass assigns each
@@ -3071,24 +2840,53 @@ def write_ivf_pq_index(
     dir and a single os.rename exposes it, so a concurrent reader never
     sees a half-written (or half-deleted, as mode-overwrite would leave)
     index — if another process renames first, its identical index wins
-    and ours is discarded. ``coarse`` lets a caller that already
-    collected the (C, cn) centroid constants pass them in instead of
-    paying the driver-side Spark jobs twice. At 100 TB this is the
-    offline index-build job (embeddings in, codes out, one atomic
+    and ours is discarded. The coarse centroids and the codebook come
+    from the session memos the serving queries share. At 100 TB this is
+    the offline index-build job (embeddings in, codes out, one atomic
     version-directory swap per corpus version); serving never touches
-    the embedding column again."""
-    if path is None:
+    the embedding column again.
+
+    A build at the default path then removes the same fixture's indexes
+    under older tags (a fixture rewritten in place, a format bump) once
+    their whole tree is past gc's reader grace; a sibling still inside
+    the grace may be under a reader and stays."""
+    default = path is None
+    if default:
         path = ivf_pq_index_path(sf_dir)
-    return memo(
-        spark, "ivf_pq_index", path, [_embeddings_src(sf_dir)],
-        lambda: _build_ivf_pq_index(spark, sf_dir, path, coarse, store=store),
-    )
+
+    def build() -> str:
+        _build_ivf_pq_index(spark, sf_dir, path, store=store)
+        if default:
+            _remove_expired_siblings(path)
+        return path
+
+    return memo(spark, "ivf_pq_index", path, [_embeddings_src(sf_dir)], build)
+
+
+def _remove_expired_siblings(path: str) -> list[str]:
+    """Remove every entry beside ``path`` that carries its fixture prefix
+    (``ivf_pq_index_{fixture}_``) under another tag and whose whole tree
+    is older than gc's default reader grace (index_store._expired).
+    Returns the removed paths."""
+    root, name = os.path.split(path)
+    prefix = name.rsplit("_", 1)[0] + "_"
+    now = time.time()
+    removed: list[str] = []
+    for entry in os.listdir(root):
+        stale = os.path.join(root, entry)
+        if (
+            entry.startswith(prefix)
+            and not entry.startswith(name)
+            and _expired(stale, DEFAULT_GRACE_S, now)
+        ):
+            _remove_tree(stale, removed)
+    return removed
 
 
 _IVF_PQ_MODEL_FILE = "_model.json"  # "_"-prefixed: invisible to the scan
 
 
-def _ivf_pq_encoder(C: "np.ndarray", cn: "np.ndarray", CT1: "np.ndarray"):
+def _ivf_pq_encoder(C: np.ndarray, cn: np.ndarray, CT1: np.ndarray):
     """The ONE encoding arithmetic shared by the index build and every
     append: a pandas UDF assigning each embedding its coarse cell (argmax
     centroid cosine — ivf_assignments') and its Lloyd-refined PQ codes
@@ -3099,17 +2897,11 @@ def _ivf_pq_encoder(C: "np.ndarray", cn: "np.ndarray", CT1: "np.ndarray"):
 
     @F.pandas_udf("struct<cent_id: int, codes: array<int>>")
     def _cell_and_codes(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        ccos = _np_q(V[:, None, :] * C[None, :, :] * _Q).sum(axis=2) / (
-            vn[:, None] * cn[None, :]
-        )
-        X = V.reshape(len(embs), _PQ_SUBSPACES, 16)
-        D = _np_q((X[:, :, None, :] - CT1[None, :, :, :]) ** 2 * _Q).sum(axis=3)
+        V = as_matrix(embs)
         return pd.DataFrame(
             {
-                "cent_id": np.argmax(ccos, axis=1).astype(np.int32),
-                "codes": list(D.argmin(axis=2).astype(np.int32)),
+                "cent_id": coarse_assign(V, sqrt_norm_q(V), C, cn)[0],
+                "codes": list(pq_encode(V, CT1)[0]),
             }
         )
 
@@ -3138,8 +2930,6 @@ def _validated_live_dir(serving: str, store) -> str:
     impossible, this is defense in depth) and complete (the committer's
     _SUCCESS marker — a crashed half-write never has it — plus the
     frozen-model sidecar)."""
-    import os
-
     live = store.resolve(serving)
     if (
         live is None
@@ -3154,38 +2944,43 @@ def _validated_live_dir(serving: str, store) -> str:
     return live
 
 
-def _build_ivf_pq_index(
-    spark: SparkSession, sf_dir: str, path: str, coarse: tuple | None, store=None
-) -> str:
+def _write_model(directory: str, C: np.ndarray, CT1: np.ndarray) -> None:
+    """Persist the frozen model INSIDE an index version (underscore-
+    prefixed, so the parquet scan never sees it) BEFORE its atomic
+    publish: appends must encode with exactly the build's codebook,
+    without re-reading (or even having) the build corpus. float64 ->
+    JSON round-trips exactly (repr), and cn is recomputed from C on load
+    rather than stored — one fewer tensor that could drift."""
     import json
-    import os
 
-    store = _index_store(store)
-    emb = load_table(spark, sf_dir, "embeddings")
-    if coarse is None:
-        C, cn = _ivf_coarse_and_query(emb)[:2]
-    else:
-        C, cn = coarse
-    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
-
-    tmp = store.stage(path)
-    (
-        _encode_to_index_rows(emb, _ivf_pq_encoder(C, cn, CT1))
-        .write.mode("overwrite")
-        .partitionBy("cent_id")
-        .parquet(tmp)
-    )
-    # Persist the frozen model INSIDE the index (underscore-prefixed, so
-    # the parquet scan never sees it) BEFORE the atomic publish: appends
-    # must encode with exactly the build's codebook, without re-reading
-    # (or even having) the build corpus. float64 -> JSON round-trips
-    # exactly (repr), and cn is recomputed from C on load rather than
-    # stored — one fewer tensor that could drift.
-    with open(os.path.join(tmp, _IVF_PQ_MODEL_FILE), "w") as fh:
+    with open(os.path.join(directory, _IVF_PQ_MODEL_FILE), "w") as fh:
         json.dump(
             {"format": _IVF_PQ_INDEX_FORMAT, "C": C.tolist(), "CT1": CT1.tolist()},
             fh,
         )
+
+
+def _stage_index(store, path: str, vectors: DataFrame, C, cn, CT1) -> str:
+    """Stage a new index version for ``path``: every vector encoded
+    against the (C, cn, CT1) model and written ``partitionBy(cent_id)``,
+    plus the model sidecar. Returns the staged directory to publish."""
+    tmp = store.stage(path)
+    (
+        _encode_to_index_rows(vectors, _ivf_pq_encoder(C, cn, CT1))
+        .write.mode("overwrite")
+        .partitionBy("cent_id")
+        .parquet(tmp)
+    )
+    _write_model(tmp, C, CT1)
+    return tmp
+
+
+def _build_ivf_pq_index(spark: SparkSession, sf_dir: str, path: str, store=None) -> str:
+    store = _index_store(store)
+    emb = load_table(spark, sf_dir, "embeddings")
+    C, cn = _fixture_coarse(spark, sf_dir, emb)[:2]
+    _, CT1 = _fixture_codebook(spark, sf_dir, emb)
+    tmp = _stage_index(store, path, emb, C, cn, CT1)
     try:
         store.publish(tmp, path)
     except PublishConflict:
@@ -3209,7 +3004,6 @@ def _load_index_model(path: str, store=None):
     physical directory (identical on POSIX, a pointer lookup on an
     object store)."""
     import json
-    import os
 
     store = _index_store(store)
     live = store.resolve(path)
@@ -3232,9 +3026,7 @@ def _load_index_model(path: str, store=None):
             f"this code serves format {_IVF_PQ_INDEX_FORMAT}"
         )
     C = np.asarray(model["C"], dtype=np.float64)
-    cn = np.sqrt(_np_q(C * C * _Q).sum(axis=1).astype(np.float64))
-    CT1 = np.asarray(model["CT1"], dtype=np.float64)
-    return C, cn, CT1
+    return C, sqrt_norm_q(C), np.asarray(model["CT1"], dtype=np.float64)
 
 
 def _append_encoded(
@@ -3313,8 +3105,6 @@ def delete_from_ivf_pq_index(
     ``vec_ids`` is a DataFrame carrying ``vec_id`` or a plain iterable of
     ids. Deleting an id that was never indexed is a no-op by construction
     (anti-join), so callers need not pre-filter."""
-    import os as _os
-
     store = _index_store(store)
     live = store.resolve(path)
     if live is None:
@@ -3327,7 +3117,7 @@ def delete_from_ivf_pq_index(
         vec_ids.select(F.col("vec_id").cast("long").alias("vec_id"))
         .distinct()
         .write.mode("append")
-        .parquet(_os.path.join(live, _IVF_PQ_TOMBSTONE_DIR))
+        .parquet(os.path.join(live, _IVF_PQ_TOMBSTONE_DIR))
     )
     return path
 
@@ -3341,17 +3131,13 @@ def read_ivf_pq_index(spark: SparkSession, path: str, store=None) -> DataFrame:
     PartitionFilter — pruning is preserved, pinned by
     tests/test_ivf_pq_at_rest.py. With no tombstones this IS the plain
     scan (same plan, zero overhead)."""
-    import os as _os
-
     store = _index_store(store)
     live = store.resolve(path)
     if live is None:
         raise RuntimeError(f"no published index at {path!r} to read")
     coded = spark.read.parquet(live)
-    tomb = _os.path.join(live, _IVF_PQ_TOMBSTONE_DIR)
-    if _os.path.isdir(tomb) and any(
-        f.endswith(".parquet") for f in _os.listdir(tomb)
-    ):
+    tomb = os.path.join(live, _IVF_PQ_TOMBSTONE_DIR)
+    if os.path.isdir(tomb) and any(f.endswith(".parquet") for f in os.listdir(tomb)):
         tombs = spark.read.parquet(tomb).select("vec_id").distinct()
         coded = coded.join(F.broadcast(tombs), "vec_id", "left_anti")
     return coded
@@ -3413,9 +3199,6 @@ def compact_ivf_pq_index(
     Iceberg/Delta posture for rename-less object stores). The fence and
     quarantine SEMANTICS are identical through either — pinned by
     tests/test_index_store.py parameterized over both."""
-    import json
-    import os
-
     store = _index_store(store)
 
     def _src_file_set() -> frozenset:
@@ -3456,11 +3239,7 @@ def compact_ivf_pq_index(
     except RuntimeError:
         store.discard_staged(tmp)
         raise
-    with open(os.path.join(tmp, _IVF_PQ_MODEL_FILE), "w") as fh:
-        json.dump(
-            {"format": _IVF_PQ_INDEX_FORMAT, "C": C.tolist(), "CT1": CT1.tolist()},
-            fh,
-        )
+    _write_model(tmp, C, CT1)
     try:
         store.publish(tmp, dst_path)
     except PublishConflict:
@@ -3549,14 +3328,21 @@ def sim_ivf_pq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding bytes); top-5 is TakeOrderedAndProject. The build is the
     offline index job, run once per corpus version."""
     emb = load_table(spark, sf_dir, "embeddings")
-    C, cn, qv, qn, probes = _ivf_coarse_and_query(emb)
+    _C, _cn, qv, _qn, probes = _fixture_coarse(spark, sf_dir, emb)
     _, CT1 = _fixture_codebook(spark, sf_dir, emb)
-    qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
-        axis=2
+    coded = read_ivf_pq_index(spark, write_ivf_pq_index(spark, sf_dir))
+    return (
+        coded.filter(F.col("cent_id").isin(probes) & (F.col("vec_id") != 0))
+        .select("vec_id", _jvm_adc(adc_table(qv, CT1)).alias("adc_dist_q"))
+        .orderBy(F.asc("adc_dist_q"), F.asc("vec_id"))
+        .limit(5)
     )
 
-    path = write_ivf_pq_index(spark, sf_dir, coarse=(C, cn))
-    coded = read_ivf_pq_index(spark, path)  # tombstone-aware serve view
+
+def _jvm_adc(qtab: np.ndarray) -> Column:
+    """ADC distance of an index row's ``codes`` as a pure-JVM expression:
+    the query's (subspace x centroid) table is a literal nested array and
+    each subspace is one element_at lookup, inside whole-stage codegen."""
     qt = F.array(
         *[
             F.array(*[F.lit(int(qtab[s, j])) for j in range(_PQ_K)])
@@ -3567,12 +3353,7 @@ def sim_ivf_pq_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s in range(_PQ_SUBSPACES):
         term = F.element_at(F.element_at(qt, s + 1), F.col("codes")[s] + 1)
         adc = term if adc is None else adc + term
-    return (
-        coded.filter(F.col("cent_id").isin(probes) & (F.col("vec_id") != 0))
-        .select("vec_id", adc.alias("adc_dist_q"))
-        .orderBy(F.asc("adc_dist_q"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return adc
 
 
 _N_APPEND = 50  # vectors appended by the checked append-serve query
@@ -3640,7 +3421,6 @@ def sim_ivf_pq_append_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity join touches codes only (a few ints/row); the base index build
     is shared (memoized) with sim_ivf_pq_at_rest and the copy is file-level.
     The summary collect is one row."""
-    import os
     import shutil
     import tempfile
 
@@ -3656,7 +3436,7 @@ def sim_ivf_pq_append_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_ivf_pq_index(appended_src, path)
 
         idx = read_ivf_pq_index(spark, path)
-        probes = _ivf_coarse_and_query(emb)[4]
+        probes = _fixture_coarse(spark, sf_dir, emb)[4]
         new = idx.filter(F.col("vec_id") >= 1_000_000)
         n_visible = new.filter(F.col("cent_id").isin(probes)).count()
         parity = (
@@ -3791,7 +3571,6 @@ def _ivf_pq_delete_lifecycle(spark: SparkSession, sf_dir: str, store=None) -> tu
     so the contract is provable through BOTH the POSIX rename store and
     the rename-less manifest-pointer store (VERDICT r10 #3). Returns the
     query's row tuple."""
-    import os
     import shutil
     import tempfile
 
@@ -3815,7 +3594,8 @@ def _ivf_pq_delete_lifecycle(spark: SparkSession, sf_dir: str, store=None) -> tu
             spark, range(_DEL_LO, _DEL_HI + 1), path, store=store
         )
 
-        probes = _ivf_coarse_and_query(load_table(spark, sf_dir, "embeddings"))[4]
+        emb = load_table(spark, sf_dir, "embeddings")
+        probes = _fixture_coarse(spark, sf_dir, emb)[4]
 
         # one multi-metric aggregation per version instead of three
         # scalar count jobs (r18, VERDICT r17 #5): the n_rows leg scans
@@ -4299,19 +4079,15 @@ def sim_ivf_pq_append_recall_checked(spark: SparkSession, sf_dir: str) -> DataFr
     Reference provenance: the reference has no index surface at all
     (results go to Cassandra, DataCassandraSink.java) — this is the
     engine's LLM-pipeline extension."""
-    import os
     import shutil
     import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
-    C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
+    _C, _cn, qv, _qn, probes = _fixture_coarse(spark, sf_dir, emb)
     _, CT1 = _fixture_codebook(spark, sf_dir, emb)
-    qtab = _np_q((qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q).sum(
-        axis=2
-    )
     qlit = F.array(*[F.lit(float(x)) for x in qv])
 
-    base = write_ivf_pq_index(spark, sf_dir, coarse=(C, cn))
+    base = write_ivf_pq_index(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="dvafs-ivfpq-apprecall-")
     try:
         path = os.path.join(root, "index")
@@ -4326,18 +4102,8 @@ def sim_ivf_pq_append_recall_checked(spark: SparkSession, sf_dir: str) -> DataFr
 
         # serve: partition-pruned scan of probed cells, pure-JVM ADC
         idx = read_ivf_pq_index(spark, path)
-        qt = F.array(
-            *[
-                F.array(*[F.lit(int(qtab[s, j])) for j in range(_PQ_K)])
-                for s in range(_PQ_SUBSPACES)
-            ]
-        )
-        adc = None
-        for s in range(_PQ_SUBSPACES):
-            term = F.element_at(F.element_at(qt, s + 1), F.col("codes")[s] + 1)
-            adc = term if adc is None else adc + term
         cand = idx.filter(F.col("cent_id").isin(probes) & (F.col("vec_id") != 0)).select(
-            "vec_id", adc.alias("adc_dist_q")
+            "vec_id", _jvm_adc(adc_table(qv, CT1)).alias("adc_dist_q")
         )
         adctop = [
             int(r["vec_id"])
@@ -4472,24 +4238,18 @@ def sim_prefix_dim_recall_checked(spark: SparkSession, sf_dir: str) -> DataFrame
     recalls the technique is used for. The CONTRACT is the pinned
     values plus rerank_no_worse, not a quality floor."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = np.asarray(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]["embedding"],
-        dtype=np.float64,
-    )
+    qv = _query_vector(emb)
     qp = qv[:_MRL_PREFIX_D]
-    qn = float(np.sqrt(_np_q(qv * qv * _Q).sum()))
-    qpn = float(np.sqrt(_np_q(qp * qp * _Q).sum()))
+    qn, qpn = float(sqrt_norm_q(qv)), float(sqrt_norm_q(qp))
 
     @F.pandas_udf("struct<full_cos: double, prefix_cos: double>")
     def _score(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
+        V = as_matrix(embs)
         P = V[:, :_MRL_PREFIX_D]
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        pn = np.sqrt(_np_q(P * P * _Q).sum(axis=1).astype(np.float64))
         return pd.DataFrame(
             {
-                "full_cos": _np_q(V * qv[None, :] * _Q).sum(axis=1) / (vn * qn),
-                "prefix_cos": _np_q(P * qp[None, :] * _Q).sum(axis=1) / (pn * qpn),
+                "full_cos": dot_q(V, qv) / (sqrt_norm_q(V) * qn),
+                "prefix_cos": dot_q(P, qp) / (sqrt_norm_q(P) * qpn),
             }
         )
 
@@ -4677,36 +4437,24 @@ def sim_ivf_pq_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append-recall staleness signal. Reference provenance: no index
     surface exists in the reference (results go to Cassandra,
     DataCassandraSink.java) — LLM-pipeline extension."""
-    import json
-    import os
     import shutil
     import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
-    C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
+    C, cn, qv, _qn, probes = _fixture_coarse(spark, sf_dir, emb)
     _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
 
-    def _adc_top5(idx, qtab):
-        qt = F.array(
-            *[
-                F.array(*[F.lit(int(qtab[s, j])) for j in range(_PQ_K)])
-                for s in range(_PQ_SUBSPACES)
-            ]
-        )
-        adc = None
-        for s in range(_PQ_SUBSPACES):
-            term = F.element_at(F.element_at(qt, s + 1), F.col("codes")[s] + 1)
-            adc = term if adc is None else adc + term
+    def _adc_top5(idx, CT):
         cand = idx.filter(
             F.col("cent_id").isin(probes) & (F.col("vec_id") != 0)
-        ).select("vec_id", adc.alias("adc"))
+        ).select("vec_id", _jvm_adc(adc_table(qv, CT)).alias("adc"))
         return [
             int(r["vec_id"])
             for r in cand.orderBy(F.asc("adc"), F.asc("vec_id")).limit(5).collect()
         ]  # bounded: 5 rows
 
-    base = write_ivf_pq_index(spark, sf_dir, coarse=(C, cn))
+    base = write_ivf_pq_index(spark, sf_dir)
     store = DEFAULT_INDEX_STORE
     root = tempfile.mkdtemp(prefix="dvafs-ivfpq-retrain-")
     try:
@@ -4733,10 +4481,7 @@ def sim_ivf_pq_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver actions concurrently (r18, VERDICT r17 #5; guide §2.6)
         def _pre():
             # stale-codebook serving (append-recall's arithmetic)
-            qtab_old = _np_q(
-                (qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q
-            ).sum(axis=2)
-            return _adc_top5(read_ivf_pq_index(spark, v1), qtab_old)
+            return _adc_top5(read_ivf_pq_index(spark, v1), CT1)
 
         def _ext():
             # exact ground truth over the union corpus
@@ -4759,33 +4504,14 @@ def sim_ivf_pq_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pre, _ext, lambda: _pq_refined_codebook(union)
         )
         v2 = os.path.join(root, "v2")
-        tmp = store.stage(v2)
-        (
-            _encode_to_index_rows(union, _ivf_pq_encoder(C, cn, CT1u))
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(tmp)
-        )
-        with open(os.path.join(tmp, _IVF_PQ_MODEL_FILE), "w") as fh:
-            json.dump(
-                {
-                    "format": _IVF_PQ_INDEX_FORMAT,
-                    "C": C.tolist(),
-                    "CT1": CT1u.tolist(),
-                },
-                fh,
-            )
-        store.publish(tmp, v2)
+        store.publish(_stage_index(store, v2, union, C, cn, CT1u), v2)
         # retire the stale version: unpublish, then zero-grace gc
         store.quarantine(v1)
         store.gc(v1, keep_versions=0, grace_s=0.0)
         old_gone = store.resolve(v1) is None and not os.path.exists(v1)
 
         # post-roll: serve from the re-trained version
-        qtab_new = _np_q(
-            (qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1u) ** 2 * _Q
-        ).sum(axis=2)
-        post_top = _adc_top5(read_ivf_pq_index(spark, v2), qtab_new)
+        post_top = _adc_top5(read_ivf_pq_index(spark, v2), CT1u)
 
         hits_pre = len(set(pre_top) & set(extop))
         hits_post = len(set(post_top) & set(extop))
@@ -4804,25 +4530,6 @@ def sim_ivf_pq_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hits_pre bigint, hits_post bigint, n_new_in_adc_top5_post bigint,"
         " recall_recovered boolean, old_version_gone boolean",
     )
-
-
-def _coarse_assigner(Cmat: "np.ndarray", norms: "np.ndarray"):
-    """Pandas UDF assigning each embedding its coarse cell (argmax
-    quantized cosine, first-max tie = lowest cent_id) for a GIVEN
-    centroid tensor — one assignment arithmetic for every (centroids,
-    norms) pair the full-retrain roll compares (r15 review: the old/new
-    twins were byte-identical bodies differing only in closure)."""
-
-    @F.pandas_udf("int")
-    def _assign(embs: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        dots = _np_q(V[:, None, :] * Cmat[None, :, :] * _Q).sum(axis=2)
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        return pd.Series(
-            np.argmax(dots / (vn[:, None] * norms[None, :]), axis=1).astype(np.int32)
-        )
-
-    return _assign
 
 
 def _duck_full_retrain_coarse_ctes() -> str:
@@ -4967,19 +4674,17 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
     append-recall says the CELLS drifted, not just the codes.
     Reference provenance: none (no index surface in the reference) —
     LLM-pipeline extension."""
-    import json
-    import os
     import shutil
     import tempfile
 
     from distributed_video_analytics_flink_spark.plans import formatted_plan
 
     emb = load_table(spark, sf_dir, "embeddings")
-    C, cn, qv, _qn, probes = _ivf_coarse_and_query(emb)
+    C, cn, qv, _qn, probes = _fixture_coarse(spark, sf_dir, emb)
     _, CT1 = _fixture_codebook(spark, sf_dir, emb)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
 
-    base = write_ivf_pq_index(spark, sf_dir, coarse=(C, cn))
+    base = write_ivf_pq_index(spark, sf_dir)
     store = DEFAULT_INDEX_STORE
     root = tempfile.mkdtemp(prefix="dvafs-ivfpq-fullretrain-")
     try:
@@ -4995,19 +4700,7 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
 
         # pre-roll: stale serving (append-recall's arithmetic, old
         # coarse probes, old codebook distance table)
-        qtab_old = _np_q(
-            (qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1) ** 2 * _Q
-        ).sum(axis=2)
-        qt_old = F.array(
-            *[
-                F.array(*[F.lit(int(qtab_old[s, j])) for j in range(_PQ_K)])
-                for s in range(_PQ_SUBSPACES)
-            ]
-        )
-        adc_old = None
-        for s in range(_PQ_SUBSPACES):
-            term = F.element_at(F.element_at(qt_old, s + 1), F.col("codes")[s] + 1)
-            adc_old = term if adc_old is None else adc_old + term
+        adc_old = _jvm_adc(adc_table(qv, CT1))
 
         union = (
             emb.filter(F.col("vec_id") != 0)
@@ -5076,9 +4769,8 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
             C1 = C.copy()  # empty cells keep their old centroid
             for r in mstep:
                 C1[r["cell_old"], r["pos"]] = r["sq"] / 1e6 / r["n"]
-            cn1 = np.sqrt(_np_q(C1 * C1 * _Q).sum(axis=1).astype(np.float64))
-            probe_cos = _np_q(C1 * qv[None, :] * _Q).sum(axis=1) / cn1
-            order = np.lexsort((np.arange(len(C1)), -probe_cos))
+            cn1 = sqrt_norm_q(C1)
+            order = np.lexsort((np.arange(len(C1)), -(dot_q(C1, qv) / cn1)))
             probes2 = [int(i) for i in order[:_N_PROBE]]
 
             _assign_new = _coarse_assigner(C1, cn1)
@@ -5097,23 +4789,7 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
         # re-encode EVERYTHING under (new coarse, new codebook) and roll
         # the re-partitioned layout through the store
         v2 = os.path.join(root, "v2")
-        tmp = store.stage(v2)
-        (
-            _encode_to_index_rows(union, _ivf_pq_encoder(C1, cn1, CT1u))
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(tmp)
-        )
-        with open(os.path.join(tmp, _IVF_PQ_MODEL_FILE), "w") as fh:
-            json.dump(
-                {
-                    "format": _IVF_PQ_INDEX_FORMAT,
-                    "C": C1.tolist(),
-                    "CT1": CT1u.tolist(),
-                },
-                fh,
-            )
-        store.publish(tmp, v2)
+        store.publish(_stage_index(store, v2, union, C1, cn1, CT1u), v2)
         store.quarantine(v1)
         store.gc(v1, keep_versions=0, grace_s=0.0)
         old_gone = store.resolve(v1) is None and not os.path.exists(v1)
@@ -5121,19 +4797,7 @@ def sim_ivf_pq_full_retrain_checked(spark: SparkSession, sf_dir: str) -> DataFra
         # post-roll serving from the re-partitioned layout, probes under
         # the NEW centroids — and the at-rest pruning assertions run
         # in-query against this very scan
-        qtab_new = _np_q(
-            (qv.reshape(_PQ_SUBSPACES, 16)[:, None, :] - CT1u) ** 2 * _Q
-        ).sum(axis=2)
-        qt_new = F.array(
-            *[
-                F.array(*[F.lit(int(qtab_new[s, j])) for j in range(_PQ_K)])
-                for s in range(_PQ_SUBSPACES)
-            ]
-        )
-        adc_new = None
-        for s in range(_PQ_SUBSPACES):
-            term = F.element_at(F.element_at(qt_new, s + 1), F.col("codes")[s] + 1)
-            adc_new = term if adc_new is None else adc_new + term
+        adc_new = _jvm_adc(adc_table(qv, CT1u))
         table = read_ivf_pq_index(spark, v2)
         serving = (
             table.filter(F.col("cent_id").isin(probes2) & (F.col("vec_id") != 0))
@@ -5652,24 +5316,11 @@ def _kmeans_scored_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     #5: SemDeDup/Sorscher cluster with iterated k-means in the papers;
     the seed-anchored variants remain as the cheap first-pass)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    _assigned, C1, cell_ids, c1_norm = _lloyd_round(emb)
-
-    @F.pandas_udf("struct<cent_id: int, ccos: double>")
-    def _assign_score(embs: pd.Series) -> pd.DataFrame:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
-        dots = _np_q(V[:, None, :] * C1[None, :, :] * _Q).sum(axis=2)
-        vn = np.sqrt(_np_q(V * V * _Q).sum(axis=1).astype(np.float64))
-        cos = dots / (vn[:, None] * c1_norm[None, :])
-        best = np.argmax(cos, axis=1)  # ties -> first max = smallest cent_id
-        return pd.DataFrame(
-            {
-                "cent_id": cell_ids[best],
-                "ccos": cos[np.arange(len(best)), best],
-            }
-        )
-
+    _assigned, C1, cell_ids, c1_norm = _lloyd_round(spark, sf_dir, emb)
     return emb.select(
-        "vec_id", "embedding", _assign_score("embedding").alias("s")
+        "vec_id",
+        "embedding",
+        _lloyd_assigner(C1, cell_ids, c1_norm)("embedding").alias("s"),
     ).select(
         "vec_id",
         F.col("s.cent_id").alias("cent_id"),
@@ -5902,12 +5553,10 @@ def emb_hard_negative_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # bounded: 5 anchors — the mined query batch IS the model input
     a_ids = [int(r["vec_id"]) for r in arows]
     a_labels = [int(r["label"]) for r in arows]
-    Amat = np.asarray(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in arows]
-    )
-    a_norm = np.sqrt(_np_q(Amat * Amat * _Q).sum(axis=1).astype(np.float64))
+    Amat = as_matrix([r["embedding"] for r in arows])
+    a_norm = sqrt_norm_q(Amat)
 
-    dots = _dots_q_udf([r["embedding"] for r in arows])
+    dots = _dots_q_udf(Amat)
     norm = _self_norm_q_udf()
     scored = (
         emb.select(

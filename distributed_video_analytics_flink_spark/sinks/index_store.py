@@ -37,6 +37,9 @@ import threading
 import time
 
 
+DEFAULT_GRACE_S = 86400.0  # gc's reader grace: older trees are collectable
+
+
 def _mtime_or_zero(path: str) -> float:
     """Sort key that tolerates a concurrent deleter: a path vanishing
     between listing and stat sorts oldest instead of crashing the
@@ -188,7 +191,9 @@ class PosixRenameStore:
     def discard_staged(self, staged: str) -> None:
         shutil.rmtree(staged, ignore_errors=True)
 
-    def gc(self, serving: str, keep_versions: int = 2, grace_s: float = 86400.0) -> list[str]:
+    def gc(
+        self, serving: str, keep_versions: int = 2, grace_s: float = DEFAULT_GRACE_S
+    ) -> list[str]:
         """Bounded retention for the leftovers this store accumulates
         (r11 VERDICT #4): quarantine roots (``{base}.quarantine-*`` — the
         preserved bytes of failed fences) and crash-orphaned staging dirs
@@ -337,7 +342,9 @@ class ManifestPointerStore:
     def discard_staged(self, staged: str) -> None:
         shutil.rmtree(staged, ignore_errors=True)
 
-    def gc(self, serving: str, keep_versions: int = 2, grace_s: float = 86400.0) -> list[str]:
+    def gc(
+        self, serving: str, keep_versions: int = 2, grace_s: float = DEFAULT_GRACE_S
+    ) -> list[str]:
         """Bounded retention for the version prefixes this store
         accumulates forever by design (immutable prefixes under
         ``{serving}.versions/`` — superseded, quarantined, race-loser,

@@ -123,6 +123,52 @@ def test_index_path_tracks_fixture_content(tmp_path):
     assert ivf_pq_index_path(str(tmp_path)) != p1
 
 
+def test_rebuild_removes_expired_index_dirs_of_the_fixture(spark, tmp_path):
+    """A copied fixture rewritten in place builds its index under a new
+    tag. The rebuild keeps the old directory while it is inside gc's
+    reader grace, and removes it once its whole tree is aged past the
+    grace (as sim_ivf_pq_gc_checked ages a superseded version): one
+    directory per fixture is left."""
+    import os
+    import shutil
+    import time
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "embeddings.parquet"
+
+    def rewrite(mtime):
+        shutil.copy(f"{SF}/embeddings.parquet", src)
+        os.utime(src, (mtime, mtime))
+
+    def age(path):
+        old = time.time() - 7 * 86400
+        for r, ds, fs in os.walk(path):
+            for nm in ds + fs:
+                os.utime(os.path.join(r, nm), (old, old))
+        os.utime(path, (old, old))
+
+    def fixture_dirs(path):
+        root, name = os.path.split(path)
+        prefix = name.rsplit("_", 1)[0] + "_"
+        return sorted(os.path.join(root, e) for e in os.listdir(root) if e.startswith(prefix))
+
+    paths = []
+    try:
+        for step, mtime in enumerate((1e9, 1e9 + 10, 1e9 + 20)):
+            rewrite(mtime)
+            paths.append(write_ivf_pq_index(spark, str(sf)))
+            if step == 1:  # the first build is still inside the grace
+                assert fixture_dirs(paths[1]) == sorted(paths)
+                for p in paths:
+                    age(p)
+        assert len(set(paths)) == 3
+        assert fixture_dirs(paths[2]) == [paths[2]]
+    finally:
+        for p in paths:
+            shutil.rmtree(p, ignore_errors=True)
+
+
 def test_index_cache_root_is_private_and_validated(tmp_path):
     """The index cache lives in a per-user 0700 subdirectory of the temp
     dir (ADVICE r7): another local user cannot squat the predictable path,

@@ -124,9 +124,10 @@ def test_nested_call_and_distinct_keys_do_not_wait(spark, clean_memo):
 
 
 def test_fixture_rewritten_in_place_misses(spark, tmp_path, clean_memo):
-    """A copied embeddings.parquet is rewritten in place: the PQ codebook
-    and the k-NN frame must both miss and equal a fresh build over the
-    new bytes, never serve the values trained on the old ones."""
+    """A copied embeddings.parquet is rewritten in place: the PQ codebook,
+    the IVF coarse prelude and the k-NN frame must all miss and equal a
+    fresh build over the new bytes, never serve the values built from
+    the old ones."""
     sf = str(tmp_path)
     src = tmp_path / "embeddings.parquet"
     shutil.copy(f"{SF_DIR}/embeddings.parquet", src)
@@ -134,10 +135,14 @@ def test_fixture_rewritten_in_place_misses(spark, tmp_path, clean_memo):
     def codebook():
         return S._fixture_codebook(spark, sf, load_table(spark, sf, "embeddings"))
 
+    def coarse():
+        return S._fixture_coarse(spark, sf, load_table(spark, sf, "embeddings"))
+
     def knn_rows(df):
         return sorted(tuple(r) for r in df.collect())
 
     old_cb = codebook()
+    old_coarse = coarse()
     old_knn = knn_rows(S._shared_knn_frame(spark, sf))
 
     # every vector moves to the next vec_id: labels and ids stay, the
@@ -150,10 +155,12 @@ def test_fixture_rewritten_in_place_misses(spark, tmp_path, clean_memo):
     table = table.set_column(i, "embedding", rolled)
     pq.write_table(table, src)
 
-    cb0, knn0 = _stats("pq_codebook"), _stats("knn_frame")
+    cb0, co0, knn0 = _stats("pq_codebook"), _stats("ivf_coarse"), _stats("knn_frame")
     new_cb = codebook()
+    new_coarse = coarse()
     new_knn = knn_rows(S._shared_knn_frame(spark, sf))
     assert _stats("pq_codebook")["misses"] == cb0["misses"] + 1
+    assert _stats("ivf_coarse")["misses"] == co0["misses"] + 1
     assert _stats("knn_frame")["misses"] == knn0["misses"] + 1
 
     fresh_emb = load_table(spark, sf, "embeddings")
@@ -165,7 +172,35 @@ def test_fixture_rewritten_in_place_misses(spark, tmp_path, clean_memo):
             k=3,
         )
     )
+    fresh_coarse = S._ivf_coarse_and_query(fresh_emb)
     assert all(np.array_equal(a, b) for a, b in zip(new_cb, fresh_cb))
+    assert all(np.array_equal(a, b) for a, b in zip(new_coarse, fresh_coarse))
     assert new_knn == fresh_knn
     assert not np.array_equal(old_cb[1], new_cb[1])
+    assert not np.array_equal(old_coarse[0], new_coarse[0])
     assert old_knn != new_knn
+    # the memoized arrays are read-only: an in-place edit raises at once
+    with pytest.raises(ValueError):
+        new_coarse[0][0, 0] = 0.0
+
+
+def test_second_ivf_topk_call_reuses_the_coarse_prelude(spark, tmp_path, clean_memo):
+    """sim_ivf_topk's driver prelude (centroid and query collects) runs
+    once per session and fixture content: on a copied fixture, a second
+    call in the same session launches 2 fewer jobs than the first."""
+    sf = str(tmp_path)
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    sc = spark.sparkContext
+
+    def jobs_of_call(group):
+        sc.setJobGroup(group, "ivf prelude job count")
+        try:
+            df = S.sim_ivf_topk(spark, sf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+    n_first, first = jobs_of_call("ivf-topk-first")
+    n_second, second = jobs_of_call("ivf-topk-second")
+    assert n_first - n_second == 2, (n_first, n_second)
+    assert sorted(first.collect()) == sorted(second.collect())
