@@ -2938,8 +2938,9 @@ def _validated_live_dir(serving: str, store) -> str:
         or not os.path.exists(os.path.join(live, _IVF_PQ_MODEL_FILE))
     ):
         raise RuntimeError(
-            f"existing index at {serving!r} failed ownership/completeness "
-            "validation; refusing to serve from it"
+            f"index at {serving!r} failed ownership/completeness validation "
+            f"(need an owned directory with _SUCCESS + {_IVF_PQ_MODEL_FILE}); "
+            "refusing to serve from it"
         )
     return live
 
@@ -3005,19 +3006,7 @@ def _load_index_model(path: str, store=None):
     object store)."""
     import json
 
-    store = _index_store(store)
-    live = store.resolve(path)
-    if (
-        live is None
-        or os.stat(live).st_uid != os.getuid()
-        or not os.path.exists(os.path.join(live, "_SUCCESS"))
-        or not os.path.exists(os.path.join(live, _IVF_PQ_MODEL_FILE))
-    ):
-        raise RuntimeError(
-            f"no complete owned IVF+PQ index at {path!r} (need _SUCCESS + "
-            f"{_IVF_PQ_MODEL_FILE}); build with write_ivf_pq_index first"
-        )
-    path = live
+    path = _validated_live_dir(path, _index_store(store))
     with open(os.path.join(path, _IVF_PQ_MODEL_FILE)) as fh:
         model = json.load(fh)
     if model.get("format") != _IVF_PQ_INDEX_FORMAT:

@@ -887,7 +887,7 @@ def video_motion_gif_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     colors, so the GIF palette is exact and the roundtrip is lossless) is
     written in-session as a raw-DIB AVI (bit-exact BGR reference) plus the
     two GIF layouts, all ingested through ``read_video_files`` (the GIF
-    branch dispatches by content magic into the compositing decoder), and
+    row of the container table, sniffed by content magic), and
     each GIF leg is joined to the reference leg on ts_us comparing
     detection_count and the exact boxes JSON. Per layout the query emits
     frame count, motion-frame count (the block appears at frame 4 and
@@ -1026,8 +1026,8 @@ def video_motion_apng_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     GIF contract (the block appears at frame 4 and moves through frame
     9: 6 motion frames) is written in-session as a raw-DIB AVI
     (bit-exact BGR reference) plus the three APNG layouts, all ingested
-    through ``read_video_files`` (the PNG-magic branch dispatches into
-    the APNG compositing decoder via is_apng), and each APNG leg is
+    through ``read_video_files`` (the APNG row of the container table,
+    sniffed by is_apng before the still-PNG row), and each APNG leg is
     joined to the reference leg on (ts_us, reference camId), comparing
     detection_count and the exact boxes JSON. The oracle pins frame
     count, motion-frame count, and the parity boolean to literal TRUE —

@@ -29,6 +29,13 @@ arithmetic with round-half-up so the output is deterministic across
 platforms. Emitted frames are the full canvas flattened over opaque
 black to the engine's (H, W, 3) BGR contract — the same stance as the
 GIF decoder's background flatten.
+
+Ingest: ``decode_apng``/``probe_apng`` are this format's row in the
+container table (sources/video_files.py::CONTAINERS), sniffed by
+:func:`is_apng` BEFORE the still-PNG row; the table's ``permissive``
+wrapper turns a header error into zero frames and a corrupt tail into
+the end of the stream, for ``read_video_files``, ``read_video_chunks``
+and ``format("apng")`` alike.
 """
 
 from __future__ import annotations
@@ -102,8 +109,10 @@ def _over(dst: np.ndarray, src: np.ndarray) -> np.ndarray:
 def decode_apng(data: bytes, max_frames: int = 1 << 30) -> Iterator[np.ndarray]:
     """Yield full-canvas composited BGR uint8 frames (eager header/acTL
     parse: a non-APNG or implausible header raises before the first
-    yield; malformed frame data raises ApngError from the iterator,
-    which the permissive wrapper maps to end-of-usable-stream)."""
+    yield; malformed frame data raises ApngError from the iterator).
+    Strict on purpose: the container table in sources/video_files.py
+    applies the one bad-file policy (``permissive``) to every ingest
+    path."""
     if data[:8] != _PNG_SIG:
         raise ApngError("not a PNG stream")
     w = h = None
@@ -251,28 +260,6 @@ def decode_apng(data: bytes, max_frames: int = 1 << 30) -> Iterator[np.ndarray]:
             yield from emit()
 
     return frames()
-
-
-def decode_apng_permissive(
-    data: bytes, max_frames: int = 1 << 30
-) -> tuple[None, Iterator[np.ndarray]]:
-    """Strict-header/permissive-tail split, the exact contract of
-    gif.decode_gif_permissive: header/acTL errors yield an empty stream,
-    a corrupt tail ends the stream after the good prefix."""
-    try:
-        frames = decode_apng(data, max_frames=max_frames)
-    except ApngError:
-        return None, iter(())
-
-    def _tail() -> Iterator[np.ndarray]:
-        try:
-            yield from frames
-        except ApngError:
-            # the strict decoder wraps zlib/unfilter failures in
-            # ApngError, so this one except covers the whole surface
-            return
-
-    return None, _tail()
 
 
 def probe_apng(data: bytes) -> dict:

@@ -29,16 +29,16 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 from dataclasses import dataclass
+from itertools import islice
 
 import numpy as np
 
 from distributed_video_analytics_flink_spark.sources.jpeg import (
-    JpegError,
-    decode_jpeg,
     encode_jpeg,
     is_jpeg,
     jpeg_dims,
 )
+from distributed_video_analytics_flink_spark.sources.mjpeg import mjpeg_frames
 
 AVI_MAGIC_FORM = b"AVI "  # RIFF form type at bytes 8:12
 _MJPG_FOURCCS = (0x47504A4D, 0x67706A6D)  # 'MJPG' / 'mjpg' little-endian
@@ -176,54 +176,67 @@ def parse_avi_header(data: bytes) -> AviHeader:
     )
 
 
+def _stream_chunks(data: bytes, hdr: AviHeader) -> Iterator[tuple[int, int, int]]:
+    """(body_offset, clamped_size, declared_size) per movi chunk of the
+    header's video stream."""
+    want = (b"%02ddb" % hdr.stream_id, b"%02ddc" % hdr.stream_id)
+    for cid, body, size, declared in _chunks(data, hdr.movi_start, hdr.movi_end):
+        if cid in want:
+            yield body, size, declared
+
+
+def _mjpeg_chunks(data: bytes, hdr: AviHeader) -> Iterator[bytes]:
+    """The MJPEG demux: each whole video chunk with a JPEG signature, by
+    offset math alone; a chopped final chunk ends the stream and a
+    non-JPEG chunk under the stream id is skipped."""
+    for body, size, declared in _stream_chunks(data, hdr):
+        if size < declared:
+            return
+        if is_jpeg(data[body : body + 3]):
+            yield data[body : body + size]
+
+
+def demux_mjpeg_avi(
+    data: bytes, max_frames: int | None = None
+) -> Iterator[tuple[int, int, bytes]]:
+    """``(src_rows, src_cols, jpeg_bytes)`` per MJPEG chunk, at most
+    ``max_frames`` of them. Raises AviError eagerly on a bad header or a
+    stream that is not MJPEG."""
+    hdr = parse_avi_header(data)
+    if hdr.codec != "mjpeg":
+        raise AviError(f"not an MJPEG stream ({hdr.codec})")
+    return islice(((hdr.height, hdr.width, c) for c in _mjpeg_chunks(data, hdr)), max_frames)
+
+
+def _dib_frames(data: bytes, hdr: AviHeader) -> Iterator[np.ndarray]:
+    h, w, stride = hdr.height, hdr.width, hdr.stride
+    need = stride * h
+    for body, size, _ in _stream_chunks(data, hdr):
+        if size < need:
+            continue
+        img = (
+            np.frombuffer(data, np.uint8, need, body)
+            .reshape(h, stride)[:, : w * 3]
+            .reshape(h, w, 3)
+        )
+        yield img if hdr.top_down else img[::-1]
+
+
 def decode_avi(
     data: bytes, max_frames: int | None = None
 ) -> tuple[AviHeader, Iterator[np.ndarray]]:
-    """Parse header and return (header, iterator of (H, W, 3) BGR frames).
+    """Parse header and return (header, iterator of (H, W, 3) BGR frames),
+    at most ``max_frames`` of them.
 
     Frame slicing is offset math over the movi chunk run — the file is
-    never copied; a short or padded-odd final chunk ends the stream
-    (PERMISSIVE, matching decode_y4m's corrupt-input stance)."""
+    never copied; a short raw-DIB chunk is skipped. MJPEG is the demux
+    above, then the shared per-chunk rule (sources/mjpeg.py)."""
     hdr = parse_avi_header(data)
-    want = (b"%02ddb" % hdr.stream_id, b"%02ddc" % hdr.stream_id)
-
-    def frames() -> Iterator[np.ndarray]:
-        h, w, stride = hdr.height, hdr.width, hdr.stride
-        need = stride * h
-        emitted = 0
-        for cid, body, size, declared in _chunks(data, hdr.movi_start, hdr.movi_end):
-            if max_frames is not None and emitted >= max_frames:
-                return
-            if cid not in want:
-                continue
-            if hdr.codec == "mjpeg":
-                if size < declared:
-                    return  # chopped final chunk ends the stream
-                if not is_jpeg(data[body : body + 3]):
-                    continue  # non-JPEG chunk under this stream id: skip
-                try:
-                    img = decode_jpeg(data[body : body + size])
-                except JpegError:
-                    continue  # undecodable chunk: skip, like raw's short-chunk stance
-                if img.shape[:2] != (h, w):
-                    # a frame whose SOF dims disagree with the stream header
-                    # would emit mixed-shape frames into one camId and crash
-                    # the motion pipeline's absdiff — skip it
-                    continue
-                yield img
-                emitted += 1
-                continue
-            if size < need:
-                continue
-            img = (
-                np.frombuffer(data, np.uint8, need, body)
-                .reshape(h, stride)[:, : w * 3]
-                .reshape(h, w, 3)
-            )
-            yield img if hdr.top_down else img[::-1]
-            emitted += 1
-
-    return hdr, frames()
+    if hdr.codec == "mjpeg":
+        frames = mjpeg_frames(_mjpeg_chunks(data, hdr), (hdr.height, hdr.width))
+    else:
+        frames = _dib_frames(data, hdr)
+    return hdr, islice(frames, max_frames)
 
 
 def probe_avi(data: bytes) -> dict:
@@ -231,26 +244,17 @@ def probe_avi(data: bytes) -> dict:
     header fields + frame count by chunk-walking movi — no pixel work.
 
     For the raw codec the chunk-size predicate matches decode_avi exactly
-    (probe n_frames == decoded frames). For MJPEG, n_frames counts
-    complete chunks with a JPEG signature — an UPPER BOUND on decoded
-    frames, since decode additionally skips chunks whose body fails to
-    parse or whose SOF dims disagree with the header; an exact count
-    would need per-chunk pixel work, which a probe must not do."""
+    (probe n_frames == decoded frames). For MJPEG, n_frames counts the
+    demuxed chunks — an UPPER BOUND on decoded frames, since decode
+    additionally skips chunks whose body fails to parse or whose SOF dims
+    disagree with the header; an exact count would need per-chunk pixel
+    work, which a probe must not do."""
     hdr = parse_avi_header(data)
-    want = (b"%02ddb" % hdr.stream_id, b"%02ddc" % hdr.stream_id)
     if hdr.codec == "mjpeg":
-        n = sum(
-            1
-            for cid, body, size, declared in _chunks(data, hdr.movi_start, hdr.movi_end)
-            if cid in want and size == declared and is_jpeg(data[body : body + 3])
-        )
+        n = sum(1 for _ in _mjpeg_chunks(data, hdr))
     else:
         need = hdr.stride * hdr.height
-        n = sum(
-            1
-            for cid, _, size, _d in _chunks(data, hdr.movi_start, hdr.movi_end)
-            if cid in want and size >= need
-        )
+        n = sum(1 for _, size, _d in _stream_chunks(data, hdr) if size >= need)
     return {
         "duration_s": (n / hdr.fps) if hdr.fps else None,
         "width": float(hdr.width),

@@ -14,7 +14,11 @@ format instead of a binaryFile+mapInPandas recipe. The formats:
 
 - ``y4m``, ``avi``, ``gif``, ``apng``: frame rows (schemas.
   FRAME_SCHEMA, raw BGR pixels) that feed ``detect_motion_batch``
-  unchanged.
+  unchanged. Each is its row of the container table
+  (video_files.CONTAINERS) under the table's one bad-file policy
+  (``video_files.permissive``): a corrupt header gives the file zero
+  rows, a corrupt tail ends it after the good prefix — the same frames
+  ``read_video_files`` decodes, before its resize.
 - ``videochunks``: compressed passthrough for the r9 shuffle posture.
   MJPEG AVI/MP4 files are demuxed by pure offset math on the scan
   partition and emitted still encoded, so the motion keyBy exchange
@@ -74,26 +78,22 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
-from distributed_video_analytics_flink_spark.sources.apng import (
-    decode_apng_permissive,
-)
 from distributed_video_analytics_flink_spark.sources.audio_files import (
     AUDIO_FEATURES_DDL,
     audio_feature_row,
 )
-from distributed_video_analytics_flink_spark.sources.avi import AviError, decode_avi
-from distributed_video_analytics_flink_spark.sources.gif import decode_gif_permissive
 from distributed_video_analytics_flink_spark.sources.video_files import (
     _EPOCH_US,
     CHUNK_SCHEMA,
+    CONTAINERS,
     FRAME_INTERVAL_MS,
     iter_chunk_rows,
+    permissive,
 )
 from distributed_video_analytics_flink_spark.sources.warc import (
     WARC_RECORDS_DDL,
     warc_record_rows,
 )
-from distributed_video_analytics_flink_spark.sources.y4m import Y4MError, decode_y4m
 
 
 def _read_file(path: str) -> bytes:
@@ -111,32 +111,6 @@ def _utc(ts_us: int) -> _dt.datetime:
     return _dt.datetime.fromtimestamp(ts_us / 1e6, tz=_dt.timezone.utc).replace(
         tzinfo=None
     )
-
-
-def permissive_header(
-    decode: Callable[[bytes, int], tuple], err: type[Exception]
-) -> Callable[[bytes, int], tuple]:
-    """Wrap a ``(data, max_frames) -> (header, frames)`` decoder so a
-    file whose header fails to parse contributes ZERO rows instead of
-    killing the task — the same PERMISSIVE stance as read_video_files'
-    dispatch, where each branch guards its format error (r10 review
-    follow-up: one corrupt .y4m in a directory previously failed the
-    whole ``format("y4m")`` scan, while the binaryFile path tolerated
-    it). ``err`` stays format-specific on purpose: catching ValueError
-    broadly here would also mask genuine decoder bugs. GIF and APNG need
-    no wrapper: their strict-header/permissive-tail stance is the ONE
-    shared implementation in gif.decode_gif_permissive /
-    apng.decode_apng_permissive (also used by video_files), so the
-    binaryFile and format() paths cannot drift on which corrupt files
-    kill tasks — a corrupt tail ends the stream after the good prefix."""
-
-    def _wrapped(data: bytes, max_frames: int):
-        try:
-            return decode(data, max_frames)
-        except err:
-            return None, iter(())
-
-    return _wrapped
 
 
 def _chunk_rows(
@@ -168,17 +142,18 @@ class Format(NamedTuple):
     options: dict[str, int]  # settable int option -> default
 
 
-def _frame_format(ext: str, decode: Callable[[bytes, int], tuple]) -> Format:
-    """A frame format: ``decode(data, max_frames) -> (header, iterator of
-    (H, W, 3) BGR)`` is the signature every frame decoder shares; rows
-    are in FRAME_SCHEMA order, camId from the file stem, timestamps paced
-    FRAME_INTERVAL_MS from the deterministic epoch."""
+def _frame_format(kind: str) -> Format:
+    """A frame format: the ``kind`` row of the container table under the
+    one bad-file policy (``video_files.permissive``); rows are in
+    FRAME_SCHEMA order at the container's own dims, camId from the file
+    stem, timestamps paced FRAME_INTERVAL_MS from the deterministic
+    epoch."""
+    frames_of = permissive(CONTAINERS[kind].decode, CONTAINERS[kind].err)
 
     def rows(path: str, maxframesperfile: int) -> Iterator[tuple]:
         data = _read_file(path)
         cam = _cam_id(path)
-        _, frames = decode(data, maxframesperfile)
-        for i, bgr in enumerate(frames):
+        for i, bgr in enumerate(frames_of(data, maxframesperfile) or ()):
             yield (
                 cam,
                 _utc(_EPOCH_US + i * FRAME_INTERVAL_MS * 1000),
@@ -188,14 +163,11 @@ def _frame_format(ext: str, decode: Callable[[bytes, int], tuple]) -> Format:
                 bgr.tobytes(),
             )
 
-    return Format((ext,), FRAME_SCHEMA, rows, {"maxframesperfile": 64})
+    return Format((kind,), FRAME_SCHEMA, rows, {"maxframesperfile": 64})
 
 
 FORMATS: dict[str, Format] = {
-    "y4m": _frame_format("y4m", permissive_header(decode_y4m, Y4MError)),
-    "avi": _frame_format("avi", permissive_header(decode_avi, AviError)),
-    "gif": _frame_format("gif", decode_gif_permissive),
-    "apng": _frame_format("apng", decode_apng_permissive),
+    **{kind: _frame_format(kind) for kind in ("y4m", "avi", "gif", "apng")},
     # ONE schema string by design (r14 review): format("videochunks")
     # rows and read_video_chunks rows must never drift — the shared
     # iter_chunk_rows exists for exactly that, and the schema rides

@@ -37,6 +37,12 @@ Graphic Control transparency index leave the underlying canvas untouched.
 Every yielded frame is the FULL composited canvas as BGR uint8 — the same
 shape contract as decode_y4m/decode_avi, so the motion pipeline consumes
 GIF bytes unchanged.
+
+Ingest: ``decode_gif``/``probe_gif`` are this format's row in the
+container table (sources/video_files.py::CONTAINERS); the table's
+``permissive`` wrapper turns a header error into zero frames and a
+corrupt tail into the end of the stream, for ``read_video_files``,
+``read_video_chunks`` and ``format("gif")`` alike.
 """
 
 from __future__ import annotations
@@ -248,7 +254,9 @@ def decode_gif(data: bytes, max_frames: int = 1 << 30) -> Iterator[np.ndarray]:
     """Yield full-canvas composited BGR uint8 frames (eager header parse,
     like decode_y4m/decode_avi: header errors raise before the first
     yield; a malformed BLOCK mid-stream raises GifError from the
-    iterator, which callers treat as end-of-usable-stream)."""
+    iterator). Strict on purpose: the container table in
+    sources/video_files.py applies the one bad-file policy
+    (``permissive``) to every ingest path."""
     hdr = parse_gif_header(data)
 
     def frames() -> Iterator[np.ndarray]:
@@ -334,32 +342,6 @@ def decode_gif(data: bytes, max_frames: int = 1 << 30) -> Iterator[np.ndarray]:
             transparent = None
 
     return frames()
-
-
-def decode_gif_permissive(
-    data: bytes, max_frames: int = 1 << 30
-) -> tuple[None, Iterator[np.ndarray]]:
-    """The ONE permissive wrapper every ingest path shares (review
-    finding: video_files and the gif Data Source each hand-rolled this,
-    so a stance fix could land in one and not the other): strict-header
-    errors yield an empty stream (zero rows for the file), a corrupt
-    tail ends the stream after the good prefix — a bad file never kills
-    the task. ``decode_gif`` itself stays strict for tests. Returns
-    ``(None, frames)`` matching the (header, frames) decoder signature
-    of decode_y4m/decode_avi so sources/datasources.py can call it
-    directly."""
-    try:
-        frames = decode_gif(data, max_frames=max_frames)
-    except GifError:
-        return None, iter(())
-
-    def _tail() -> Iterator[np.ndarray]:
-        try:
-            yield from frames
-        except GifError:
-            return
-
-    return None, _tail()
 
 
 def probe_gif(data: bytes) -> dict:

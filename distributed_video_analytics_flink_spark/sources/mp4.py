@@ -39,9 +39,17 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
+from itertools import islice
 from typing import Any
 
 import numpy as np
+
+from distributed_video_analytics_flink_spark.sources.jpeg import (
+    encode_jpeg,
+    is_jpeg,
+    jpeg_dims,
+)
+from distributed_video_analytics_flink_spark.sources.mjpeg import mjpeg_frames
 
 _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 
@@ -372,15 +380,41 @@ def video_sample_ranges(trak: dict[str, Any]) -> Iterator[tuple[int, int]]:
             s += 1
 
 
-def mjpeg_sample_ranges(content: bytes) -> tuple[dict[str, Any], list[tuple[int, int]]]:
-    """(video trak, its sample ranges) for an MJPEG-carrying MP4. Non-MP4
-    input, a missing video track or sample table, or a non-MJPEG codec
-    raise Mp4Error."""
+def _mjpeg_samples(content: bytes) -> tuple[dict[str, Any], Iterator[bytes]]:
+    """The MJPEG demux: (video trak, each whole sample with a JPEG
+    signature). A sample range past the end of the buffer ends the stream
+    (truncated mdat); a foreign sample under an MJPEG entry is skipped.
+    Non-MP4 input, a missing video track or sample table, or a non-MJPEG
+    codec raise Mp4Error EAGERLY."""
     trak = _find_video_trak(content)
     codec = trak.get("codec")
     if codec not in MJPEG_SAMPLE_ENTRIES:
         raise Mp4Error(f"unsupported codec {codec!r} (MJPEG sample entries only)")
-    return trak, list(video_sample_ranges(trak))
+    ranges = list(video_sample_ranges(trak))
+
+    def samples() -> Iterator[bytes]:
+        for off, size in ranges:
+            if off + size > len(content):
+                return
+            if is_jpeg(content[off : off + 3]):
+                yield content[off : off + size]
+
+    return trak, samples()
+
+
+def _track_dims(trak: dict[str, Any]) -> tuple[int, int]:
+    return int(trak.get("height") or 0), int(trak.get("width") or 0)
+
+
+def demux_mjpeg_mp4(
+    content: bytes, max_frames: int | None = None
+) -> Iterator[tuple[int, int, bytes]]:
+    """``(src_rows, src_cols, jpeg_bytes)`` per MJPEG sample, at most
+    ``max_frames`` of them; the dims are the track header's (0 = unknown).
+    Raises Mp4Error like :func:`_mjpeg_samples`."""
+    trak, samples = _mjpeg_samples(content)
+    sr, sc = _track_dims(trak)
+    return islice(((sr, sc, s) for s in samples), max_frames)
 
 
 def decode_mp4(
@@ -388,46 +422,11 @@ def decode_mp4(
 ) -> tuple[dict[str, Any], Iterator[np.ndarray]]:
     """REAL pixel decode for MJPEG-carrying MP4s: each video sample is a
     standalone baseline JPEG, decoded through sources/jpeg.py. Returns
-    (video-trak dict, iterator of (H, W, 3) BGR frames).
-
-    PERMISSIVE like the AVI twin: a sample range past the end of the
-    buffer ends the stream (truncated file); a sample whose body fails
-    to parse or whose SOF dims disagree with the track header is
-    SKIPPED, never task-fatal. Non-MP4 input, a missing video track, or
-    a non-MJPEG codec raise Mp4Error EAGERLY (before iteration), so
-    callers guard with one try/except, exactly like decode_avi."""
-    from distributed_video_analytics_flink_spark.sources.jpeg import (
-        JpegError,
-        decode_jpeg,
-        is_jpeg,
-    )
-
-    trak, ranges = mjpeg_sample_ranges(content)
-    want_h = int(trak.get("height") or 0)
-    want_w = int(trak.get("width") or 0)
-
-    def frames() -> Iterator[np.ndarray]:
-        emitted = 0
-        expect = (want_h, want_w) if want_h > 0 and want_w > 0 else None
-        for off, size in ranges:
-            if max_frames is not None and emitted >= max_frames:
-                return
-            if off + size > len(content):
-                return  # truncated mdat ends the stream
-            if not is_jpeg(content[off : off + 3]):
-                continue  # foreign sample under an MJPEG entry: skip
-            try:
-                img = decode_jpeg(content[off : off + size])
-            except JpegError:
-                continue  # undecodable sample: skip, like the AVI stance
-            if expect is None:
-                expect = img.shape[:2]  # first good frame fixes the dims
-            if img.shape[:2] != expect:
-                continue  # mixed-dims sample would crash motion absdiff
-            yield img
-            emitted += 1
-
-    return trak, frames()
+    (video-trak dict, iterator of at most ``max_frames`` (H, W, 3) BGR
+    frames): the demux above, then the shared per-chunk rule
+    (sources/mjpeg.py). Raises Mp4Error eagerly, like the demux."""
+    trak, samples = _mjpeg_samples(content)
+    return trak, islice(mjpeg_frames(samples, _track_dims(trak)), max_frames)
 
 
 def _box(fourcc: bytes, body: bytes) -> bytes:
@@ -452,11 +451,6 @@ def encode_mp4_mjpeg(
     sample, so probe_mp4 reports the exact fps). ``samples_per_chunk``
     defaults to 2 so fixtures exercise the multi-chunk stsc/stco walk,
     not just the single-chunk degenerate case."""
-    from distributed_video_analytics_flink_spark.sources.jpeg import (
-        encode_jpeg,
-        jpeg_dims,
-    )
-
     if not frames_bgr:
         raise Mp4Error("need at least one frame")
     h, w, _ = frames_bgr[0].shape

@@ -6,59 +6,86 @@ Spark shape: ``spark.read.format("binaryFile")`` scans the files (one
 partition per file up to maxPartitionBytes — embarrassingly parallel across
 a 100 TB video corpus), then a ``mapInPandas`` extractor turns each file's
 bytes into frame rows (FRAME_SCHEMA: camId from the file stem,
-timestamps paced 33 ms apart, raw BGR payloads). One dispatch,
-:func:`decode_frames`, picks the container decoder for this scan and for
-the raw-bgr rows of the compressed-passthrough scan alike.
+timestamps paced 33 ms apart, raw BGR payloads).
 
-Decode is REAL for FIVE containers — Y4M (YUV4MPEG2: pure byte-slicing
-header/frame parse + integer-exact YUV->BGR, sources/y4m.py), AVI (RIFF
-chunk walk, sources/avi.py: raw-DIB BGR rows AND per-chunk baseline-JPEG
-MJPEG via sources/jpeg.py), MP4 when the video track carries
-Motion-JPEG samples (ISO BMFF sample-table walk + the same JPEG codec,
-sources/mp4.py), animated GIF (LZW + palette + INTER-FRAME canvas
-compositing with disposal/transparency, sources/gif.py — the first
-genuinely inter-frame format decoded for real), and animated PNG
-(fcTL/fdAT chains through the engine's own PNG unfilter with
-dispose/blend compositing incl. exact-integer alpha OVER,
-sources/apng.py) — plus PNG stills, each
-through the engine's own bicubic resize to the target dims
-(functions/resize.py, the analog of VideoEventCreator.java:75's
-cv2.resize) — so genuine video bytes flow end-to-end through the motion
-pipeline with zero codec dependency.
+Every container is ONE row of :data:`CONTAINERS`: its magic-byte test, its
+strict decoder and that decoder's error class, its metadata probe and,
+for MJPEG carriers, its demux. :func:`sniff_container` names the row by
+content, never by extension, and every consumer is a lookup in the table:
+:func:`decode_frames` (``read_video_files`` and the raw-bgr rows of the
+compressed passthrough), :func:`iter_chunk_rows` (the passthrough),
+:func:`video_container_metadata` and the ``y4m``/``avi``/``gif``/``apng``
+Data Sources (sources/datasources.py). One bad-file policy,
+:func:`permissive`, holds for all of them: a header error gives zero
+frames, a tail error ends the stream after the good prefix. MJPEG chunks
+take one per-chunk rule (sources/mjpeg.py) whether they decode at the
+source or after the shuffle.
 
-MOTION-COMPENSATED codecs (avc1/H.264 etc.) remain a STUB: this container ships
-no cv2/ffmpeg, so such files fall to ``_decode_frames_stub``, which
-synthesizes deterministic frames from the file bytes (content-seeded,
-reproducible). The binaryFile scan, partitioning, Arrow batching, schema,
-and pacing are the production path — swap the stub for a
-``cv2.VideoCapture`` loop when codecs exist.
+The rows: Y4M (sources/y4m.py), AVI — raw-DIB BGR and per-chunk MJPEG
+(sources/avi.py), animated PNG (sources/apng.py, sniffed before the still
+PNG row), PNG stills (functions/png.py), animated GIF with inter-frame
+compositing (sources/gif.py), and MP4 whose video track carries
+Motion-JPEG samples (sources/mp4.py). Frames take the engine's own
+bicubic resize to the target dims (functions/resize.py, the analog of
+VideoEventCreator.java:75's cv2.resize), so genuine video bytes flow
+end-to-end through the motion pipeline with zero codec dependency.
+
+MOTION-COMPENSATED codecs (avc1/H.264 etc.) remain a STUB: this container
+ships no cv2/ffmpeg, so an MP4 whose track is not MJPEG or does not parse
+(the MP4 row's own rule) and any unrecognised bytes fall to
+``_decode_frames_stub``, which synthesizes deterministic frames from the
+file bytes (content-seeded, reproducible). The binaryFile scan,
+partitioning, Arrow batching, schema, and pacing are the production path
+— swap the stub for a ``cv2.VideoCapture`` loop when codecs exist.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_video_analytics_flink_spark.functions.png import decode_png
 from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
+from distributed_video_analytics_flink_spark.sources.apng import (
+    ApngError,
+    decode_apng,
+    is_apng,
+    probe_apng,
+)
 from distributed_video_analytics_flink_spark.sources.avi import (
     AviError,
     decode_avi,
+    demux_mjpeg_avi,
     is_avi,
+    probe_avi,
 )
 from distributed_video_analytics_flink_spark.sources.gif import (
-    decode_gif_permissive,
+    GifError,
+    decode_gif,
     is_gif,
+    probe_gif,
+)
+from distributed_video_analytics_flink_spark.sources.mjpeg import decode_mjpeg_chunk
+from distributed_video_analytics_flink_spark.sources.mp4 import (
+    Mp4Error,
+    decode_mp4,
+    demux_mjpeg_mp4,
+    probe_mp4,
 )
 from distributed_video_analytics_flink_spark.sources.y4m import (
     Y4M_MAGIC,
     Y4MError,
     decode_y4m,
+    probe_y4m,
 )
 
 FRAME_INTERVAL_MS = 33  # ~30 fps pacing (VideoEventCreator.java:78)
@@ -87,23 +114,6 @@ def _decode_frames_stub(
         yield frame
 
 
-def _decode_png_still(content: bytes) -> Iterator[np.ndarray]:
-    """REAL decoder for PNG images (single frame per file): the general
-    stdlib decoder (functions/png.py::decode_png — all five scanline
-    filters, gray/RGB/RGBA). Closes the multimodal loop: the engine's own
-    annotated side-output PNGs (CV7) and externally produced 8-bit images
-    ingest as pixel rows. Unsupported subsets (16-bit, palette,
-    interlaced) yield no rows, not failures (PERMISSIVE)."""
-    import zlib
-
-    from distributed_video_analytics_flink_spark.functions.png import decode_png
-
-    try:
-        yield decode_png(content)
-    except (ValueError, zlib.error):
-        return
-
-
 def _resized(frames: Iterator[np.ndarray], rows: int, cols: int) -> Iterator[np.ndarray]:
     from distributed_video_analytics_flink_spark.functions.resize import cubic_resize
 
@@ -113,75 +123,120 @@ def _resized(frames: Iterator[np.ndarray], rows: int, cols: int) -> Iterator[np.
         yield bgr
 
 
-_MAGIC = (
-    ("y4m", lambda b: b.startswith(Y4M_MAGIC)),
-    ("avi", is_avi),
-    ("png", lambda b: b.startswith(b"\x89PNG")),  # still or animated
-    ("gif", is_gif),
-    ("mp4", lambda b: len(b) >= 12 and b[4:8] == b"ftyp"),
-)
+# the all-null metadata row for a container whose probe fails — ONE
+# definition (r14 review: four copy-pasted fromkeys tuples meant a new
+# metadata column could miss a corrupt-file branch and KeyError at
+# row-build time, the branch hardest to hit in tests)
+_META_KEYS = ("duration_s", "width", "height", "n_frames", "codec", "fps")
+
+
+def _null_meta() -> dict:
+    return dict.fromkeys(_META_KEYS)
+
+
+def _png_still(data: bytes, max_frames: int) -> Iterator[np.ndarray]:
+    """A PNG still is one frame (functions/png.py::decode_png: all five
+    scanline filters, gray/RGB/RGBA) — the engine's own annotated
+    side-output PNGs ingest as pixel rows. Unsupported subsets (16-bit,
+    palette, interlaced) raise, so they give no rows."""
+    return iter((decode_png(data),))
+
+
+def _probe_png(data: bytes) -> dict:
+    w, h = struct.unpack(">II", data[16:24])  # IHDR is always the first chunk
+    return {**_null_meta(), "width": float(w), "height": float(h), "n_frames": 1, "codec": "png"}
+
+
+class Container(NamedTuple):
+    test: Callable[[bytes], bool]  # magic bytes
+    decode: Callable[[bytes, int], Iterator[np.ndarray]]  # strict: raises err
+    err: type[Exception] | tuple[type[Exception], ...]
+    probe: Callable[[bytes], dict]  # metadata dict; raises err
+    # MJPEG carriers: (data, max_frames) -> (src_rows, src_cols, JPEG bytes)
+    # per chunk, raising err on a bad header or a stream that is not MJPEG
+    demux: Callable[[bytes, int], Iterator[tuple[int, int, bytes]]] | None = None
+    # a header error means "a codec this engine does not decode": the stub
+    stub_on_error: bool = False
+
+
+# sniffed in this order (APNG before the still PNG it extends)
+CONTAINERS: dict[str, Container] = {
+    "y4m": Container(
+        lambda b: b.startswith(Y4M_MAGIC),
+        lambda b, n: decode_y4m(b, n)[1],
+        Y4MError,
+        probe_y4m,
+    ),
+    "avi": Container(
+        is_avi, lambda b, n: decode_avi(b, n)[1], AviError, probe_avi, demux_mjpeg_avi
+    ),
+    "apng": Container(is_apng, decode_apng, ApngError, probe_apng),
+    "png": Container(
+        lambda b: b.startswith(b"\x89PNG"),
+        _png_still,
+        (ValueError, zlib.error, struct.error),
+        _probe_png,
+    ),
+    "gif": Container(is_gif, decode_gif, GifError, probe_gif),
+    # probe_mp4 never raises, and it also probes unrecognised bytes
+    "mp4": Container(
+        lambda b: len(b) >= 12 and b[4:8] == b"ftyp",
+        lambda b, n: decode_mp4(b, n)[1],
+        Mp4Error,
+        probe_mp4,
+        demux_mjpeg_mp4,
+        stub_on_error=True,
+    ),
+}
 
 
 def sniff_container(raw: bytes) -> str | None:
-    """The one magic-byte container test, shared by :func:`decode_frames`,
-    :func:`iter_chunk_rows` and :func:`video_container_metadata`: the
-    first ``_MAGIC`` kind whose test passes, or None for unrecognised
-    bytes."""
-    return next((kind for kind, test in _MAGIC if test(raw)), None)
+    """The one magic-byte container test: the first :data:`CONTAINERS`
+    kind whose test passes, or None for unrecognised bytes."""
+    return next((kind for kind, c in CONTAINERS.items() if c.test(raw)), None)
+
+
+def permissive(
+    decode: Callable[[bytes, int], Iterator], err
+) -> Callable[[bytes, int], Iterator | None]:
+    """The one bad-file policy over a strict ``(data, max_frames) ->
+    iterator`` decoder or demux: a header error (raised eagerly, by the
+    call) gives None — no frames; an ``err`` raised mid-iteration ends the
+    stream after the good prefix. A corrupt file never kills the task.
+    ``err`` stays format-specific on purpose: catching ValueError broadly
+    would also mask genuine decoder bugs."""
+
+    def wrapped(data: bytes, max_frames: int) -> Iterator | None:
+        try:
+            items = decode(data, max_frames)
+        except err:
+            return None
+        return _until(items, err)
+
+    return wrapped
+
+
+def _until(items: Iterator, err) -> Iterator:
+    try:
+        yield from items
+    except err:
+        return
 
 
 def decode_frames(
     raw: bytes, rows: int, cols: int, max_frames: int
 ) -> Iterator[np.ndarray]:
     """The container decode, shared by ``read_video_files`` and the
-    raw-bgr fallback of ``iter_chunk_rows``: (rows, cols, 3) BGR frames,
-    picked by :func:`sniff_container`, not by extension. Y4M, AVI
-    (raw-DIB + MJPEG), PNG stills, animated PNG, GIF (inter-frame
-    compositing) and MJPEG-MP4 decode for real, then take the bicubic
-    resize to the pipeline dims when the container dims differ
-    (VideoEventCreator.java:75's resize step). PERMISSIVE throughout: a
-    corrupt Y4M/AVI header yields no frames; GIF and APNG share their
-    strict-header/permissive-tail stance with the ``format("gif")``/
-    ``format("apng")`` Data Sources (``decode_*_permissive``); an MP4
-    whose video track is not MJPEG (avc1/H.264 etc.) or does not parse,
-    and any unrecognised bytes, fall to the compressed-codec stub.
-
-    Header parses run HERE, eagerly, so the guards below see their errors;
-    a lazy generator would defer the raise into the caller's iteration,
-    past the guard."""
-    from distributed_video_analytics_flink_spark.sources.apng import (
-        decode_apng_permissive,
-        is_apng,
-    )
-    from distributed_video_analytics_flink_spark.sources.mp4 import Mp4Error, decode_mp4
-
-    kind = sniff_container(raw)
-    if kind == "y4m":
-        try:
-            _, frames = decode_y4m(raw, max_frames=max_frames)
-        except Y4MError:
-            return iter(())
-    elif kind == "avi":
-        try:
-            _, frames = decode_avi(raw, max_frames=max_frames)
-        except AviError:
-            return iter(())  # corrupt header or unsupported stream
-    elif kind == "png":
-        # acTL before IDAT means animated, else a single still frame
-        if is_apng(raw):
-            _, frames = decode_apng_permissive(raw, max_frames=max_frames)
-        else:
-            frames = _decode_png_still(raw)
-    elif kind == "gif":
-        _, frames = decode_gif_permissive(raw, max_frames=max_frames)
-    elif kind == "mp4":
-        try:
-            _, frames = decode_mp4(raw, max_frames=max_frames)
-        except Mp4Error:
-            return _decode_frames_stub(raw, rows, cols, max_frames)
-    else:
+    raw-bgr rows of ``iter_chunk_rows``: the sniffed row's frames under
+    :func:`permissive`, resized to (rows, cols) when the container dims
+    differ (VideoEventCreator.java:75's resize step). Unrecognised bytes,
+    and a header error on a row with ``stub_on_error``, give the
+    compressed-codec stub."""
+    c = CONTAINERS.get(sniff_container(raw))
+    frames = permissive(c.decode, c.err)(raw, max_frames) if c else None
+    if frames is None and (c is None or c.stub_on_error):
         return _decode_frames_stub(raw, rows, cols, max_frames)
-    return _resized(frames, rows, cols)
+    return _resized(frames or iter(()), rows, cols)
 
 
 def read_video_files(
@@ -236,22 +291,12 @@ def read_video_files(
 # same keyBy (VideoProcessor.java:86-87), and at 100 TB the exchange, not
 # the decode, is the bottleneck (SCALE.md; r8 VERDICT #1).
 # src_rows/src_cols are the container-declared dims (0 = unknown, fixed by
-# the first good frame, matching decode_mp4's stance); rows/cols are the
+# the first good frame: sources/mjpeg.py's rule); rows/cols are the
 # pipeline target dims the post-shuffle decode resizes to.
 CHUNK_SCHEMA = (
     "camId string, timestamp timestamp, src_rows int, src_cols int, "
     "rows int, cols int, codec string, chunk binary"
 )
-
-# the all-null metadata row for a container whose probe fails — ONE
-# definition (r14 review: four copy-pasted fromkeys tuples meant a new
-# metadata column could miss a corrupt-file branch and KeyError at
-# row-build time, the branch hardest to hit in tests)
-_META_KEYS = ("duration_s", "width", "height", "n_frames", "codec", "fps")
-
-
-def _null_meta() -> dict:
-    return dict.fromkeys(_META_KEYS)
 
 
 def iter_chunk_rows(
@@ -259,74 +304,19 @@ def iter_chunk_rows(
 ) -> Iterator[tuple]:
     """One file's compressed-passthrough rows:
     ``(camId, ts_us, src_rows, src_cols, rows, cols, codec, chunk_bytes)``.
-    MJPEG AVI/MP4 demux by pure offset math (codec='mjpeg', chunk = the
-    still-encoded JPEG); everything else decodes source-side as
-    :func:`decode_frames` does for ``read_video_files`` and emits
-    codec='raw-bgr' pixels at the target dims. Each container header is
-    parsed once: a raw-DIB AVI takes its frames from the same
-    ``decode_avi`` call, a non-MJPEG MP4 goes straight to the stub. The
-    single copy shared by the binaryFile scan (:func:`read_video_chunks`)
-    and the ``videochunks`` Data Source (batch + streaming), so skip semantics
-    cannot drift between them."""
-    from distributed_video_analytics_flink_spark.sources.avi import (
-        _chunks as _avi_chunks,
-    )
-    from distributed_video_analytics_flink_spark.sources.jpeg import is_jpeg
-    from distributed_video_analytics_flink_spark.sources.mp4 import (
-        Mp4Error,
-        mjpeg_sample_ranges,
-    )
-
-    def _mjpeg_avi(hdr) -> Iterator[tuple[int, int, bytes]]:
-        want = (b"%02ddb" % hdr.stream_id, b"%02ddc" % hdr.stream_id)
-        n = 0
-        for cid, body, size, declared in _avi_chunks(raw, hdr.movi_start, hdr.movi_end):
-            if n >= max_frames:
-                return
-            if cid not in want:
-                continue
-            if size < declared:
-                return  # chopped final chunk ends the stream
-            if not is_jpeg(raw[body : body + 3]):
-                continue
-            yield hdr.height, hdr.width, raw[body : body + size]
-            n += 1
-
-    def _mjpeg_mp4(trak, ranges) -> Iterator[tuple[int, int, bytes]]:
-        sr = int(trak.get("height") or 0)
-        sc = int(trak.get("width") or 0)
-        n = 0
-        for off, size in ranges:
-            if n >= max_frames:
-                return
-            if off + size > len(raw):
-                return  # truncated mdat ends the stream
-            if not is_jpeg(raw[off : off + 3]):
-                continue
-            yield sr, sc, raw[off : off + size]
-            n += 1
-
-    kind = sniff_container(raw)
-    chunks: Iterator[tuple[int, int, bytes]] | None = None
-    if kind == "avi":
-        try:
-            hdr, frames = decode_avi(raw, max_frames=max_frames)
-        except AviError:
-            return  # corrupt header: no rows, no failure
-        if hdr.codec == "mjpeg":
-            chunks = _mjpeg_avi(hdr)
-        else:
-            frames = _resized(frames, rows, cols)
-    elif kind == "mp4":
-        try:
-            chunks = _mjpeg_mp4(*mjpeg_sample_ranges(raw))
-        except Mp4Error:  # decode_mp4 would raise the same: the stub
-            frames = _decode_frames_stub(raw, rows, cols, max_frames)
-    else:
-        frames = decode_frames(raw, rows, cols, max_frames)
+    A container row with a demux emits its MJPEG chunks still encoded
+    (codec='mjpeg'); everything else — no demux, a stream that is not
+    MJPEG, a bad header — decodes source-side through
+    :func:`decode_frames` and emits codec='raw-bgr' pixels at the target
+    dims. The single copy shared by the binaryFile scan
+    (:func:`read_video_chunks`) and the ``videochunks`` Data Source (batch
+    + streaming), so skip semantics cannot drift between them."""
+    c = CONTAINERS.get(sniff_container(raw))
+    chunks = permissive(c.demux, c.err)(raw, max_frames) if c and c.demux else None
     codec = "mjpeg"
     if chunks is None:  # decoded at the source: these bytes ARE pixels
         codec = "raw-bgr"
+        frames = decode_frames(raw, rows, cols, max_frames)
         chunks = ((rows, cols, f.tobytes()) for f in frames)
     for i, (sr, sc, body) in enumerate(chunks):
         yield (
@@ -349,10 +339,10 @@ def decode_chunk_to_pixels(
     and streaming motion operators alike.
     Returns pixel bytes at the target dims, None (null payload ->
     PERMISSIVE empty frame), or Ellipsis meaning SKIP (drop the row, keep
-    the previous-frame carry) — the exact stance the source-side decoders
-    take per bad chunk. ``expect`` carries each camera's fixed frame dims
-    (header-declared when known, else the first good frame fixes them —
-    decode_mp4's rule).
+    the previous-frame carry) — the source-side decoders' per-chunk rule,
+    because it is the same function (sources/mjpeg.py::
+    decode_mjpeg_chunk). ``expect`` carries each camera's fixed frame dims
+    across calls.
 
     Dims may arrive as pandas-nullable values (a PERMISSIVE parse nulls
     them, and Arrow hands nullable ints to pandas as NaN floats);
@@ -373,20 +363,9 @@ def decode_chunk_to_pixels(
         # kill the task; r9 ADVICE)
         return None
     from distributed_video_analytics_flink_spark.functions.resize import cubic_resize
-    from distributed_video_analytics_flink_spark.sources.jpeg import (
-        JpegError,
-        decode_jpeg,
-    )
 
-    try:
-        img = decode_jpeg(bytes(chunk))
-    except JpegError:
-        return Ellipsis
-    exp = expect.get(cam)
-    if exp is None:
-        exp = (sr, sc) if sr > 0 and sc > 0 else img.shape[:2]
-        expect[cam] = exp
-    if img.shape[:2] != exp:
+    img = decode_mjpeg_chunk(expect, cam, (sr, sc), bytes(chunk))
+    if img is None:
         return Ellipsis
     if img.shape[:2] != (r, c):
         img = cubic_resize(img, r, c)
@@ -443,9 +422,9 @@ def read_video_chunks(
     max_frames_per_file: int = 64,
 ) -> DataFrame:
     """S4 compressed-passthrough scan: like ``read_video_files`` but MJPEG
-    containers (AVI + MP4) are demuxed WITHOUT decoding — pure chunk/sample
-    offset math (sources/avi.py::_chunks, sources/mp4.py::
-    video_sample_ranges) yields the per-frame JPEG bytes as ``chunk`` rows
+    containers (AVI + MP4) are demuxed WITHOUT decoding — each container
+    row's demux (pure chunk/sample offset math, sources/avi.py and
+    sources/mp4.py) yields the per-frame JPEG bytes as ``chunk`` rows
     (codec='mjpeg'), deferring the expensive entropy decode until AFTER the
     motion pipeline's keyBy shuffle, where the pixels are consumed exactly
     once (operators/video.py::detect_motion_batch's chunk branch).
@@ -500,51 +479,21 @@ def video_container_metadata(
     spark: SparkSession, path: str, glob: str = "*.{mp4,y4m,avi,gif,apng}"
 ) -> DataFrame:
     """REAL (no stub) container-metadata scan over video files: binaryFile
-    scan + pure-stdlib ISO BMFF probe (sources/mp4.py) -> one row per file
-    with duration, dimensions, frame count, codec fourcc, and fps —
+    scan + the sniffed :data:`CONTAINERS` row's pure-stdlib probe (the ISO
+    BMFF probe, sources/mp4.py, takes MP4s and unrecognised bytes) -> one
+    row per file with duration, dimensions, frame count, codec, and fps —
     including fragmented MP4s and Y4M streams. This is the planning pass
     the reference gets from OpenCV stream properties
     (VideoEventCreator.java:54-96), with no codec dependency; tests drive
     it against the reference's own sample videos. Corrupt/unknown files
     yield null metadata columns, not task failures (PERMISSIVE, like the
     JSON source)."""
-    import struct
-
-    from distributed_video_analytics_flink_spark.sources.apng import (
-        ApngError,
-        is_apng,
-        probe_apng,
-    )
-    from distributed_video_analytics_flink_spark.sources.avi import probe_avi
-    from distributed_video_analytics_flink_spark.sources.gif import GifError, probe_gif
-    from distributed_video_analytics_flink_spark.sources.mp4 import probe_mp4
-    from distributed_video_analytics_flink_spark.sources.y4m import probe_y4m
-
-    # probe_mp4 never raises: it takes MP4s and every unrecognised file
-    probes = {
-        "y4m": (probe_y4m, Y4MError),
-        "avi": (probe_avi, AviError),
-        "gif": (probe_gif, GifError),
-        "apng": (probe_apng, ApngError),
-        None: (probe_mp4, ()),
-    }
 
     def _meta(b: bytes) -> dict:
-        kind = sniff_container(b)
-        if kind == "png":
-            if len(b) < 24:
-                kind = None
-            elif is_apng(b):
-                kind = "apng"
-            else:
-                # still PNG: IHDR is always the first chunk
-                w, h = struct.unpack(">II", b[16:24])
-                meta = {"width": float(w), "height": float(h), "n_frames": 1}
-                return {**_null_meta(), **meta, "codec": "png"}
-        probe, err = probes.get(kind, probes[None])
+        c = CONTAINERS.get(sniff_container(b), CONTAINERS["mp4"])
         try:
-            return probe(b)
-        except err:
+            return c.probe(b)
+        except c.err:
             return _null_meta()
 
     files = (

@@ -23,7 +23,6 @@ from distributed_video_analytics_flink_spark.operators.video import detect_motio
 from distributed_video_analytics_flink_spark.sources.apng import (
     ApngError,
     decode_apng,
-    decode_apng_permissive,
     encode_apng,
     is_apng,
     probe_apng,
@@ -31,6 +30,7 @@ from distributed_video_analytics_flink_spark.sources.apng import (
 from distributed_video_analytics_flink_spark.sources.avi import encode_avi
 from distributed_video_analytics_flink_spark.sources.video_files import (
     iter_chunk_rows,
+    permissive,
     read_video_files,
     video_container_metadata,
 )
@@ -149,7 +149,7 @@ def test_corrupt_tail_permissive():
     data = bytearray(encode_apng(_moving_square(4), delta=True))
     i = bytes(data).rfind(b"fdAT")
     data[i + 10] ^= 0xFF  # corrupt the final frame's deflate stream
-    _, frames = decode_apng_permissive(bytes(data))
+    frames = permissive(decode_apng, ApngError)(bytes(data), 1 << 30)
     got = list(frames)
     assert 0 < len(got) < 4  # good prefix flowed, task never died
 
@@ -333,7 +333,7 @@ def test_fctl_with_no_frame_data_raises():
     with pytest.raises(ApngError, match="no frame data"):
         list(decode_apng(bytes(out)))
     # PERMISSIVE wrapper: stream ends cleanly at the malformation
-    _, frames = decode_apng_permissive(bytes(out))
+    frames = permissive(decode_apng, ApngError)(bytes(out), 1 << 30)
     assert list(frames) == []
 
 

@@ -23,8 +23,12 @@ from distributed_video_analytics_flink_spark.plans.inspect import (
     formatted_plan,
 )
 from distributed_video_analytics_flink_spark.sources.avi import encode_avi
+from distributed_video_analytics_flink_spark.sources.jpeg import decode_jpeg, encode_jpeg
 from distributed_video_analytics_flink_spark.sources.mp4 import encode_mp4_mjpeg
 from distributed_video_analytics_flink_spark.sources.video_files import (
+    decode_chunk_to_pixels,
+    decode_frames,
+    iter_chunk_rows,
     read_video_chunks,
     read_video_files,
 )
@@ -169,6 +173,32 @@ def test_corrupt_chunk_skipped_keeps_state(spark, tmp_path):
     # produces motion detections after the corrupt frame
     assert 0 < len(out) <= 6
     assert any(r["detection_count"] > 0 for r in out[-2:])
+
+
+@pytest.mark.parametrize("container", ["avi", "mp4"])
+def test_decode_first_equals_demux_plus_shared_chunk_decode(container):
+    """One corrupt JPEG chunk (SOF0 -> SOF2, past the signature) and one
+    chunk whose dims differ from the header: decode-first skips both, and
+    its frames equal the demuxed chunks through the post-shuffle decode —
+    both run the one per-chunk rule (sources/mjpeg.py)."""
+    frames = _motion_frames(5, 48, 64)
+    jpgs = [encode_jpeg(f, quality=90) for f in frames]
+    bad = bytearray(jpgs[1])
+    bad[bad.index(b"\xff\xc0") + 1] = 0xC2
+    jpgs[1] = bytes(bad)
+    jpgs[3] = encode_jpeg(np.zeros((32, 32, 3), np.uint8), quality=90)
+    if container == "avi":
+        raw = encode_avi(frames, codec="mjpeg", pre_encoded=jpgs)
+    else:
+        raw = encode_mp4_mjpeg(frames, pre_encoded=jpgs)
+    decoded = [f.tobytes() for f in decode_frames(raw, 48, 64, 64)]
+    assert decoded == [decode_jpeg(jpgs[i]).tobytes() for i in (0, 2, 4)]
+
+    rows = list(iter_chunk_rows(raw, "cam", 48, 64, 64))
+    assert [r[6] for r in rows] == ["mjpeg"] * 5  # the demux keeps both
+    expect: dict = {}
+    pix = (decode_chunk_to_pixels(expect, cam, *rest) for cam, _ts, *rest in rows)
+    assert [p for p in pix if p is not Ellipsis] == decoded
 
 
 # ---------------------------------------------------------------------------

@@ -15,11 +15,18 @@ added — is held to the same rules:
    formats, ``read_video_files``, ``fixture_frames``) emits
    ``schemas.FRAME_SCHEMA`` rows whose ``data`` is the decoder's raw BGR
    bytes, so the motion plan decodes no base64.
+6. **One bad-file policy per container** — parametrized over the
+   container table (sources/video_files.py::CONTAINERS): each row's
+   fixture sniffs as that row; a corrupt header gives zero frames through
+   ``decode_frames``, ``iter_chunk_rows`` and ``format(kind)`` (MP4: the
+   codec stub, its row's own rule); a truncated tail gives the good
+   prefix on every path, with no exception.
 """
 
 from __future__ import annotations
 
 import re
+import struct
 
 import numpy as np
 import pytest
@@ -32,11 +39,9 @@ from distributed_video_analytics_flink_spark.operators.video import (
 )
 from distributed_video_analytics_flink_spark.plans.inspect import formatted_plan
 from distributed_video_analytics_flink_spark.schemas import FRAME_SCHEMA
-from distributed_video_analytics_flink_spark.sources.apng import (
-    decode_apng_permissive,
-    encode_apng,
-)
-from distributed_video_analytics_flink_spark.sources.avi import decode_avi, encode_avi
+from distributed_video_analytics_flink_spark.functions.png import encode_png_bgr
+from distributed_video_analytics_flink_spark.sources.apng import encode_apng
+from distributed_video_analytics_flink_spark.sources.avi import encode_avi
 from distributed_video_analytics_flink_spark.sources.datasources import (
     FORMATS,
     FilePartition,
@@ -44,14 +49,21 @@ from distributed_video_analytics_flink_spark.sources.datasources import (
     FileStreamReader,
     register_sources,
 )
-from distributed_video_analytics_flink_spark.sources.gif import (
-    decode_gif_permissive,
-    encode_gif,
+from distributed_video_analytics_flink_spark.sources.gif import encode_gif
+from distributed_video_analytics_flink_spark.sources.mp4 import encode_mp4_mjpeg
+from distributed_video_analytics_flink_spark.sources.video_files import (
+    CONTAINERS,
+    _decode_frames_stub,
+    decode_chunk_to_pixels,
+    decode_frames,
+    iter_chunk_rows,
+    permissive,
+    read_video_files,
+    sniff_container,
 )
-from distributed_video_analytics_flink_spark.sources.video_files import read_video_files
 from distributed_video_analytics_flink_spark.sources.warc import build_warc
 from distributed_video_analytics_flink_spark.sources.wav import encode_wav
-from distributed_video_analytics_flink_spark.sources.y4m import decode_y4m, encode_y4m
+from distributed_video_analytics_flink_spark.sources.y4m import encode_y4m
 from tests.test_avi import _bgr_square_frames
 from tests.test_y4m import _square_planes
 
@@ -125,14 +137,7 @@ def test_batch_and_stream_rows_identical(name, tmp_path):
     assert list(stream.read(spart)) == batch
 
 
-# each frame format's container decoder: (data, max_frames) -> (header, BGR frames)
-_DECODERS = {
-    "y4m": decode_y4m,
-    "avi": decode_avi,
-    "gif": decode_gif_permissive,
-    "apng": decode_apng_permissive,
-}
-_FRAME_FORMATS = list(_DECODERS)
+_FRAME_FORMATS = ["y4m", "avi", "gif", "apng"]
 
 
 def _fixture_pixels(cam: int, i: int) -> bytes:
@@ -161,7 +166,7 @@ def test_frame_producers_emit_binary_pixels(spark, tmp_path, producer):
             fname, blob = _fixture(name)
             cam = f"{name}cam"
             (tmp_path / fname.replace("cam0", cam)).write_bytes(blob)
-            _, frames = _DECODERS[name](blob, 64)
+            frames = permissive(CONTAINERS[name].decode, CONTAINERS[name].err)(blob, 64)
             want[cam] = [f.tobytes() for f in frames]
         if producer == "read_video_files":
             # the fixtures' native dims: no resize, so the bytes are the decoder's
@@ -175,3 +180,80 @@ def test_frame_producers_emit_binary_pixels(spark, tmp_path, producer):
         got.setdefault(r["camId"], []).append(bytes(r["data"]))
     assert got == want and all(got.values())
     assert "unbase64" not in formatted_plan(detect_motion_batch(df)).lower()
+
+
+def _moov_first(mp4: bytes) -> bytes:
+    """The same MJPEG MP4 with moov ahead of mdat (stco offsets moved), so
+    cutting the file's tail cuts the last sample, not the sample tables."""
+    ftyp = struct.unpack(">I", mp4[:4])[0]
+    mdat = mp4[ftyp : ftyp + struct.unpack(">I", mp4[ftyp : ftyp + 4])[0]]
+    moov = bytearray(mp4[ftyp + len(mdat) :])
+    at = moov.index(b"stco") + 8
+    for i in range(struct.unpack_from(">I", moov, at)[0]):
+        off = at + 4 + 4 * i
+        struct.pack_into(">I", moov, off, struct.unpack_from(">I", moov, off)[0] + len(moov))
+    return mp4[:ftyp] + bytes(moov) + mdat
+
+
+def _container_fixture(case: str) -> tuple[bytes, bytes]:
+    """(file, header-corrupt copy) for one container-table case: three
+    16x16 frames (a PNG still: one); the corrupt copy keeps the magic
+    bytes and garbles the eight header bytes after them (MP4: the start
+    of moov)."""
+    frames = _bgr_square_frames(16, 16, [0, 4, 8], 6)
+    blob = {
+        "y4m": lambda: encode_y4m([_square_planes(16, 16, x, 6) for x in (0, 4, 8)]),
+        "avi": lambda: encode_avi(frames),
+        "avi-mjpeg": lambda: encode_avi(frames, codec="mjpeg", quality=90),
+        "apng": lambda: encode_apng(frames),
+        "png": lambda: encode_png_bgr(frames[0]),
+        "gif": lambda: encode_gif(frames),
+        "mp4": lambda: _moov_first(encode_mp4_mjpeg(frames, quality=90)),
+    }[case]()
+    at = {"y4m": 10, "apng": 16, "png": 16, "gif": 6}.get(case, 12)
+    if case == "mp4":
+        at = blob.index(b"moov") + 4
+    return blob, blob[:at] + b"\xff" * 8 + blob[at + 8 :]
+
+
+_CONTAINER_CASES = ["y4m", "avi", "avi-mjpeg", "apng", "png", "gif", "mp4"]
+
+
+def _every_path(tmp_path, kind: str, data: bytes) -> dict[str, list[bytes]]:
+    """The file's frame pixels through each ingest path, at native dims:
+    decode-first, the passthrough (chunks decoded as the motion fold
+    does, skips dropped), and ``format(kind)`` where that format exists."""
+    out = {"decode_frames": [f.tobytes() for f in decode_frames(data, 16, 16, 64)]}
+    expect: dict = {}
+    pix = (
+        decode_chunk_to_pixels(expect, cam, *rest)
+        for cam, _ts, *rest in iter_chunk_rows(data, "cam", 16, 16, 64)
+    )
+    out["iter_chunk_rows"] = [p for p in pix if p is not Ellipsis]
+    if kind in FORMATS:
+        path = tmp_path / f"cam.{kind}"
+        path.write_bytes(data)
+        out["format"] = [r[5] for r in FORMATS[kind].rows(str(path), maxframesperfile=64)]
+    return out
+
+
+@pytest.mark.parametrize("case", _CONTAINER_CASES)
+def test_container_table_bad_file_policy(case, tmp_path):
+    assert {c.split("-")[0] for c in _CONTAINER_CASES} == set(CONTAINERS)
+    kind = case.split("-")[0]
+    blob, corrupt = _container_fixture(case)
+    assert sniff_container(blob) == kind == sniff_container(corrupt)
+    clean = _every_path(tmp_path, kind, blob)
+    want = clean["decode_frames"]
+    assert len(want) == (1 if kind == "png" else 3)
+    assert all(got == want for got in clean.values())
+
+    # a corrupt header: zero frames, or the MP4 row's codec stub
+    stub = [f.tobytes() for f in _decode_frames_stub(corrupt, 16, 16, 64)]
+    for name, got in _every_path(tmp_path, kind, corrupt).items():
+        assert got == (stub if kind == "mp4" else []), name
+
+    # a truncated tail: the good prefix (a still has only IEND to lose)
+    for name, got in _every_path(tmp_path, kind, blob[:-20]).items():
+        assert got == want[: len(got)], name
+        assert 0 < len(got) < len(want) or kind == "png", name

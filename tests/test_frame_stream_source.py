@@ -158,8 +158,9 @@ def test_stream_starts_on_empty_dir(spark, tmp_path):
 def test_corrupt_file_yields_zero_rows_not_task_failure(spark, tmp_path):
     """r10 review follow-up: one corrupt file in a directory must not
     fail the whole format('y4m'/'avi') scan — the binaryFile path
-    tolerates it, so the Data Source paths must too (permissive_header
-    in sources/datasources.py). The corrupt file contributes zero rows."""
+    tolerates it, so the Data Source paths must too (the container
+    table's ``permissive`` in sources/video_files.py). The corrupt file
+    contributes zero rows."""
     from distributed_video_analytics_flink_spark.sources.avi import encode_avi
     from distributed_video_analytics_flink_spark.sources.y4m import encode_y4m
     from tests.test_y4m import _square_planes
